@@ -7,21 +7,13 @@ import org.apache.spark.sql.SparkSession
   * plan executes (a bare count() would let Catalyst prune computed
   * columns and under-report map-heavy queries). */
 object Bench {
+  /** The engine's one local session, the same one Verify checks. */
+  private[graft] def session(cpus: Int): SparkSession =
+    graft.core.GraftSession.local(cpus)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        graft.core.GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     // Warm up codegen/session machinery so the first query isn't charged.
     spark.range(1000000).selectExpr("sum(id)").write.format("noop")

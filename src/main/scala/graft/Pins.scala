@@ -31,7 +31,7 @@ object Pins {
   final case class Sub(label: String, plan: String)
 
   private val buf = new ConcurrentLinkedQueue[Sub]()
-  // backstop for unrolled-loop call sites (per-iteration matvec pins):
+  // backstop for loop call sites (per-round CC and Lloyd pins):
   // bounded so a plan dump can never balloon the capture buffer
   private val MaxCaptured = 64
 
@@ -46,6 +46,14 @@ object Pins {
     }
     df.localCheckpoint(true)
   }
+
+  /** Drop a pinned frame's checkpoint blocks once nothing will read it
+    * again (the frame itself becomes unusable). Without this they stay
+    * on the executors until the context cleaner collects the frame. */
+  def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Remove and return everything captured since the last drain. */
   def drain(): Seq[Sub] = {

@@ -4,19 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The engine's one local session: the oracle checks the plans (join
+    * regimes, the CC driver bound) that Bench and the tests run. */
+  private[graft] def session(cpus: Int): SparkSession =
+    graft.core.GraftSession.local(cpus)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        graft.core.GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Execution-memory telemetry for the memory soak (scripts/
     // memory_soak.py): spill and peak-execution-memory totals across

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
 
 /** Deduplication operators (SURVEY §2.4 A2/A3 + U6 north-star ops).
@@ -138,7 +141,21 @@ object Dedup {
     * every row through external `Row` objects once per round). Observed
     * metrics are also aggregated exactly once per successful task, so a
     * task retry cannot inflate the count — `changed == 0` is an exact
-    * convergence test. */
+    * convergence test.
+    *
+    * Regime switch: the rounds above pay a plan, a checkpoint job and an
+    * AQE stage cycle each, which dominates when the pair list is
+    * kilobytes. The edges cut therefore also counts its rows with an
+    * `observe` (no extra job), and when `checkpointDir` is None,
+    * `autoBroadcastJoinThreshold` > 0, the ids are integral and non-null,
+    * and 16 B × edge rows fits that threshold — the bound Spark already
+    * uses for what it collects to the driver for a broadcast — the edges
+    * are collected as primitive long arrays and one min-root union-find
+    * labels them on the driver ([[localClusters]]). The result is a
+    * local relation with the same rows and schema the rounds return;
+    * `maxIter` does not apply to it (union-find always finishes). Pair
+    * lists over the bound, and every run with `checkpointDir` (whose
+    * point is surviving executor loss over hours), take the rounds. */
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
     // Per-round lineage cut. Default `localCheckpoint(eager)` stores the
@@ -172,8 +189,26 @@ object Dedup {
         spark.read.schema(df.schema).parquet(s"$rd/$tag")
       case None => graft.Pins.pin(df, s"nearDupClusters.$tag")
     }
-    val edges = cut(pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst"))), "edges")
+    val directed = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val gated = runDir.isEmpty && threshold > 0 &&
+      LocalIdTypes.contains(directed.schema("src").dataType)
+    val edgeObs = Option.when(gated)(
+      org.apache.spark.sql.Observation("graft-cc-edges"))
+    val edges = cut(edgeObs.fold(directed)(o => directed.observe(o,
+        count(lit(1)).as("rows"),
+        count(when(col("src").isNull || col("dst").isNull, 1)).as("nulls"))),
+      "edges")
+    val small = edgeObs.exists { o =>
+      val m = o.get
+      m("nulls") == 0L && m("rows").asInstanceOf[Long] <= threshold / 16
+    }
+    if (small) {
+      val out = localClusters(edges)
+      graft.Pins.release(edges)
+      return out
+    }
     var labels = cut(edges.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id")), "labels-init")
     var i = 0
@@ -219,6 +254,59 @@ object Dedup {
     // the returned frame reads only its own label files — edges are dead
     rmTag("edges")
     labels
+  }
+
+  /** Id types the driver union-find handles: read as long, written back
+    * in the input's own type. */
+  private val LocalIdTypes: Set[DataType] =
+    Set(LongType, IntegerType, ShortType, ByteType)
+
+  /** Min-root union-find over a pinned, null-free, symmetric edge list
+    * (src, dst) that fits the driver bound. Each edge is read once in
+    * one orientation (src ≤ dst), straight off the internal rows into
+    * one pair of primitive long arrays per partition. Ids are sorted and
+    * deduplicated into a dense index, and a union always hangs the
+    * larger root under the smaller, so every root is its component's
+    * minimum id — the label the rounds converge to. Returns (id,
+    * cluster) in id order with the rounds' schema. */
+  private def localClusters(edges: DataFrame): DataFrame = {
+    val idField = edges.schema("src")
+    val parts = edges.filter(col("src") <= col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd.mapPartitions { it =>
+        val a = Array.newBuilder[Long]
+        val b = Array.newBuilder[Long]
+        it.foreach { r => a += r.getLong(0); b += r.getLong(1) }
+        Iterator((a.result(), b.result()))
+      }.collect()
+    val src = parts.flatMap(_._1)
+    val dst = parts.flatMap(_._2)
+    val all = Array.concat(src, dst)
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.foreach { x => if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 } }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    src.indices.foreach { k =>
+      val x = find(java.util.Arrays.binarySearch(ids, src(k)))
+      val y = find(java.util.Arrays.binarySearch(ids, dst(k)))
+      if (x < y) parent(y) = x else if (y < x) parent(x) = y
+    }
+    val typed: Long => Any = idField.dataType match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => x => x
+    }
+    val rows = ids.indices.map(i => Row(typed(ids(i)), typed(ids(find(i)))))
+    edges.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      idField.copy(name = "id"),
+      idField.copy(name = "cluster", metadata = Metadata.empty))))
   }
 
   /** Incremental connected-components update: fold a NEW batch of

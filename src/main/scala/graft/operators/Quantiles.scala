@@ -48,6 +48,12 @@ import org.apache.spark.sql.functions._
   * so rather than return silently wrong bins the scan raises; filter
   * NaN upstream if NaN-last built-in ordering is wanted. Returns
   * (groupCol, ps: array<double>) with ps in the order requested.
+  *
+  * Eager: the pass-1 stats frame is pinned ([[graft.Pins.pin]]), so the
+  * CALL runs that pass as a Spark job before any result is executed —
+  * even if the result never is — and the pin cuts lineage. A filter the
+  * caller applies to the result (say, on the group column) therefore
+  * cannot push down into the stats pass; filter the input instead.
   */
 object Quantiles {
 

@@ -87,8 +87,8 @@ object Sampling {
     // subtree including its corpus feature explode (column pruning
     // de-canonicalizes the branches, defeating ReuseExchange), making the
     // operator 3 corpus passes where its contract says 2. The frame is ≤
-    // `buckets` rows, the same matrix-sized-checkpoint precedent as
-    // dominantDirection; measured 1.09 → 0.92 s on q102 at sf0.1
+    // `buckets` rows, the same bounded-frame pin as exactPercentiles'
+    // stats; measured 1.09 → 0.92 s on q102 at sf0.1
     // (min-of-5, same window).
     val cnt = graft.Pins.pin(
       feats.groupBy("h").agg(count(lit(1)).as("raw_cnt"),

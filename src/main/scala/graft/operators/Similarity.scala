@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -866,27 +869,33 @@ object Similarity {
     * swallowing the spectrum).
     *
     * Shape: ONE corpus pass builds the dim×dim covariance
-    * ([[covarianceMatrix]] — array-buffer aggregate, no dim² explode);
-    * every later step touches only matrix-sized frames (dim² triples,
-    * dim-row vectors), so corpus scale is irrelevant after the first
-    * pass and `iters` is a plan-size knob, not a data-pass knob. The
-    * matvec is a join+groupBy over the triples — distributed end to end,
-    * nothing is collected.
+    * ([[covarianceMatrix]] — array-buffer aggregate, no dim² explode),
+    * and its dim·(dim+1)/2 upper triangle is collected to the driver.
+    * The matrix is dim²-sized whatever the corpus (as in MLlib's
+    * `RowMatrix.computePrincipalComponents`), so the `iters` matvecs and
+    * normalisations run on the driver: a distributed matvec would pay a
+    * plan, a checkpoint job and an AQE stage cycle per iteration for a
+    * 64-row vector. Corpus scale only touches the one covariance pass.
     *
     * Determinism (the oracle contract): the covariance doubles are
-    * floored onto the 2^20 grid BEFORE iterating, so every matvec sum is
-    * an exact int64 reduction (order-independent — double dot products
-    * would drift with partitioning) and every normalization is integer:
+    * floored onto the 2^20 grid (in the collected plan) BEFORE
+    * iterating, so every matvec is an exact int64 reduction and every
+    * normalisation is integer:
     * v' = sign(w)·(|w| DIV ceil(max|w| / 2^20)), keeping components on
     * the ±2^20 grid. Capacity: |w| ≤ dim·max|c|·2^20 with
     * max|c| ≤ max|cov|·2^20 — ≤ 2^46 for unit-scale embeddings at
     * dim 64, far inside int64 (and [[covarianceMatrix]] already enforces
-    * its own moment bounds in-plan).
+    * its own moment bounds in-plan). The arithmetic fails the way the
+    * ANSI plan it mirrors does: products and sums are overflow-checked
+    * (`Math.multiplyExact`/`addExact`), and an all-zero matvec (max|w|
+    * = 0, e.g. a constant corpus) raises DIVIDE_BY_ZERO instead of
+    * returning NULL components.
     *
     * After `iters` rounds the direction is the power-iteration
     * approximation (convergence is data-dependent; iters=3 resolves a
     * dominant eigenvalue with a clear gap — same fixed-iteration
-    * contract as [[kmeansCentroids]]). Returns one row per dimension:
+    * contract as [[kmeansCentroids]]). Returns a local relation with one
+    * row per dimension, in dim_idx order (none for an empty corpus):
     * (dim_idx, component ±2^20-grid, loading = component/2^20,
     * eig_est — max|w|/2^40, the Rayleigh-style magnitude estimate,
     * constant across rows). */
@@ -896,43 +905,33 @@ object Similarity {
     val tri = covarianceMatrix(emb, dim)
       .select(col("i"), col("j"),
         floor(col("cov") * lit(grid.toDouble)).cast("long").as("c"))
-    // mirror the upper triangle to the full matrix for the matvec, then
-    // CUT LINEAGE: each unrolled iteration references `full` (and, via
-    // the max-norm, the previous w) more than once, so without a
-    // materialization barrier the covariance subtree — and with it the
-    // CORPUS SCAN — replicates ~3^iters times through the plan (84
-    // scans at iters=3, measured). localCheckpoint(true) pins the
-    // dim²-row frame once (KBs — the q113/nearDupClusters iterative
-    // precedent; executor-local blocks are fine for matrix-sized data,
-    // recompute-on-loss is one corpus pass)
-    val full = graft.Pins.pin(
-      tri.union(
-        tri.filter(col("i") =!= col("j"))
-          .select(col("j").as("i"), col("i").as("j"), col("c"))),
-      "dominantDirection.cov")
-    val spark = emb.sparkSession
-    var v = spark.range(dim)
-      .select(col("id").cast("int").as("i"), lit(grid).as("v"))
-    var lastM: DataFrame = null
-    for (_ <- 1 to iters) {
-      // materialize each 64-row matvec result: m and v both re-read w,
-      // and the next iteration re-reads v — unchecked, the per-iteration
-      // subtree doubles
-      val w = graft.Pins.pin(
-        full
-          .join(v.select(col("i").as("j"), col("v").as("vj")), Seq("j"))
-          .groupBy("i").agg(sum(col("c") * col("vj")).as("w")),
-        "dominantDirection.matvec")
-      val m = w.agg(max(abs(col("w"))).as("m"))
-      lastM = m
-      v = w.crossJoin(broadcast(m)).selectExpr("i",
-        s"CAST(CASE WHEN w < 0 THEN -((-w) DIV ((m + ${grid - 1}) DIV $grid)) " +
-          s"ELSE w DIV ((m + ${grid - 1}) DIV $grid) END AS BIGINT) AS v")
+      .collect()
+    val rows = if (tri.isEmpty) Seq.empty[Row] else {
+      val c = Array.ofDim[Long](dim, dim)
+      tri.foreach { r =>
+        val (i, j) = (r.getInt(0), r.getInt(1))
+        c(i)(j) = r.getLong(2)
+        c(j)(i) = r.getLong(2)
+      }
+      var v = Array.fill(dim)(grid)
+      var m = 0L
+      for (_ <- 1 to iters) {
+        val w = c.map(ci => ci.indices.foldLeft(0L)((s, j) =>
+          Math.addExact(s, Math.multiplyExact(ci(j), v(j)))))
+        m = w.map(x => Math.absExact(x)).max
+        if (m == 0L) throw new ArithmeticException("[DIVIDE_BY_ZERO] " +
+          "dominantDirection: the matvec is all zero (zero covariance), " +
+          "so its max-norm normalisation divides by zero")
+        val d = Math.addExact(m, grid - 1) / grid
+        v = w.map(x => if (x < 0) -(Math.negateExact(x) / d) else x / d)
+      }
+      v.indices.map(i => Row(i, v(i), v(i).toDouble / grid.toDouble,
+        m.toDouble / 1.099511627776e12))
     }
-    v.crossJoin(broadcast(lastM))
-      .select(col("i").as("dim_idx"), col("v").as("component"),
-        (col("v").cast("double") / lit(grid.toDouble)).as("loading"),
-        (col("m").cast("double") / lit(1.099511627776e12)).as("eig_est"))
-      .orderBy("dim_idx")
+    emb.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("dim_idx", IntegerType, nullable = false),
+      StructField("component", LongType),
+      StructField("loading", DoubleType),
+      StructField("eig_est", DoubleType))))
   }
 }

@@ -425,8 +425,8 @@ object Text extends QueryModule {
       //   n_moved(s) = clustered rows with rep-split s and doc-split ≠ s
       // n_all is ONE map-side aggregation pipelined into the docs scan;
       // the clustered terms all derive from ONE (rep_split × doc_split)
-      // count over the labels frame (≤ 9 rows; the frame is already
-      // pinned by nearDupClusters). The three delta frames are unioned
+      // count over the labels frame (≤ 9 rows; nearDupClusters already
+      // materialized it, locally or pinned). The three delta frames are unioned
       // and re-aggregated — no join anywhere, where the old plan
       // shuffled every doc_id into a SortMergeJoin. A split row exists
       // in the declared result iff some doc's rep lands in it, i.e. iff

@@ -213,11 +213,12 @@ object Vector extends QueryModule {
     // ---- OR-amplified multi-table LSH ANN (the recall knob) ----
     // q36 with the standard L-table amplification: 2 INDEPENDENT 4-plane
     // sets (global plane indices 0-3 and 4-7 of the same md5 family), a
-    // candidate qualifies on a bucket match in ANY set, pairs dedup
-    // before scoring. Per-set bucket occupancy is unchanged, so verify
-    // cost is ~2× q36 for recall that approaches exact exponentially in
-    // the set count — the production answer when q90's recall eval says
-    // one table is not enough.
+    // candidate qualifies on a bucket match in ANY set, and a pair
+    // colliding in several sets is kept only at its first shared set
+    // (join residual), so it is scored once. Per-set bucket occupancy
+    // is unchanged, so verify cost is ~2× q36 for recall that approaches
+    // exact exponentially in the set count — the production answer when
+    // q90's recall eval says one table is not enough.
     Q("q120_ann_lsh_multiprobe", Some(s"""
       WITH w AS (SELECT p.p, j.j,
         (CAST(CAST(('0x'||substr(md5('plane:'||p.p||':'||j.j),1,15)) AS BIGINT) AS DOUBLE)

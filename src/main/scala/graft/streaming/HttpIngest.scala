@@ -58,6 +58,13 @@ object HttpIngest {
     require(maxBodyBytes >= 1, s"maxBodyBytes must be >= 1, got $maxBodyBytes")
     val dir = Paths.get(spoolDir)
     Files.createDirectories(dir)
+    // The JDK server writes a response's headers and its body as two
+    // socket writes. With Nagle on, the body then waits for the client's
+    // delayed ACK of the headers (~40 ms on Linux) on every request of a
+    // kept-alive connection. The server reads this property once, when
+    // the JVM's first server is created; an explicit setting is kept.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     val hs = HttpServer.create(new InetSocketAddress(port), 0)
     hs.createContext("/ingest", (ex: HttpExchange) => {
       try {

@@ -27,16 +27,16 @@ object Plans {
     "q56_tfidf_top_terms" -> "TF-IDF: corpus tokenized once, df counted from tf's already-distinct (doc, term) rows — no COUNT(DISTINCT) Expand row-multiplication through the first shuffle",
     "q107_embedding_covariance" -> "covariance: per-row triangle products into ONE global array-buffer aggregate (partial + final, no dim-pair explode), single-row posexplode unfurl",
     "q112_staged_incremental_dedup" -> "staged-signature probe: the new batch is the ONLY documents scan (the corpus side reads the bkey-clustered signature table) — the once-per-snapshot staging cost is absent from the per-batch plan",
-    "q113_incremental_clusters" -> "incremental CC: existing labels replayed as star edges + new pairs, one checkpointed pair materialization shared by both consumers — CC input is labels + new pairs, never the pair history",
+    "q113_incremental_clusters" -> "incremental CC: existing labels replayed as star edges + new pairs, one checkpointed pair materialization shared by both consumers — CC input is labels + new pairs, never the pair history; both CC calls fit the driver bound, so each is one edges pin + one collect + union-find, and the plan joins two local relations",
     "q115_span_novelty" -> "span novelty: compiled span hashing map-only, ONE partial-aggregated min per span hash, hash equi-join back — the ExactSubstr-style audit without a suffix array",
     "q119_centroid_drift" -> "centroid drift: two array-buffer centroid aggregates (one per snapshot slice), label-count-sized equi-join, grid-floored integer distance",
     "q52_percentiles" -> "exact percentiles by two-pass selection: bounded (group x bin) histogram aggregate, offset window locates candidate bins, ONLY those bins sort — no per-group value buffer, state bounded at any scale",
-    "q125_ann_corpus_neighbors" -> "corpus-vs-corpus ANN: hinted SortMergeJoin on (set, bucket) — zero BroadcastExchange, LSH-bounded candidates, dedup before score; the query shape a broadcast side cannot run",
+    "q125_ann_corpus_neighbors" -> "corpus-vs-corpus ANN: hinted SortMergeJoin on (set, bucket) — zero BroadcastExchange, LSH-bounded candidates, each pair scored once at its first shared table (join residual); the query shape a broadcast side cannot run",
     "q129_keyword_search" -> "keyword search: exploded tokens filtered to query terms map-side, df counted from tf's already-distinct pairs (no distinct Expand), query-term-sized weight frame broadcast, score partial-agg, global top-10 via TakeOrderedAndProject heaps — no global sort",
     "q130_repeated_run" -> "repeated-run detector: gaps-and-islands windows keyed on doc (parallel across docs, no SinglePartition), run census as one partial-agg count",
     "q68_approx_percentiles" -> "approx percentiles, bounded everywhere: two-pass exact selection + one-pass mergeable sketch scan meeting in a 3-row join — no corpus repartition, no per-group value buffers",
     "q132_cms_heavy_hitters" -> "Count-Min sketch: one-pass fixed-size counter-grid aggregate (elementwise-add partials), one-row sketch broadcast as BroadcastNestedLoopJoin, LEAST-of-array-probes estimation",
-    "q133_principal_direction" -> "power iteration: one covariance array-buffer pass, then matrix-sized join+groupBy matvecs (3 unrolled) with integer normalization — nothing corpus-sized after pass 1",
+    "q133_principal_direction" -> "power iteration: one covariance array-buffer pass collected as the dim·(dim+1)/2 triangle, then 3 overflow-checked integer matvecs with integer normalization on the driver — the plan is the local result",
     "q135_rare_token_scrub" -> "CMS in-pipeline: sketch pass + broadcast one-row probe pass — per-token frequency gate with NO vocabulary-sized count join",
     "q136_classifier_gate" -> "hashed-feature classifier inference: compiled bigram shingles map-side, inline integer bucket weights, per-doc partial-agg SUM, source roll-up — no vocabulary join, no UDF",
     "q80_repetition_filter" -> "Gopher/C4 repetition gates fully row-local: compiled ShingleRepetition + TokenStats structs, zero shuffles before the output sort — replaces a per-corpus-token explode shuffle",

@@ -296,6 +296,63 @@ object EngineProps extends Properties("graft") {
         .as[(Long, Long)].collect().toMap == full
     }
 
+  /** Runs `f` at `autoBroadcastJoinThreshold = -1`, which sends
+    * connected components to the distributed pointer-jumping rounds. */
+  private def withRounds[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** nearDupClusters and updateClusters (old = first half of the pairs,
+    * new = second half) in one regime: each result's schema, its rows,
+    * and whether it came back as a local relation. */
+  private def ccRuns(pairs: List[(Long, Long)]) = {
+    val spk = spark; import spk.implicits._
+    val (oldP, newP) = pairs.splitAt(pairs.size / 2)
+    Seq(Dedup.nearDupClusters(pairs.toDF("a", "b")),
+      Dedup.updateClusters(Dedup.nearDupClusters(oldP.toDF("a", "b")),
+        newP.toDF("a", "b"))
+    ).map(df => (df.schema, df.collect().toSet, df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+  }
+
+  /** Same rows and schema from the driver union-find (default threshold)
+    * and from the distributed rounds, and each regime really ran. */
+  private def regimesAgree(pairs: List[(Long, Long)]): Boolean = {
+    val local = ccRuns(pairs)
+    val rounds = withRounds(ccRuns(pairs))
+    local.map(r => (r._1, r._2)) == rounds.map(r => (r._1, r._2)) &&
+      local.forall(_._3) && !rounds.exists(_._3)
+  }
+
+  private lazy val fixedShapesAgree: Boolean = Seq(
+    Nil,                                            // empty pair list
+    (0L until 63L).map(i => (i, i + 1)).toList,     // 64-node chain
+    (1L to 20L).map(i => (0L, i)).toList,           // star
+    List((1L, 2L), (1L, 2L), (2L, 3L), (2L, 3L), (3L, 1L)) // duplicates
+  ).forall(regimesAgree)
+
+  /** The CC regime switch is invisible in the result: random pair lists
+    * (duplicates and self-pairs included) mixed with chains and stars. */
+  property("nearDupClusters/updateClusters: driver union-find == rounds") =
+    forAll(for {
+      random <- Gen.listOf(for {
+        a <- Gen.choose(0L, 30L)
+        b <- Gen.choose(0L, 30L)
+      } yield (a, b))
+      chainLen <- Gen.choose(0, 40)
+      starLeaves <- Gen.choose(0, 10)
+      dups <- Gen.choose(0, 3)
+      seed <- Gen.long
+    } yield {
+      val chain = (0 until chainLen).map(i => (100L + i, 101L + i)).toList
+      val star = (1 to starLeaves).map(i => (200L, 200L + i)).toList
+      val all = new scala.util.Random(seed).shuffle(random ++ chain ++ star)
+      all ++ all.take(dups)
+    }) { pairs => fixedShapesAgree && regimesAgree(pairs) }
+
   /** The asymmetric segment-banding option must be RECALL-ONLY additive:
     * for any corpus, every pair the default Jaccard-tuned bands surface
     * survives with bit-identical exact scores (verification is shared),

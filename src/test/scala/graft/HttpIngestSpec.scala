@@ -183,4 +183,48 @@ class HttpIngestSpec extends SparkTestBase {
         "orphan temp spool file left behind")
     } finally srv.stop()
   }
+
+  test("kept-alive POSTs are answered without a delayed-ACK stall") {
+    // The server writes a response's headers and body separately; with
+    // Nagle on, the body waits for the client's delayed ACK of the
+    // headers (~40 ms on Linux) on every POST after the first on a
+    // kept-alive connection — 20 POSTs then take 800 ms or more.
+    val spool = java.nio.file.Files.createTempDirectory("graft-ingest-ka").toString
+    val srv = HttpIngest.start(spool)
+    val sock = new java.net.Socket("127.0.0.1", srv.port)
+    try {
+      sock.setSoTimeout(10000)
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      def readLine(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n') {
+          assert(c >= 0, "connection closed mid-response")
+          if (c != '\r') b += c.toChar
+          c = in.read()
+        }
+        b.toString
+      }
+      def postKeptAlive(i: Int): Int = {
+        val body = s"""{"event_id":$i}""".getBytes("UTF-8")
+        out.write((s"POST /ingest HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          s"Content-Length: ${body.length}\r\n\r\n").getBytes("UTF-8") ++ body)
+        out.flush()
+        val status = readLine().split(" ")(1).toInt
+        val headers = Iterator.continually(readLine()).takeWhile(_.nonEmpty)
+          .map(_.split(":", 2)).map(h => h(0).trim.toLowerCase -> h(1).trim).toMap
+        assert(!headers.get("connection").contains("close"))
+        in.readNBytes(headers("content-length").toInt)
+        status
+      }
+      assert(postKeptAlive(0) === 202) // connection and handler warm-up
+      val t0 = System.nanoTime()
+      assert((1 to 20).map(postKeptAlive).forall(_ == 202))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(ms < 500, s"20 kept-alive POSTs took $ms ms")
+      assert(new java.io.File(spool).listFiles()
+        .count(_.getName.startsWith("batch-")) === 21)
+    } finally { sock.close(); srv.stop() }
+  }
 }

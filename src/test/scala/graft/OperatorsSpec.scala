@@ -148,6 +148,45 @@ class OperatorsSpec extends SparkTestBase {
     assert(got.forall(_._2 === 0L))
   }
 
+  test("nearDupClusters regime switch: the 16 B/edge-row bound, id types, nulls") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    def local(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.logical.isInstanceOf[LocalRelation]
+    try {
+      // 3 pairs = 6 edge rows = 96 B: over a 80 B bound, within a 96 B one
+      val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+      val want = Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 7L), (8L, 7L))
+      spark.conf.set(key, "80")
+      val rounds = Dedup.nearDupClusters(pairs)
+      assert(!local(rounds))
+      spark.conf.set(key, "96")
+      val driver = Dedup.nearDupClusters(pairs)
+      assert(local(driver))
+      assert(driver.schema === rounds.schema)
+      assert(driver.as[(Long, Long)].collect().toSet === want)
+      assert(rounds.as[(Long, Long)].collect().toSet === want)
+      spark.conf.set(key, prev)
+      // int ids come back as ints, nullable inputs keep nullable columns
+      val ints = Seq((1, 2), (2, 3)).toDF("a", "b")
+      val opt = Seq((Option(1L), Option(2L))).toDF("a", "b")
+      for (df <- Seq(ints, opt)) {
+        val got = Dedup.nearDupClusters(df)
+        assert(local(got))
+        spark.conf.set(key, "-1")
+        val ref = Dedup.nearDupClusters(df)
+        spark.conf.set(key, prev)
+        assert(got.schema === ref.schema)
+        assert(got.collect().toSet === ref.collect().toSet)
+      }
+      // a NULL id has no place in the union-find: the rounds label it
+      val withNull = Seq((Option(1L), Option(2L)), (Option(3L), None))
+        .toDF("a", "b")
+      assert(!local(Dedup.nearDupClusters(withNull)))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("OR-amplified LSH recall dominates single-table recall vs exact top-k") {
     // multi-set candidates are a superset of set 0 (= lshTopK's planes),
     // and an exact-top-k item outranked by at most k-1 vectors globally
@@ -717,6 +756,48 @@ class OperatorsSpec extends SparkTestBase {
     assert(math.abs(r.head._3 - 0.81) < 0.05)
     // bit-identical under repartitioning (integer matvec sums)
     assert(run(df.repartition(7)) === r)
+  }
+
+  private val dominantDirectionSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("dim_idx", IntegerType, nullable = false),
+      StructField("component", LongType, nullable = true),
+      StructField("loading", DoubleType, nullable = true),
+      StructField("eig_est", DoubleType, nullable = true)))
+  }
+
+  test("dominantDirection keeps the exact grid values of the distributed iteration") {
+    // values the join+groupBy matvec plan produced for this input: the
+    // driver iteration must reproduce them bit for bit
+    val df = Seq((1L, Array(0.1f, 0.2f)), (2L, Array(0.3f, -0.1f)))
+      .toDF("vec_id", "embedding")
+    val got = Similarity.dominantDirection(df, dim = 2, iters = 3)
+      .as[(Int, Long, Double, Double)].collect().toSeq
+    assert(got.map(r => (r._1, r._2)) === Seq((0, -699052L), (1, 1048568L)))
+    assert(got.map(_._3) === got.map(_._2 / 1048576.0))
+    assert(got.forall(_._4 == 0.032499074150109664))
+  }
+
+  test("dominantDirection on an empty corpus: no rows, the declared schema") {
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val out = Similarity.dominantDirection(empty, dim = 4, iters = 3)
+    assert(out.schema === dominantDirectionSchema)
+    assert(out.collect().isEmpty)
+  }
+
+  test("dominantDirection on an all-zero covariance fails like ANSI DIV by zero") {
+    // identical vectors on exact binary fractions: every covariance cell
+    // floors to exactly 0, so the first matvec's max-norm is 0 and the
+    // integer normalisation divides by zero — a loud failure, not NULLs
+    val df = (0 until 8).map(k => (k.toLong, Array(0.5f, -0.25f, 0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    for (iters <- Seq(1, 3)) {
+      val e = intercept[ArithmeticException] {
+        Similarity.dominantDirection(df, dim = 4, iters = iters).collect()
+      }
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+    }
   }
 
   test("systematicPps: one pick per step-block, heavy rows always kept, partition-stable") {

@@ -584,17 +584,17 @@ class ScaleSpec extends SparkTestBase {
   }
 
   test("dominantDirection's final plan reads checkpoints, not the corpus (lineage cut)") {
-    // each unrolled power iteration references the cov frame and the
-    // previous matvec more than once; without the localCheckpoint cuts
-    // the covariance subtree (and its corpus scan) replicates ~3^iters
-    // times through the plan — 84 parquet scans measured at iters=3.
-    // The materialized frames pin the corpus cost to exactly one pass.
+    // the corpus is read once, by the collected covariance pass; the
+    // power iteration runs on the driver over the dim² matrix, so the
+    // returned frame is the local result and nothing else — an unrolled
+    // distributed iteration replicated the covariance subtree (and its
+    // corpus scan) ~3^iters times through the plan without its cuts
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val out = graft.operators.Similarity.dominantDirection(emb, dim = 64, iters = 3)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Scan parquet"),
       s"corpus scan leaked into the iteration plan:\n${plan.take(2000)}")
-    assert(plan.contains("Scan ExistingRDD"),
-      s"expected checkpointed frames in the final plan:\n${plan.take(2000)}")
+    assert(plan.trim.startsWith("LocalTableScan") && plan.trim.linesIterator.size == 1,
+      s"expected only the local result in the final plan:\n${plan.take(2000)}")
   }
 }
