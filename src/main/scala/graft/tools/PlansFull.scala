@@ -2,7 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Final-AQE plan corpus for the COMPLETE query inventory (VERDICT r10
   * item 5): PLANS.md covers the headline tail with annotated initial
@@ -11,10 +12,14 @@ import org.apache.spark.sql.SparkSession
   * lost pushed filter, a broadcast that became a shuffle) is a reviewable
   * DIFF instead of a re-derivation.
   *
-  * Each query EXECUTES through the noop sink first — only then does
-  * `AdaptiveSparkPlan` report `isFinalPlan=true` with the runtime-chosen
-  * strategies, which is the plan that actually ran (the r10 DPP lesson:
-  * pre-execution plans can carry expressions that silently degrade).
+  * Each query's own QueryExecution EXECUTES first (every partition,
+  * rows discarded, like the noop sink) and that same QueryExecution is
+  * explained — only then does `AdaptiveSparkPlan` report
+  * `isFinalPlan=true` with the runtime-chosen strategies, which is the
+  * plan that actually ran (the r10 DPP lesson: pre-execution plans can
+  * carry expressions that silently degrade). Explaining `df` after a
+  * separate `df.write` would dump a plan that never ran: the write
+  * plans and executes a QueryExecution of its own.
   *
   * Run-varying tokens are scrubbed so reruns diff clean:
   * expression/plan ids (#123, plan_id=456), temp staging dirs, and result
@@ -34,10 +39,24 @@ object PlansFull {
     // in its distinct-Expand branch ORDER (seed-keyed) — the one known
     // cosmetic residual a reviewer should ignore when diffing
     .replaceAll("uuid\\(Some\\(-?\\d+\\)\\)", "uuid(Some(X))")
+    // higher-order-function lambda variables are named from a JVM-wide
+    // counter (x_27, acc_31), so every lambda built by an earlier query
+    // renumbers the ones after it
+    .replaceAll("(lambda \\w+?)_\\d+", "$1_X")
     // temp staging roots (IVF indexes, signature stores, spools) get a
     // fresh random dir per run
     .replaceAll("/tmp/[-\\w.]+", "TMPDIR")
     .replaceAll("target/[-\\w./]*tmp[-\\w./]*", "TMPDIR")
+
+  /** Run `df`'s QueryExecution to completion and explain it — the
+    * final adaptive plan, as it ran. */
+  private[graft] def executedPlan(df: DataFrame): String = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("plans-full")) {
+      qe.toRdd.foreach(_ => ())
+    }
+    qe.explainString(FormattedMode)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -61,7 +80,7 @@ object PlansFull {
     val sb = new StringBuilder
     sb.append("# PLANS_full — final AQE plans, complete inventory ")
     sb.append("(generated by graft.tools.PlansFull)\n\n")
-    sb.append(s"Corpus: `$sfDir`. Every query executed through the noop sink; the\n")
+    sb.append(s"Corpus: `$sfDir`. Every query executed (rows discarded); the\n")
     sb.append("dumped tree is the FINAL adaptive plan (isFinalPlan=true) — the one\n")
     sb.append("that ran, runtime strategy choices included. Expression ids and temp\n")
     sb.append("paths are scrubbed so two rounds' dumps diff cleanly.\n")
@@ -69,10 +88,7 @@ object PlansFull {
     var failed = List.empty[String]
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = executedPlan(fn(spark, sfDir))
         sb.append(s"\n## $name\n\n```\n${scrub(plan)}```\n")
         val pins = graft.Pins.drain()
         if (pins.nonEmpty) {
