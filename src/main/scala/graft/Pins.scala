@@ -31,7 +31,7 @@ object Pins {
   final case class Sub(label: String, plan: String)
 
   private val buf = new ConcurrentLinkedQueue[Sub]()
-  // backstop for loop call sites (per-round CC and Lloyd pins):
+  // backstop for loop call sites (the per-round CC pins):
   // bounded so a plan dump can never balloon the capture buffer
   private val MaxCaptured = 64
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.{call_function, lit}
-import graft.functions.expressions.{FixedPointDot, FixedPointVectorSum, HammingDistance, HashedSet, Md5Hash60, MinHashSlots, MinHashSlotsFromHashes, NgramShingles, RollingFingerprint, ShingleRepetition, SimHashBits, TokenStats}
+import graft.functions.expressions.{CentroidTable, Centroids, FixedPointDot, FixedPointVectorSum, HammingDistance, HashedSet, Md5Hash60, MinHashSlots, MinHashSlotsFromHashes, NearestCell, NgramShingles, RollingFingerprint, ShingleRepetition, SimHashBits, TokenStats}
 
 /** Engine function registry: exposes custom Catalyst expressions to both
   * the SQL surface (`SELECT graft_hamming(a, b)`) and the Column API
@@ -73,9 +73,7 @@ object GraftFunctions {
         foldedString(e(3)).split('\u001F').toSeq.filter(_.nonEmpty))),
     "graft_rolling_fp" -> checked("graft_rolling_fp", 1)(e => RollingFingerprint(e(0))),
     "graft_shingle_rep" -> checked("graft_shingle_rep", 2)(e =>
-      ShingleRepetition(e(0), foldedInt(e(1)))),
-    "graft_argmin_long" -> checked("graft_argmin_long", 2)(e =>
-      expressions.ArgMinLongByDouble(e(0), e(1))))
+      ShingleRepetition(e(0), foldedInt(e(1)))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -169,9 +167,16 @@ object GraftFunctions {
   def shingleRep(text: Column, n: Int): Column =
     call_function("graft_shingle_rep", text, lit(n))
 
-  /** Hash-aggregable `min_by(value, struct(ord, value))` for a double
-    * ordering and long value — flat primitive buffer, so the argmin
-    * aggregates on the HashAggregate path (see ArgMinLongByDouble). */
-  def argminLong(ord: Column, value: Column): Column =
-    call_function("graft_argmin_long", ord, value)
+  /** Nearest-centroid cell of each row's (embedding, n2) over a
+    * broadcast centroid table (see NearestCell). Column API only: the
+    * table is built on the driver, so there is no SQL form. */
+  def nearestCell(embedding: Column, n2: Column, centroids: Centroids): Column = {
+    import org.apache.spark.sql.classic.ColumnConversions.expression
+    org.apache.spark.sql.graft.ExpressionColumns.column(
+      NearestCell(expression(embedding), expression(n2), centroids))
+  }
+
+  /** Broadcast a driver-built centroid table for [[nearestCell]]. */
+  def broadcastCentroids(spark: SparkSession, t: CentroidTable): Centroids =
+    Centroids(spark.sparkContext.broadcast(t), t.size, t.dim)
 }

@@ -234,8 +234,9 @@ object Dedup {
           .otherwise(0L)).as("changed"))
         .select(col("id"), col("cluster")), s"labels-$i")
       // this round is fully materialized now — the previous round's
-      // label files can never be read again; reclaim them immediately
+      // labels can never be read again; reclaim them immediately
       rmTag(if (i == 0) "labels-init" else s"labels-${i - 1}")
+      graft.Pins.release(labels)
       // the eager cut already ran the job, so get() returns
       // immediately; sum over zero rows is NULL → treat as converged.
       // A MISSING key must fail loudly: Option.forall(None) is true, so
@@ -251,8 +252,9 @@ object Dedup {
     require(converged,
       s"nearDupClusters did not converge in $maxIter rounds — component " +
         "structure deeper than 2^maxIter; raise maxIter")
-    // the returned frame reads only its own label files — edges are dead
+    // the returned frame reads only its own labels — edges are dead
     rmTag("edges")
+    graft.Pins.release(edges)
     labels
   }
 

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.GraftFunctions
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.CentroidTable
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -271,8 +273,8 @@ object Similarity {
 
   /** IVF-style ANN top-k (the inverted-file scale path next to
     * [[lshTopK]]): a coarse quantizer of `kCentroids` centroids, every
-    * corpus vector assigned to its nearest centroid (one broadcast pass +
-    * partially-aggregated argmin — no sort, no all-pairs), queries probe
+    * corpus vector assigned to its nearest centroid (one map-side pass
+    * against a broadcast centroid table — no join, no aggregate), queries probe
     * their `nprobe` nearest cells and verify with exact fixed-point
     * cosine. Centroids are a deterministic corpus sample (the vectors
     * with `vec_id < kCentroids`) — FAISS-style IVF also trains its
@@ -282,8 +284,8 @@ object Similarity {
     *
     * Unlike LSH buckets, each corpus vector lives in exactly one cell, so
     * (qid, vid) candidates are unique without a distinct. At scale:
-    * assignment is corpus × k dot products, map-side only, followed by a
-    * narrow (vec_id, cell) shuffle; probe cost per query is
+    * assignment is corpus × k dot products, map-side only, with no
+    * shuffle; probe cost per query is
     * nprobe · n / kCentroids — grow kCentroids ~ √n to balance the two.
     * Returns (qid, vid, cell, cosine, rank). */
   def ivfTopK(emb: DataFrame, queryPred: Column, kCentroids: Int, nprobe: Int,
@@ -295,36 +297,47 @@ object Similarity {
     ivfSearch(e, cents, queryPred, nprobe, k)
   }
 
+  /** A quantizer frame `cents` (cid, c_emb, c_n2) — k rows — collected
+    * into a driver-held centroid table. Rows with a NULL cid name no
+    * cell and are dropped. */
+  private[graft] def collectCentroids(cents: DataFrame): CentroidTable =
+    CentroidTable(cents
+      .select(col("cid").cast("long"), col("c_emb").cast("array<double>"),
+        col("c_n2").cast("double"))
+      .filter(col("cid").isNotNull)
+      .collect().toSeq.map { r =>
+        (r.getLong(0),
+          if (r.isNullAt(1)) null
+          else r.getSeq[Any](1).map(_.asInstanceOf[java.lang.Double]).toArray,
+          if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)))
+      })
+
+  /** Nearest-centroid assignment, the ONE definition shared by IVF
+    * search, k-means training, semantic dedup and IVF staging: `e`
+    * (needs vec_id, embedding, n2) plus `cell`, the cid of the nearest
+    * centroid by squared L2 from exact fixed-point parts (n2v + n2c −
+    * 2·dot — the same few IEEE ops in both engines) with the (dist, cid)
+    * tie-break mirroring the oracle's ROW_NUMBER ordering ⇒ bit-identical
+    * cells everywhere.
+    *
+    * A projection: the k centroids reach the executors as one broadcast
+    * table and [[graft.functions.expressions.NearestCell]] scores each row
+    * against all of them in one codegen'd call — no corpus × k rows, no
+    * argmin aggregate, no shuffle, and the row keeps its embedding, so
+    * no consumer joins back to the corpus. Each row is assigned on its
+    * own (vec_id is the embeddings key). With no centroids nothing is
+    * assigned, as a cross join with an empty quantizer gives. */
+  private[graft] def assignCells(e: DataFrame, cents: CentroidTable): DataFrame =
+    if (cents.size == 0) e.filter(lit(false)).withColumn("cell", lit(null).cast("long"))
+    else e.withColumn("cell", GraftFunctions.nearestCell(col("embedding"), col("n2"),
+      GraftFunctions.broadcastCentroids(e.sparkSession, cents)))
+
   /** IVF search against a given quantizer frame `cents` (cid, c_emb,
     * c_n2) — shared by the sampled ([[ivfTopK]]) and trained
     * ([[ivfTrainedTopK]]) quantizers. */
-  /** Nearest-centroid assignment, the ONE definition shared by IVF
-    * search, k-means training and semantic dedup: squared L2 from exact
-    * fixed-point parts (n2v + n2c − 2·dot — the same few IEEE ops in both
-    * engines) with the (dist, cid) tie-break mirroring the oracle's
-    * ROW_NUMBER ordering ⇒ bit-identical cells everywhere. `e` needs
-    * (vec_id, embedding, n2), `cents` needs (cid, c_emb, c_n2); returns
-    * (vec_id, cell). One broadcast pass + a partial-agg argmin.
-    *
-    * The argmin is [[graft.functions.GraftFunctions.argminLong]] — the
-    * flat-buffer twin of `min_by(cid, struct(dist, cid))` (identical
-    * ordering incl. the cid tie-break on exact double equality;
-    * ArgMinParitySpec pins bit-equality). The struct-ordering buffer
-    * forced the corpus × k assignment onto the SortAggregate path — two
-    * full sorts of corpus × k rows per assignment pass; the flat
-    * (double, long) buffer hash-aggregates, no sorts at all (r16,
-    * guide §5 hash vs sort aggregate). */
-  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("dist",
-        col("n2") + col("c_n2") - lit(2.0) * dotExact(col("embedding"), col("c_emb")))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.GraftFunctions.argminLong(col("dist"), col("cid"))
-        .as("cell"))
-
   private def ivfSearch(e: DataFrame, cents: DataFrame, queryPred: Column,
       nprobe: Int, k: Int): DataFrame = {
-    val assign = assignCells(e, cents)
+    val assign = assignCells(e, collectCentroids(cents))
     val q = e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
         col("n2").as("q_n2"))
@@ -334,12 +347,12 @@ object Similarity {
         col("q_n2") + col("c_n2") - lit(2.0) * dotExact(col("q_emb"), col("c_emb")))
       .withColumn("pr", row_number().over(wp)).filter(col("pr") <= nprobe)
       .select(col("qid"), col("q_emb"), col("q_n2"), col("cid").as("cell"))
-    val ev = e.select(col("vec_id"), col("embedding").as("v_emb"), col("n2").as("v_n2"))
     val wr = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("vec_id"))
-    probes.join(assign, Seq("cell")).filter(col("vec_id") =!= col("qid"))
-      .join(ev, Seq("vec_id"))
+    probes.join(assign.select(col("cell"), col("vec_id"), col("embedding"), col("n2")),
+        Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
       .withColumn("cosine",
-        cosineFrom(dotExact(col("q_emb"), col("v_emb")), col("q_n2"), col("v_n2")))
+        cosineFrom(dotExact(col("q_emb"), col("embedding")), col("q_n2"), col("n2")))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= k)
       .select(col("qid"), col("vec_id").as("vid"), col("cell"), col("cosine"),
@@ -355,11 +368,13 @@ object Similarity {
     * DuckDB), so trained centroids are bit-identical in both engines.
     * Cells that lose all members keep their previous centroid.
     *
-    * Scale: one broadcast of k centroids + one corpus pass per iteration
-    * (assignment is map-side; the mean is a partial-agg on an array
-    * buffer — no dimension explode). `localCheckpoint` per iteration
-    * keeps the plan flat (iteration control on the driver, data never
-    * leaves the cluster — same pattern as Dedup.nearDupClusters).
+    * Scale: the k centroids live on the DRIVER between iterations. Each
+    * iteration is one job over the training slice — the map-side
+    * nearest-centroid kernel ([[assignCells]]) feeding a partial-agg
+    * `groupBy(cell)` on an array buffer (no dimension explode) — whose
+    * ≤ k (sum, count) rows are collected; the means are the same two
+    * IEEE divisions, taken on the driver. No corpus-sized state crosses
+    * iterations, so there is no join, pin or lineage to cut.
     *
     * `trainPred` restricts the TRAINING passes (assignment + means) to a
     * slice of the corpus — the 100 TB shape: a coarse quantizer needs a
@@ -370,33 +385,39 @@ object Similarity {
     * IVF on a sample for the same reason). Seeds stay the global
     * deterministic `vec_id < kCentroids` sample either way. `None`
     * trains on everything (the pre-round-6 behavior).
-    * Returns (cid, c_emb: array<double>). */
+    * Returns (cid, c_emb: array<double>) as a local relation. */
   def kmeansCentroids(emb: DataFrame, kCentroids: Int, iters: Int,
       trainPred: Option[Column] = None): DataFrame = {
     val e = withNorm2(emb)
     val tr = trainPred.map(e.filter).getOrElse(e)
     // initial quantizer = the deterministic sample, as array<double>
-    var cents = e.filter(col("vec_id") < kCentroids)
+    val init = e.filter(col("vec_id") < kCentroids)
       .select(col("vec_id").as("cid"),
         col("embedding").cast("array<double>").as("c_emb"))
-    for (_ <- 1 to iters) {
-      val assign = assignCells(tr,
-        cents.withColumn("c_n2", norm2Exact(col("c_emb"))))
-      val means = tr
-        .select(col("vec_id"), col("embedding").as("emb"))
-        .join(assign, "vec_id")
-        .groupBy(col("cell"))
-        .agg(graft.functions.GraftFunctions.fpVecSum(col("emb")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("cell").as("cid"),
-          transform(col("s"),
-            v => (v.cast("double") / lit(1099511627776.0)) / col("n")).as("m_emb"))
-      cents = graft.Pins.pin(
-        cents.join(means, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("m_emb"), col("c_emb")).as("c_emb")),
-        "trainCentroids.lloydIter")
+    val cid = init.schema("cid")
+    // (cid in the id's own type, cid as long, c_emb with NULLs boxed)
+    var cents = init.collect().toSeq.map { r =>
+      (r.get(0), r.getAs[Number](0).longValue,
+        if (r.isNullAt(1)) null
+        else r.getSeq[Any](1).map(_.asInstanceOf[java.lang.Double]).toArray)
     }
-    cents
+    for (_ <- 1 to iters) {
+      val table = CentroidTable(cents.map { case (_, id, c) =>
+        (id, c, CentroidTable.norm2(c)) })
+      val means = assignCells(tr, table)
+        .groupBy(col("cell"))
+        .agg(GraftFunctions.fpVecSum(col("embedding")).as("s"),
+          count(lit(1)).as("n"))
+        .collect().map { r =>
+          val n = r.getLong(2).toDouble
+          r.getLong(0) -> r.getSeq[Long](1).map(s =>
+            java.lang.Double.valueOf((s.toDouble / 1099511627776.0) / n)).toArray
+        }.toMap
+      cents = cents.map { case (c, id, v) => (c, id, means.getOrElse(id, v)) }
+    }
+    emb.sparkSession.createDataFrame(
+      cents.map { case (c, _, v) => Row(c, Option(v).map(_.toSeq).orNull) }.asJava,
+      StructType(Seq(cid, StructField("c_emb", ArrayType(DoubleType)))))
   }
 
   /** [[ivfTopK]] with a TRAINED coarse quantizer ([[kmeansCentroids]])
@@ -447,25 +468,20 @@ object Similarity {
       val cents = kmeansCentroids(emb, kCentroids, iters, trainPred)
         .withColumn("c_n2", norm2Exact(col("c_emb")))
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
-      // Every later consumer reads the JUST-WRITTEN parquet, not the
-      // `cents` frame: the frame's lineage is the full iterative kmeans
-      // (corpus scans + `iters` join/agg rounds), and each additional
-      // consumer would re-execute all of it (ADVICE r13 — the dim probe
-      // alone re-ran the training). The staged table is k rows.
-      val centsStaged = emb.sparkSession.read.parquet(s"$tmp/centroids")
+      // `cents` is a local relation (k rows held on the driver), so
+      // collecting it again for the assignment costs no job
+      val table = collectCentroids(cents)
       // The embedding dimension is a property of the INDEX — persist it
-      // at stage time (one tiny job over the k-row staged table) so
-      // every probe batch afterwards reads it from a sidecar instead of
-      // re-running a take(1) job against the centroid table (VERDICT
-      // r12 item 7). Empty/null-vector snapshots simply omit the
-      // sidecar; the probe's broadcast gate then falls back to no-hint.
-      val dimRow = centsStaged.select(size(col("c_emb"))).take(1).headOption
-      dimRow.filterNot(_.isNullAt(0)).foreach { d =>
+      // at stage time so every probe batch afterwards reads it from a
+      // sidecar instead of re-running a take(1) job against the
+      // centroid table (VERDICT r12 item 7). Empty/null-vector snapshots
+      // simply omit the sidecar; the probe's broadcast gate then falls
+      // back to no-hint.
+      table.embs.find(_ != null).foreach { c =>
         graft.sources.Layout.writeSidecar(emb.sparkSession,
-          s"$tmp/centroids", "_graft_dim", d.getInt(0).toString)
+          s"$tmp/centroids", "_graft_dim", c.length.toString)
       }
-      val assign = assignCells(e, centsStaged)
-      val asg = e.join(assign, "vec_id")
+      val asg = assignCells(e, table)
         .select(col("cell"), col("vec_id"), col("embedding"), col("n2"))
       asg.repartition(col("cell"), pmod(hash(col("vec_id")), lit(splits)))
         .write.partitionBy("cell").parquet(s"$tmp/assignment")
@@ -509,10 +525,8 @@ object Similarity {
     // three lifecycle ops of one index serialize — rationale at
     // Layout.withTableWriteLock
     graft.sources.Layout.withTableWriteLock(spark, path) {
-      val cents = spark.read.parquet(s"$path/centroids")
-      val e = withNorm2(newEmb)
-      val assign = assignCells(e, cents)
-      e.join(assign, "vec_id")
+      val cents = collectCentroids(spark.read.parquet(s"$path/centroids"))
+      assignCells(withNorm2(newEmb), cents)
         .select(col("cell"), col("vec_id"), col("embedding"), col("n2"))
         .repartition(col("cell"), pmod(hash(col("vec_id")), lit(splits)))
         .write.mode("append").partitionBy("cell").parquet(s"$path/assignment")
@@ -700,15 +714,13 @@ object Similarity {
     val trainPred = targetCell.map { _ =>
       col("vec_id") < lit(math.max(32L * kUsed, 20480L))
     }
-    val e = withNorm2(emb)
-    // NOT pinned, twice decided: assign feeds three consumers, but a
-    // localCheckpoint here measured neutral-to-negative at sf0.1 (r15)
-    // AND at sf1 with 20k vectors × k=128 (r16 alternating pairs: q97
-    // revert wins 3/3 by ~0.1 s, q82 within noise) — the hash-agged
-    // argmin re-derivation is cheaper than the checkpoint job.
-    val assign = assignCells(e, kmeansCentroids(emb, kUsed, iters, trainPred)
-      .withColumn("c_n2", norm2Exact(col("c_emb"))))
-    val ev = e.join(assign, "vec_id")
+    // NOT pinned: ev feeds three consumers, but its assignment is a
+    // map-side projection (k dots per row), cheaper to re-derive than a
+    // checkpoint job — a pin of the older aggregate form already
+    // measured neutral-to-negative at sf0.1 (r15) and sf1 (r16).
+    val ev = assignCells(withNorm2(emb), collectCentroids(
+        kmeansCentroids(emb, kUsed, iters, trainPred)
+          .withColumn("c_n2", norm2Exact(col("c_emb")))))
       .select(col("vec_id"), col("cell"), col("embedding"), col("n2"))
     val a = ev.select(col("cell"), col("vec_id").as("a"),
       col("embedding").as("emb_a"), col("n2").as("n2_a"))
@@ -719,7 +731,7 @@ object Similarity {
         cosineFrom(dotExact(col("emb_a"), col("emb_b")), col("n2_a"), col("n2_b")))
       .filter(col("cosine") >= threshold)
       .groupBy(col("b")).agg(min(col("a")).as("dup_of"))
-    assign.join(drops, col("vec_id") === col("b"), "left")
+    ev.join(drops, col("vec_id") === col("b"), "left")
       .select(col("vec_id"), col("cell"), col("dup_of"),
         col("dup_of").isNull.as("kept"))
   }

@@ -14,10 +14,10 @@ object Plans {
     "q23_asof_join" -> "as-of join via union-and-carry: one exchange, running last_value per key",
     "q31_lsh_near_dup" -> "MinHash+LSH single-pass: one agg computes signatures + re-collected shingle sets, band self-join carries payloads, exact verify with no further joins",
     "q41_simhash_near_dup" -> "60-bit SimHash: 3x20-bit pigeonhole chunk join (2^20 buckets/band), codegen HammingDistance verify",
-    "q69_ann_ivf_topk" -> "IVF ANN: broadcast coarse quantizer, argmin cell assignment via partial min_by, nprobe cell-join probe, exact cosine verify",
+    "q69_ann_ivf_topk" -> "IVF ANN: coarse quantizer collected and broadcast as one table, map-side nearest-centroid cell assignment (graft_nearest_cell), nprobe cell-join probe, exact cosine verify",
     "q35_cosine_topk" -> "brute-force ANN baseline: tiny query set broadcast against the corpus scan",
     "q38_tumbling_window" -> "event-time tumbling window aggregation (same plan shape streaming uses)",
-    "q82_semantic_dedup" -> "SemDeDup: trained-quantizer cell assignment (broadcast + partial min_by), cell-scoped pair join, keep-one verdict as partial-agg min",
+    "q82_semantic_dedup" -> "SemDeDup: driver-held Lloyd quantizer, map-side nearest-centroid cell assignment (graft_nearest_cell), cell-scoped pair join, keep-one verdict as partial-agg min",
     "q85_incremental_dedup" -> "cross-batch dedup: old/new banded signatures joined within buckets only, per-new-doc verdict aggregation — no global self-join",
     "q88_bloom_prefilter" -> "Bloom pre-filter: one-pass bitmap aggregate, one-row sketch broadcast (BroadcastNestedLoopJoin), compiled md5 probe — the batch side never shuffles",
     "q90_ann_recall" -> "ANN recall eval: ONE scored pair frame (single corpus scan + query broadcast), ranked twice — global exact rank and in-bucket ANN rank — then one grouped overlap count",
@@ -32,6 +32,7 @@ object Plans {
     "q119_centroid_drift" -> "centroid drift: two array-buffer centroid aggregates (one per snapshot slice), label-count-sized equi-join, grid-floored integer distance",
     "q52_percentiles" -> "exact percentiles by two-pass selection: bounded (group x bin) histogram aggregate, offset window locates candidate bins, ONLY those bins sort — no per-group value buffer, state bounded at any scale",
     "q125_ann_corpus_neighbors" -> "corpus-vs-corpus ANN: hinted SortMergeJoin on (set, bucket) — zero BroadcastExchange, LSH-bounded candidates, each pair scored once at its first shared table (join residual); the query shape a broadcast side cannot run",
+    "q128_ann_ivf_sampled" -> "sample-trained IVF: Lloyd centroids held on the driver (one collected <=k-row cell aggregate per iteration, no pin), corpus assignment as a map-side graft_nearest_cell projection, the query x centroid probe ranking the only nested-loop join",
     "q129_keyword_search" -> "keyword search: exploded tokens filtered to query terms map-side, df counted from tf's already-distinct pairs (no distinct Expand), query-term-sized weight frame broadcast, score partial-agg, global top-10 via TakeOrderedAndProject heaps — no global sort",
     "q130_repeated_run" -> "repeated-run detector: gaps-and-islands windows keyed on doc (parallel across docs, no SinglePartition), run census as one partial-agg count",
     "q68_approx_percentiles" -> "approx percentiles, bounded everywhere: two-pass exact selection + one-pass mergeable sketch scan meeting in a 3-row join — no corpus repartition, no per-group value buffers",

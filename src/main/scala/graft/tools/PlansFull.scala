@@ -94,9 +94,9 @@ object PlansFull {
         if (pins.nonEmpty) {
           // a `Scan ExistingRDD` above is one of these checkpointed
           // subtrees — their scans/exchanges count toward the query's
-          // real I/O. Loop sites (matvec/Lloyd/CC rounds) emit one
-          // entry per iteration; post-first-cut iterations read the
-          // previous pin, so their subplans are scan-free by design.
+          // real I/O. The one loop site (the CC rounds) emits one entry
+          // per round; post-first-cut rounds read the previous pin, so
+          // their subplans are scan-free by design.
           sb.append(s"\n### $name — pinned (localCheckpoint) subtrees\n")
           pins.foreach { p =>
             sb.append(s"\n**pin: ${p.label}** (pre-checkpoint plan; " +

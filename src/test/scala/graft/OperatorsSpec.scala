@@ -187,6 +187,32 @@ class OperatorsSpec extends SparkTestBase {
     } finally spark.conf.set(key, prev)
   }
 
+  test("nearDupClusters rounds release every pin the result no longer reads") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    def cachedRdds(): Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet
+    try {
+      spark.conf.set(key, "-1") // force the distributed rounds
+      // a 40-node chain needs several pointer-jumping rounds
+      val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+      val before = cachedRdds()
+      val labels = Dedup.nearDupClusters(pairs)
+      val kept = labels.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+      assert(kept.size === 1)
+      // edges, labels-init and every superseded round are unpersisted
+      // (asynchronously); only the returned labels stay pinned
+      eventually(timeout(Span(20, Seconds))) {
+        assert(cachedRdds() -- before === kept)
+      }
+      assert(labels.select("cluster").distinct().count() === 1)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("OR-amplified LSH recall dominates single-table recall vs exact top-k") {
     // multi-set candidates are a superset of set 0 (= lshTopK's planes),
     // and an exact-top-k item outranked by at most k-1 vectors globally
@@ -538,6 +564,25 @@ class OperatorsSpec extends SparkTestBase {
     val c2 = Similarity.kmeansCentroids(lop, kCentroids = 2, iters = 2)
       .orderBy("cid").as[(Long, Seq[Double])].collect()
     assert(c2.length === 2 && c2.forall(_._2.forall(v => !v.isNaN)))
+  }
+
+  test("kmeansCentroids holds centroids on the driver: no pins, a local relation") {
+    val rnd = new scala.util.Random(3)
+    val df = (0 until 120).map(i => (i.toLong, Array.fill(4)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    val prev = System.getProperty("graft.capturePinPlans")
+    System.setProperty("graft.capturePinPlans", "true")
+    try {
+      graft.Pins.drain()
+      val c = Similarity.kmeansCentroids(df, kCentroids = 4, iters = 3)
+      assert(graft.Pins.drain().isEmpty, "Lloyd iterations pinned a frame")
+      assert(c.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(c.count() === 4)
+    } finally {
+      if (prev == null) System.clearProperty("graft.capturePinPlans")
+      else System.setProperty("graft.capturePinPlans", prev)
+    }
   }
 
   test("semanticDedup drops within-cluster near-identicals, keeps lowest id") {

@@ -162,13 +162,12 @@ class ScaleSpec extends SparkTestBase {
     val d = "/root/testdata/sf0.001"
     val df = SparkEntry.queries("q82_semantic_dedup")(spark, d)
     val plan = df.queryExecution.executedPlan.toString
-    // the centroid broadcasts are the ONLY nested-loop joins (k rows
-    // each): one per Lloyd iteration, one for final assignment — whose
-    // subtree appears twice because both the pair join and the verdict
-    // join consume it (4 = 2 iterations' worth of headroom); the
-    // vector-pair comparison must be an equi-join on `cell`
+    // cell assignment is a map-side projection over a broadcast
+    // centroid table and Lloyd runs on the driver, so there is no
+    // nested-loop join at all; the vector-pair comparison must be an
+    // equi-join on `cell`
     val nested = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
-    assert(nested <= 4, s"unexpected nested-loop joins ($nested):\n$plan")
+    assert(nested == 0, s"unexpected nested-loop joins ($nested):\n$plan")
     assert(plan.contains("cell"), "pair join not keyed on cell")
     assert(!plan.contains("CartesianProduct"), "global cartesian in q82")
   }

@@ -120,22 +120,26 @@ class TailPlanSpec extends SparkTestBase {
       s"non-equi join in the curation chain (pair gen must stay banded):\n$plan")
   }
 
-  test("q79 trained IVF: centroid sides broadcast, candidate join keyed on cell") {
-    val plan = executedPlan("q79_ann_ivf_trained")
+  /** The trained-IVF shape (q79, q128): Lloyd runs on the driver and
+    * cell assignment is a map-side projection, so the ONLY nested-loop
+    * join left is the query × centroid probe ranking (k rows broadcast),
+    * and nothing re-joins or re-aggregates the corpus by vec_id. */
+  private def assertTrainedIvfShape(plan: String): Unit = {
     assert(!plan.contains("CartesianProduct"),
       s"corpus-sized cartesian in IVF training:\n$plan")
-    // every nested-loop join must be a centroid broadcast (k rows): the
-    // Lloyd iterations + final assignment + probe, each possibly
-    // duplicated by two consumers — bound generously but finitely
     val nested = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
-    assert(nested <= 10, s"unexpected nested-loop joins ($nested):\n$plan")
+    assert(nested == 1, s"expected only the probe ranking ($nested):\n$plan")
+    assert(!plan.contains("hashpartitioning(vec_id"),
+      s"corpus exchange on vec_id (argmin aggregate or re-join):\n$plan")
+    assert(plan.contains("graft_nearest_cell"), plan)
+  }
+
+  test("q79 trained IVF: centroid sides broadcast, candidate join keyed on cell") {
+    assertTrainedIvfShape(executedPlan("q79_ann_ivf_trained"))
   }
 
   test("q128 sample-trained IVF: same shape with the sampled training scan") {
-    val plan = executedPlan("q128_ann_ivf_sampled")
-    assert(!plan.contains("CartesianProduct"), plan)
-    val nested = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
-    assert(nested <= 10, s"unexpected nested-loop joins ($nested):\n$plan")
+    assertTrainedIvfShape(executedPlan("q128_ann_ivf_sampled"))
   }
 
   test("q93 priority keep-one: pair gen stays banded, policy join is equi") {
