@@ -26,7 +26,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
   * ids. Usage: runMain graft.tools.PlansFull [sfDir] → PLANS_full.md.
   */
 object PlansFull {
-  private[tools] def scrub(plan: String): String = plan
+  private[graft] def scrub(plan: String): String = renumberStages(plan
     .replaceAll("#\\d+", "#X")
     .replaceAll("plan_id=\\d+", "plan_id=X")
     .replaceAll("\\bid=#?\\d+", "id=X")
@@ -46,7 +46,30 @@ object PlansFull {
     // temp staging roots (IVF indexes, signature stores, spools) get a
     // fresh random dir per run
     .replaceAll("/tmp/[-\\w.]+", "TMPDIR")
-    .replaceAll("target/[-\\w./]*tmp[-\\w./]*", "TMPDIR")
+    .replaceAll("target/[-\\w./]*tmp[-\\w./]*", "TMPDIR"))
+
+  /** Whole-stage codegen ids and AQE query-stage ids are handed out as
+    * stages compile and materialize — completion order, which varies run
+    * to run. Renumber both in order of first appearance in the plan text,
+    * so equal plans print equal ids and codegen grouping is kept. */
+  private def renumberStages(plan: String): String = {
+    val codegen = collection.mutable.Map.empty[String, Int]
+    val withCodegen = "\\[codegen id : (\\d+)\\]".r.replaceAllIn(plan, m =>
+      s"[codegen id : ${codegen.getOrElseUpdate(m.group(1), codegen.size + 1)}]")
+    val stage = collection.mutable.Map.empty[String, Int]
+    val stageNode = "^\\(\\d+\\) (Shuffle|Broadcast|TableCache|Result)QueryStage$".r
+    val stageArg = "^Arguments: (\\d+)$".r
+    var inStage = false
+    withCodegen.split("\n", -1).map { line =>
+      if (stageNode.matches(line)) inStage = true
+      else if (line.isEmpty) inStage = false
+      line match {
+        case stageArg(id) if inStage =>
+          s"Arguments: ${stage.getOrElseUpdate(id, stage.size)}"
+        case _ => line
+      }
+    }.mkString("\n")
+  }
 
   /** Run `df`'s QueryExecution to completion and explain it — the
     * final adaptive plan, as it ran. */

@@ -16,4 +16,59 @@ class PlansFullSpec extends SparkTestBase {
     assert(plan.contains("isFinalPlan=true"), plan)
     assert(!plan.contains("isFinalPlan=false"), plan)
   }
+
+  test("scrub renumbers codegen and query-stage ids in order of first appearance") {
+    val plan =
+      """(2) ColumnarToRow [codegen id : 7]
+        |Input [1]: [a#12]
+        |
+        |(3) Project [codegen id : 7]
+        |Output [1]: [a#12]
+        |
+        |(5) ShuffleQueryStage
+        |Output [1]: [a#12]
+        |Arguments: 4
+        |
+        |(6) HashAggregate [codegen id : 3]
+        |Arguments: 9
+        |
+        |(8) BroadcastQueryStage
+        |Output [1]: [a#12]
+        |Arguments: 2
+        |
+        |(9) BroadcastHashJoin [codegen id : 7]
+        |
+        |(10) HashAggregate [codegen id : 5]
+        |
+        |(11) ResultQueryStage
+        |Output [1]: [a#12]
+        |Arguments: 6
+        |""".stripMargin
+    assert(graft.tools.PlansFull.scrub(plan) ===
+      """(2) ColumnarToRow [codegen id : 1]
+        |Input [1]: [a#X]
+        |
+        |(3) Project [codegen id : 1]
+        |Output [1]: [a#X]
+        |
+        |(5) ShuffleQueryStage
+        |Output [1]: [a#X]
+        |Arguments: 0
+        |
+        |(6) HashAggregate [codegen id : 2]
+        |Arguments: 9
+        |
+        |(8) BroadcastQueryStage
+        |Output [1]: [a#X]
+        |Arguments: 1
+        |
+        |(9) BroadcastHashJoin [codegen id : 1]
+        |
+        |(10) HashAggregate [codegen id : 3]
+        |
+        |(11) ResultQueryStage
+        |Output [1]: [a#X]
+        |Arguments: 2
+        |""".stripMargin)
+  }
 }
