@@ -8,6 +8,7 @@ compares values with columns sorted by name, rows sorted by all columns.
 Usage: python3 scripts/check_oracle.py [sfdir] [outdir] [--skip-verify]
 """
 import json, math, os, subprocess, sys
+from pathlib import Path
 
 import duckdb
 import pyarrow.parquet as pq
@@ -17,6 +18,7 @@ try:
 except ImportError:  # driver machines have pandas; warn-and-skip elsewhere
     pd = None
 
+REPO = Path(__file__).resolve().parents[1]
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -26,7 +28,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def run_verify():
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}']
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    r = subprocess.run(cmd, cwd="/root/repo", env=env, capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True, text=True)
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "error" in l.lower() or "failed" in l.lower()) + "\n")
     if r.returncode != 0:

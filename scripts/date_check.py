@@ -34,9 +34,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-datepath-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -74,7 +76,7 @@ for t in TABLES:
 print(f"[date] corpus rewritten with calendar-edge dates at {DST}")
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -93,7 +95,7 @@ summary = {
     "failed": [l.split()[1].rstrip(":") for l in lines
                if l.startswith("[FAIL]")],
 }
-with open("/root/repo/DATECHECK.json", "w") as f:
+with open(REPO / "DATECHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[date] summary -> DATECHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail)")

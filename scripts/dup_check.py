@@ -38,9 +38,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-dup-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -105,7 +107,7 @@ print(f"[dup] corpus rewritten at {DST}: " + ", ".join(
     f"{t}+{v['replayed']}" for t, v in stats.items()))
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -130,7 +132,7 @@ summary = {
 }
 summary["complete"] = (n_declared > 0
                        and summary["n_ok"] + summary["n_fail"] >= n_declared)
-with open("/root/repo/DUPCHECK.json", "w") as f:
+with open(REPO / "DUPCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[dup] summary -> DUPCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail, "

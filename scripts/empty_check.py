@@ -14,9 +14,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 DST = tempfile.mkdtemp(prefix="graft-empty-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -32,7 +34,7 @@ for t in TABLES:
 print(f"[empty] zero-row corpus (schemas from {SRC}) at {DST}")
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -45,7 +47,7 @@ summary = {
     "failed": [l.split()[1].rstrip(":") for l in lines
                if l.startswith("[FAIL]")],
 }
-with open("/root/repo/EMPTYCHECK.json", "w") as f:
+with open(REPO / "EMPTYCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[empty] summary -> EMPTYCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail)")

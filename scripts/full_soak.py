@@ -26,11 +26,12 @@ import re
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import scale_soak  # model_budget / derived_knobs / GROWTH_TOLERANCE
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 SRC = "/root/testdata/sf0.1"
 TIERS = {"sf01e": 1, "sf1": 10}  # sf01e = sf0.1-equivalent base layout
 

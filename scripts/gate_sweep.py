@@ -13,8 +13,9 @@ Usage: python3 scripts/gate_sweep.py [--skip-streams]
   --skip-streams  corpus gates only (the streaming gates add ~3 min)
 """
 import json, subprocess, sys, time
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 # generous vs the slowest recorded gate (UNICODECHECK ~18 min): a gate
 # that triples its own record is hung, not slow
 GATE_TIMEOUT_SEC = int(__import__("os").environ.get(

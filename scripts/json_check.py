@@ -48,10 +48,12 @@ import shutil
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-json-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -108,7 +110,7 @@ for t in TABLES:
 print(f"[json] corpus rewritten with JSON pathologies at {DST}")
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -128,7 +130,7 @@ summary = {
     "failed": [l.split()[1].rstrip(":") for l in lines
                if l.startswith("[FAIL]")],
 }
-with open("/root/repo/JSONCHECK.json", "w") as f:
+with open(REPO / "JSONCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[json] summary -> JSONCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail)")

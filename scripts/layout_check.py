@@ -37,6 +37,7 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 import pyarrow.parquet as pq
@@ -44,6 +45,7 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import check_oracle as co  # norm / row_key — the driver-harness compare
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-relayout-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -92,7 +94,7 @@ print("[layout] corpus re-laid-out at " + DST + ": " +
 # Gate (a): full oracle parity on the re-laid-out corpus (runs Verify
 # against DST, then DuckDB over the same files).
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -108,7 +110,7 @@ except Exception:
 # is the standing CORRECTNESS gate, no need to repeat it here.
 BASE = f"{DST}/verify_base"
 rb = subprocess.run(["sbt", "-batch", f"runMain graft.Verify {SRC} {BASE}"],
-                    cwd="/root/repo",
+                    cwd=REPO,
                     env=dict(os.environ, SPARK_GRAFT_CPUS="8"),
                     capture_output=True, text=True)
 if rb.returncode != 0:
@@ -164,7 +166,7 @@ summary["complete"] = (n_declared > 0
                        and summary["n_ok"] + summary["n_fail"] >= n_declared
                        and rb.returncode == 0
                        and n_same + len(divergent) >= len(base_queries) > 0)
-with open("/root/repo/LAYOUTCHECK.json", "w") as f:
+with open(REPO / "LAYOUTCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[layout] summary -> LAYOUTCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail, "

@@ -53,11 +53,12 @@ import subprocess
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 import duckdb
 import pyarrow.parquet as pq
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 SF = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/target/sf1"
 # (heap, task slots): tighten heap at full width first, then the
 # realistic memory-lean-executor shape (small heap, fewer slots).

@@ -33,9 +33,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-nulled-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -94,7 +96,7 @@ CONTRACT_RAISE = ",".join([
 
 env = dict(os.environ, GRAFT_EXPECT_RAISE=CONTRACT_RAISE)
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo", env=env,
+                    f"{DST}/verify_out"], cwd=REPO, env=env,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -111,7 +113,7 @@ summary = {
     "failed": [l.split()[1].rstrip(":") for l in lines
                if l.startswith("[FAIL]")],
 }
-with open("/root/repo/NULLCHECK.json", "w") as f:
+with open(REPO / "NULLCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[null] summary -> NULLCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail)")

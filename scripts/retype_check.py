@@ -29,9 +29,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-retyped-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -67,7 +69,7 @@ print("[retype] corpus rewritten with drifted schema at " + DST + ": " +
                 for t, v in stats.items()))
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -93,7 +95,7 @@ summary = {
 }
 summary["complete"] = (n_declared > 0
                        and summary["n_ok"] + summary["n_fail"] >= n_declared)
-with open("/root/repo/RETYPECHECK.json", "w") as f:
+with open(REPO / "RETYPECHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[retype] summary -> RETYPECHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail, "

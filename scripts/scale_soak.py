@@ -26,10 +26,11 @@ import os
 import re
 import subprocess
 import sys
+from pathlib import Path
 
 import pyarrow.dataset
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 SRC = "/root/testdata/sf0.1"
 FAMILY = ["q31_", "q41_", "q48_", "q71_", "q82_", "q97_", "q108_",
           "q113_", "q125_", "q128_", "q131_",

@@ -33,9 +33,11 @@ import os
 import subprocess
 import sys
 import tempfile
+from pathlib import Path
 
 import duckdb
 
+REPO = Path(__file__).resolve().parents[1]
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 DST = tempfile.mkdtemp(prefix="graft-skewed-")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -103,7 +105,7 @@ n_hot = con.sql(f"SELECT COUNT(*) FROM '{DST}/documents.parquet' d, d0 "
 print(f"[skew] corpus rewritten at {DST} (duplicate pile: {n_hot} docs)")
 
 r = subprocess.run([sys.executable, "scripts/check_oracle.py", DST,
-                    f"{DST}/verify_out"], cwd="/root/repo",
+                    f"{DST}/verify_out"], cwd=REPO,
                    capture_output=True, text=True)
 sys.stdout.write(r.stdout)
 sys.stderr.write(r.stderr[-2000:] if r.returncode else "")
@@ -117,7 +119,7 @@ summary = {
     "failed": [l.split()[1].rstrip(":") for l in lines
                if l.startswith("[FAIL]")],
 }
-with open("/root/repo/SKEWCHECK.json", "w") as f:
+with open(REPO / "SKEWCHECK.json", "w") as f:
     json.dump(summary, f, indent=1)
 print(f"[skew] summary -> SKEWCHECK.json "
       f"({summary['n_ok']} ok, {summary['n_fail']} fail)")

@@ -2,7 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** Session factory for the engine, and the only place in `src/main` that
+  * builds a `SparkSession`: Bench, Verify, the test base and every tool
+  * under `graft.tools` take their session from [[GraftSession.local]], so
+  * what is verified, probed and dumped is what is benchmarked.
   *
   * Design point (SURVEY §6): the engine must hold up on a 1000-executor
   * cluster at ~100 TB. Locally we run `local[N]`, but every config here is
@@ -10,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   *   - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   *     replaces hand-tuned partition counts at any scale.
   *   - UTC session timezone: deterministic timestamp semantics vs the oracle.
-  *   - shuffle.partitions defaults to the local core count; on a real cluster
-  *     AQE's coalescing makes the initial number mostly irrelevant.
+  *   - shuffle.partitions is max(cores, 4); on a real cluster AQE's
+  *     coalescing makes the initial number mostly irrelevant.
   */
 object GraftSession {
 
@@ -36,11 +39,16 @@ object GraftSession {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  /** Apply the engine's standard tuning to a builder. */
-  def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+  /** The engine's session at `local[cores]`; a later call reuses the
+    * running session. A tool that needs more, such as a state-store
+    * provider, sets it with `spark.conf.set` before its first query. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val s = SparkSession.builder().master(s"local[$cores]").appName("graft")
+      .config("spark.sql.warehouse.dir",
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
+      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", math.max(cores, 4).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -49,15 +57,7 @@ object GraftSession {
       // events.ts is ns-precision parquet; read as long, Tables.events converts
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-
-  /** Local session for tests / ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = tuned(
-      SparkSession.builder().master(s"local[$cores]").appName("graft")
-        .config("spark.sql.warehouse.dir",
-          s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"),
-      math.max(cores, 4)
-    ).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the compiled graft_* expressions are part of the engine surface —
     // any session from this factory can use them (idempotent)

@@ -455,7 +455,8 @@ object Dedup {
     * hashed-set rows × ~8–16 KB (a few-KB doc shingled, elements as
     * int64) ≈ 8–16 MB — the sort-merge join's buffered-group ceiling per
     * task, independent of corpus size. On the driver corpus the hottest
-    * bucket is 25 rows at EVERY tier (tools/BucketProbe, sf0.1 and sf1),
+    * bucket is 25 rows at EVERY tier (sf0.1 and sf1; measured with
+    * tools/BucketProbe, deleted after commit b535018),
     * so the cap only engages on degenerate corpora — exact-dup piles,
     * viral boilerplate (the skew gate's scenario). */
   val DefaultHotBucketCap: Int = 1024
@@ -729,7 +730,8 @@ object Dedup {
   /** Target per-task working-set bytes for the shingle-expansion stage
     * (see [[bandedSignatures]]), together with the measured expansion
     * factor from stored text bytes to banded UnsafeRows (~45 B per text
-    * byte for char 8-grams hashed ×2 bands at sf1 — tools/PeakProbe; 48
+    * byte for char 8-grams hashed ×2 bands at sf1 — the q49 expansion
+    * stage's peak task memory, `graft.tools.Probe <sf1Dir> 1 q49`; 48
     * is the conservative figure used). ~64 MB / 48 ≈ 1.3 MB of text per
     * task — the budget that pins the expansion stage's shuffle-write
     * buffer at ANY corpus size. */
@@ -821,7 +823,7 @@ object Dedup {
     * this) — so one NARROW shuffle of the text buys a task peak that is
     * constant in corpus size, file count and split sizing. Skipped
     * (zero cost) when the source is already fine-grained enough — the
-    * sf0.1 bench tier never pays it (tools/PeakProbe: q49's
+    * sf0.1 bench tier never pays it (Probe's [stage] lines: q49's
     * expansion-task peak 452 MB → ~65 MB at the sf1 soak tier,
     * 59 → 33 MB at sf0.1 from the hashed carry alone). */
   private def bandedSignatures(

@@ -20,8 +20,9 @@ object Analytic extends QueryModule {
       // group's buffer and sorts at evaluation — unbounded state at
       // corpus scale; the two-pass form is bounded (groups × bins) and
       // bit-identical (it replicates Percentile.getPercentile's
-      // interpolation exactly — QuantileProbe verifies head-to-head,
-      // 1.4-1.9 s vs 1.6-2.5 s warm at sf0.1)
+      // interpolation exactly — measured head-to-head with
+      // tools/QuantileProbe, deleted after commit b535018: 1.4-1.9 s vs
+      // 1.6-2.5 s warm at sf0.1)
       graft.operators.Quantiles.exactPercentiles(
           Tables.lineitem(s, d).select("l_returnflag", "l_extendedprice"),
           "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))

@@ -46,19 +46,13 @@ object EvictProof {
     val drainBatches = if (args.length > 1) args(1).toInt else 12
     val perBatch = 400
 
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // the whole point: compaction at every commit, so SST size tracks
-      // LIVE rows instead of deferred tombstone debt
-      .config("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "true")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(8)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the whole point: compaction at every commit, so SST size tracks
+    // LIVE rows instead of deferred tombstone debt
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "true")
+    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
     run(spark, fillBatches, drainBatches, perBatch)
   }
 

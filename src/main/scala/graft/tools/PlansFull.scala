@@ -2,15 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Final-AQE plan corpus for the COMPLETE query inventory (VERDICT r10
-  * item 5): PLANS.md covers the headline tail with annotated initial
-  * plans; this dumps the post-execution adaptive plan of every
-  * SparkEntry query so any round-over-round drift (a new exchange, a
-  * lost pushed filter, a broadcast that became a shuffle) is a reviewable
-  * DIFF instead of a re-derivation.
+  * item 5): dumps the post-execution adaptive plan of every SparkEntry
+  * query to PLANS_full.md, so any round-over-round drift (a new exchange,
+  * a lost pushed filter, a broadcast that became a shuffle) is a
+  * reviewable DIFF instead of a re-derivation; the same run writes
+  * PLANS.md, the [[headline]] subset with one note per query on what its
+  * plan shows.
   *
   * Each query's own QueryExecution EXECUTES first (every partition,
   * rows discarded, like the noop sink) and that same QueryExecution is
@@ -22,10 +23,50 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
   * plans and executes a QueryExecution of its own.
   *
   * Run-varying tokens are scrubbed so reruns diff clean:
-  * expression/plan ids (#123, plan_id=456), temp staging dirs, and result
-  * ids. Usage: runMain graft.tools.PlansFull [sfDir] → PLANS_full.md.
+  * expression/plan ids (#123, plan_id=456), temp staging dirs, result
+  * ids, and codegen/query-stage ids. Usage:
+  * runMain graft.tools.PlansFull [sfDir] → PLANS_full.md + PLANS.md.
   */
 object PlansFull {
+  /** Headline queries for PLANS.md, each with what its plan shows. */
+  val headline: Seq[(String, String)] = Seq(
+    "q01_pricing_summary" -> "single scan, pushed shipdate filter, read schema pruned to the 7 columns the aggregate uses, partial+final hash agg",
+    "q03_star_join_revenue" -> "5-way star join: fact scanned once, every dimension broadcast, no shuffle join",
+    "q16_keep_latest_event" -> "keep-latest as partial-aggregable max_by (map-side combine, no window sort)",
+    "q23_asof_join" -> "as-of join via union-and-carry: one hash exchange on the key (plus the output sort's range exchange), running last_value per key",
+    "q31_lsh_near_dup" -> "MinHash+LSH single-pass: compiled hashed shingle set and minhash signature per row (no aggregate), band self-join broadcasts the shingle sets, exact Jaccard verify and first-shared-band residual inside the join condition, no further joins",
+    "q41_simhash_near_dup" -> "60-bit SimHash: 3x20-bit pigeonhole chunk join (2^20 buckets/band), codegen HammingDistance verify",
+    "q69_ann_ivf_topk" -> "IVF ANN: coarse quantizer collected and broadcast as one table, map-side nearest-centroid cell assignment (graft_nearest_cell), nprobe cell-join probe, exact cosine verify",
+    "q35_cosine_topk" -> "brute-force ANN baseline: tiny query set broadcast against the corpus scan",
+    "q38_tumbling_window" -> "event-time tumbling window aggregation (same plan shape streaming uses)",
+    "q82_semantic_dedup" -> "SemDeDup: driver-held Lloyd quantizer, map-side nearest-centroid cell assignment (graft_nearest_cell), cell-scoped pair join, keep-one verdict as partial-agg min",
+    "q85_incremental_dedup" -> "cross-batch dedup: old/new banded signatures joined within buckets only, per-new-doc verdict aggregation — no global self-join",
+    "q88_bloom_prefilter" -> "Bloom pre-filter: one-pass bitmap aggregate, one-row sketch broadcast (BroadcastNestedLoopJoin), compiled md5 probe — the batch side is never key-shuffled (only the round-robin input split)",
+    "q90_ann_recall" -> "ANN recall eval: ONE scored pair frame (single corpus scan + query broadcast), ranked twice — global exact rank and in-bucket ANN rank — then one grouped overlap count",
+    "q101_hard_negatives" -> "hard-negative mining: broadcast query set with the cross-label predicate inside the join, one corpus pass, per-query top-k window",
+    "q102_dsir_weights" -> "DSIR weights: ONE bucket-count aggregation broadcast back to the feature stream, (id, bucket) re-agg, one-row totals crossJoin as BroadcastNestedLoopJoin",
+    "q103_centroid_outliers" -> "centroid outliers: label centroids from one float-native array-buffer partial agg (no per-row cast allocation above the scan), broadcast back, map-side distances, per-label rank window",
+    "q56_tfidf_top_terms" -> "TF-IDF: corpus tokenized once, df counted from tf's already-distinct (doc, term) rows — no COUNT(DISTINCT) Expand row-multiplication through the first shuffle",
+    "q107_embedding_covariance" -> "covariance: per-row triangle products into ONE global array-buffer aggregate (partial + final, no dim-pair explode), single-row posexplode unfurl",
+    "q112_staged_incremental_dedup" -> "staged-signature probe: the new batch is the ONLY documents scan (the corpus side reads the bkey-clustered signature table) — the once-per-snapshot staging cost is absent from the per-batch plan",
+    "q113_incremental_clusters" -> "incremental CC: existing labels replayed as star edges + new pairs, one checkpointed pair materialization shared by both consumers — CC input is labels + new pairs, never the pair history; both CC calls fit the driver bound, so each is one edges pin + one collect + union-find, and the plan joins two local relations",
+    "q115_span_novelty" -> "span novelty: compiled span hashing map-only, ONE partial-aggregated min per span hash, hash equi-join back — the ExactSubstr-style audit without a suffix array",
+    "q119_centroid_drift" -> "centroid drift: two array-buffer centroid aggregates (one per snapshot slice), label-count-sized equi-join, grid-floored integer distance",
+    "q52_percentiles" -> "exact percentiles by two-pass selection: bounded (group x bin) histogram aggregate, offset window locates candidate bins, ONLY those bins sort — no per-group value buffer, state bounded at any scale",
+    "q125_ann_corpus_neighbors" -> "corpus-vs-corpus ANN: hinted SortMergeJoin on (set, bucket) — zero BroadcastExchange, LSH-bounded candidates, each pair scored once at its first shared table (join residual); the query shape a broadcast side cannot run",
+    "q128_ann_ivf_sampled" -> "sample-trained IVF: Lloyd centroids held on the driver (one collected <=k-row cell aggregate per iteration, no pin), corpus assignment as a map-side graft_nearest_cell projection, the query x centroid probe ranking the only nested-loop join",
+    "q129_keyword_search" -> "keyword search: exploded tokens filtered to query terms map-side, df counted from tf's already-distinct pairs (no distinct Expand), query-term-sized weight frame broadcast, score partial-agg, global top-10 via TakeOrderedAndProject heaps — no global sort",
+    "q130_repeated_run" -> "repeated-run detector: gaps-and-islands windows keyed on doc (parallel across docs, no SinglePartition), run census as one partial-agg count",
+    "q68_approx_percentiles" -> "approx percentiles, bounded everywhere: two-pass exact selection + one-pass mergeable sketch scan meeting in a 3-row join — no corpus repartition, no per-group value buffers",
+    "q132_cms_heavy_hitters" -> "Count-Min sketch: one-pass fixed-size counter-grid aggregate (elementwise-add partials), one-row sketch broadcast as BroadcastNestedLoopJoin, LEAST-of-array-probes estimation",
+    "q133_principal_direction" -> "power iteration: one covariance array-buffer pass collected as the dim·(dim+1)/2 triangle, then 3 overflow-checked integer matvecs with integer normalization on the driver — the plan is the local result",
+    "q135_rare_token_scrub" -> "CMS in-pipeline: sketch pass + broadcast one-row probe pass — per-token frequency gate with NO vocabulary-sized count join",
+    "q136_classifier_gate" -> "hashed-feature classifier inference: compiled bigram shingles map-side, inline integer bucket weights, per-doc partial-agg SUM, source roll-up — no vocabulary join, no UDF",
+    "q80_repetition_filter" -> "Gopher/C4 repetition gates fully row-local: compiled ShingleRepetition + TokenStats structs, zero key shuffles before the output sort (only the round-robin input split) — replaces a per-corpus-token explode shuffle",
+    "q137_feature_hash_embed" -> "feature hashing: explode + (doc, dim) integer sums (<=64 rows/doc through the shuffle), per-doc map->dense assembly, corpus left join for full coverage (NULL docs embed as the zero vector) — the no-vocabulary text->vector bridge",
+    "q121_token_budget_sample" -> "token-budget sample, size-adaptive plan: at this input the statistic picks the join-free per-stratum window; past 256 MB the same call plans 2^10 hash-sharded windows + bucket-offset prune (row-identical, ScaleSpec-pinned)",
+    "q138_pps_sample" -> "systematic PPS draw, same size-adaptive rule: single running-sum window here, sharded windows + offset join at scale — integer sums and floor division make both shapes bit-identical")
+
   private[graft] def scrub(plan: String): String = renumberStages(plan
     .replaceAll("#\\d+", "#X")
     .replaceAll("plan_id=\\d+", "plan_id=X")
@@ -88,16 +129,7 @@ object PlansFull {
     // `Scan ExistingRDD` at a pin, which otherwise hides the pinned
     // subtree's parquet scans from a reviewer (VERDICT r15 item 7)
     System.setProperty("graft.capturePinPlans", "true")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.core.GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -109,10 +141,12 @@ object PlansFull {
     sb.append("paths are scrubbed so two rounds' dumps diff cleanly.\n")
 
     var failed = List.empty[String]
+    val plans = collection.mutable.Map.empty[String, String]
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val plan = executedPlan(fn(spark, sfDir))
-        sb.append(s"\n## $name\n\n```\n${scrub(plan)}```\n")
+        val plan = scrub(executedPlan(fn(spark, sfDir)))
+        plans(name) = plan
+        sb.append(s"\n## $name\n\n```\n$plan```\n")
         val pins = graft.Pins.drain()
         if (pins.nonEmpty) {
           // a `Scan ExistingRDD` above is one of these checkpointed
@@ -135,8 +169,22 @@ object PlansFull {
       spark.catalog.clearCache()
     }
     Files.writeString(Paths.get("PLANS_full.md"), sb.toString)
+
+    val hb = new StringBuilder
+    hb.append("# PLANS — headline physical plans (generated by graft.tools.PlansFull)\n\n")
+    hb.append(s"Corpus: `$sfDir`. Each plan is the query's final adaptive plan, the\n")
+    hb.append("same scrubbed text as its PLANS_full.md section. What to look for:\n")
+    hb.append("`PushedFilters` / narrow `ReadSchema` on every scan, `BroadcastHashJoin`\n")
+    hb.append("on dimension joins, `WholeStageCodegen` spans over the hot path, partial\n")
+    hb.append("(`HashAggregate` twice) aggregation before exchanges.\n")
+    headline.foreach { case (name, note) =>
+      hb.append(s"\n## $name\n\n_${note}_\n\n")
+      hb.append(plans.get(name).fold("FAILED\n")(p => s"```\n$p```\n"))
+    }
+    Files.writeString(Paths.get("PLANS.md"), hb.toString)
     println(s"[plans-full] wrote PLANS_full.md " +
-      s"(${graft.SparkEntry.queries.size} queries, failed=${failed.reverse})")
+      s"(${graft.SparkEntry.queries.size} queries, failed=${failed.reverse}) " +
+      s"and PLANS.md (${headline.size} queries)")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

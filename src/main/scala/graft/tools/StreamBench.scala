@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.EventWindows
 
@@ -14,13 +13,7 @@ object StreamBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val nFiles = if (args.length > 1) args(1).toInt else 16
     val perTrigger = if (args.length > 2) args(2).toInt else math.max(nFiles / 8, 1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(32)
 
     // stage input as nFiles parquet files (micro-batch feed); ts is cast
     // to TIMESTAMP_LTZ — Tables.events' ns->us conversion yields NTZ,

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -35,29 +34,23 @@ object StreamSoak {
     val rowsPerBatch = if (args.length > 1) args(1).toInt else 4000
     require(batches >= 9, s"need >= 9 batches for a warmup/steady split, got $batches")
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // The verdict rides on numRowsTotal: RocksDB's memoryUsedBytes
-      // mixes live state with retained version history / SST bookkeeping
-      // whose cleanup is an asynchronous maintenance thread — on a
-      // minutes-long soak it accumulates near-linearly for EVERY op
-      // (measured: the 32-row Bloom op reports more bytes than the
-      // 120k-row exact baseline), so it is recorded for provenance, not
-      // judged. That eviction DOES reclaim storage is proven separately:
-      // [[EvictProof]] forces compaction per commit and shows the
-      // SST-level metric falling 3.4 MB → 6 KB when the near-dup op's
-      // timers fire (EVICTCHECK.json). Retention is still shrunk from
-      // the 100-batch default so the recovery window, bounded either
-      // way, stays small.
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "5s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(8)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // The verdict rides on numRowsTotal: RocksDB's memoryUsedBytes
+    // mixes live state with retained version history / SST bookkeeping
+    // whose cleanup is an asynchronous maintenance thread — on a
+    // minutes-long soak it accumulates near-linearly for EVERY op
+    // (measured: the 32-row Bloom op reports more bytes than the
+    // 120k-row exact baseline), so it is recorded for provenance, not
+    // judged. That eviction DOES reclaim storage is proven separately:
+    // [[EvictProof]] forces compaction per commit and shows the
+    // SST-level metric falling 3.4 MB → 6 KB when the near-dup op's
+    // timers fire (EVICTCHECK.json). Retention is still shrunk from
+    // the 100-batch default so the recovery window, bounded either
+    // way, stays small.
+    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
+    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "5s")
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
