@@ -4,10 +4,12 @@
 Runs graft.Verify at the given sf dir (unless --skip-verify), then replays
 each oracle_sql.json query in DuckDB against the same parquet tables and
 compares values with columns sorted by name, rows sorted by all columns.
+`compare_corpus` is the same compare as a function; the corpus gates
+(`scripts/gate_sweep.py`) call it once per drifted corpus.
 
 Usage: python3 scripts/check_oracle.py [sfdir] [outdir] [--skip-verify]
 """
-import json, math, os, subprocess, sys
+import json, math, os, subprocess, sys, time
 from pathlib import Path
 
 import duckdb
@@ -19,16 +21,13 @@ except ImportError:  # driver machines have pandas; warn-and-skip elsewhere
     pd = None
 
 REPO = Path(__file__).resolve().parents[1]
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def run_verify():
-    cmd = ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}']
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    r = subprocess.run(cmd, cwd=REPO, env=env, capture_output=True, text=True)
+def run_verify(sf, out):
+    cmd = ["sbt", "-batch", f'runMain graft.Verify {sf} {out}']
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "error" in l.lower() or "failed" in l.lower()) + "\n")
     if r.returncode != 0:
@@ -111,58 +110,54 @@ def compare(name, spark_rows, spark_cols, duck_rows, duck_cols):
     for i, (a, b) in enumerate(zip(s, d)):
         if a != b:
             return f"VALUE mismatch at row {i}:\n  spark={a}\n  duck ={b}"
-    print("  [order-warn] row ORDER diverges between engines (values match "
+    print(f"  [order-warn] {name}: row ORDER diverges between engines (values match "
           "sorted; driver's sorted-hash gate is unaffected)")
     return None
 
 
-def main():
-    import time as _time
-    t_start = _time.time()
-    if "--skip-verify" not in sys.argv:
-        run_verify()
-    t_verify = _time.time() - t_start
+def compare_corpus(sf, out, expect_raise={}):
+    """Replay every query of `out`/oracle_sql.json over `sf`'s tables in
+    DuckDB and compare it with Spark's dump in `out`. Returns
+    (n_declared, results): the oracle inventory size and one
+    (name, verdict, detail) per query, verdict "ok", "FAIL" or
+    "rows-only".
+
+    `expect_raise` maps `name` to a message substring ("" for any) for
+    queries whose input CONTRACT requires them to raise on the corpus
+    under test (the sampling family raise_error-guards NULL
+    scores/weights/tokens — NULLCHECK lists them). For those, a MISSING
+    spark output is the contract firing — but only if Verify's
+    errors.json recorded a raise_error (USER_RAISED_EXCEPTION) whose
+    message carries the operator's contract text (ADVICE r9: a genuine
+    crash — OOM, NPE, unrelated analysis error — must NOT pass green)."""
     con = duckdb.connect()
     for t in TABLES:
-        p = f"{SF}/{t}.parquet"
+        p = f"{sf}/{t}.parquet"
         if os.path.isdir(p):
             # soak tiers: <table>.parquet is a DIRECTORY of part files
             # (GenCorpus's splittable layout); glob it for DuckDB
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}/*.parquet'")
         elif os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(f"{OUT}/oracle_sql.json"))
-    n_ok = n_bad = 0
-    declared = [d for d in sorted(os.listdir(OUT))
-                if os.path.isdir(f"{OUT}/{d}")]
-    # GRAFT_EXPECT_RAISE: comma-separated `name` or `name=msg_substring`
-    # entries for queries whose input CONTRACT requires them to raise on
-    # the corpus under test (the sampling family raise_error-guards NULL
-    # scores/weights/tokens — null_check.py sets this). For those, a
-    # MISSING spark output is the contract firing — but only if Verify's
-    # errors.json recorded a raise_error (USER_RAISED_EXCEPTION) whose
-    # message carries the operator's contract text (ADVICE r9: a genuine
-    # crash — OOM, NPE, unrelated analysis error — must NOT pass green).
-    expect_raise = {}
-    for x in os.environ.get("GRAFT_EXPECT_RAISE", "").split(","):
-        if x:
-            name, _, pat = x.partition("=")
-            expect_raise[name] = pat
+    oracle = json.load(open(f"{out}/oracle_sql.json"))
+    results = []
+    declared = [d for d in sorted(os.listdir(out))
+                if os.path.isdir(f"{out}/{d}")]
     try:
-        verify_errors = json.load(open(f"{OUT}/errors.json"))
+        verify_errors = json.load(open(f"{out}/errors.json"))
     except Exception:
         verify_errors = None  # pre-upgrade Verify output: fall back
     slow = []  # (name, duck_sec) — find where gate wall time goes
     for name in declared:
         if name in expect_raise:
-            n_bad += 1
-            print(f"[FAIL] {name}: expected contract raise, but query produced output")
+            results.append((name, "FAIL", "expected contract raise, but "
+                            "query produced output"))
             continue
         if name not in oracle:
-            print(f"[rows-only] {name}")
+            results.append((name, "rows-only", ""))
             continue
         try:
-            _t0 = _time.time()
+            _t0 = time.time()
             # Spark dumps timestamps as parquet INT96 (its default, and
             # what the driver harness has compared against since round
             # 1). PyArrow maps INT96 to NANOSECOND resolution by
@@ -172,7 +167,7 @@ def main():
             # the INT96 read to microseconds is lossless (Spark
             # timestamps ARE micros internally) and overflow-free to
             # year 9999+.
-            tbl = pq.read_table(f"{OUT}/{name}",
+            tbl = pq.read_table(f"{out}/{name}",
                                 coerce_int96_timestamp_unit="us")
             spark_cols = tbl.column_names
             spark_rows = [tuple(row[c] for c in spark_cols)
@@ -193,48 +188,63 @@ def main():
                    or compare(name, spark_rows, spark_cols, duck_rows, duck_cols))
         except Exception as e:
             err = f"EXC: {e}"
-        _dt = _time.time() - _t0
+        _dt = time.time() - _t0
         if _dt > 5:
             slow.append((name, round(_dt, 1)))
         if err:
-            n_bad += 1
-            print(f"[FAIL] {name}: {err}")
+            results.append((name, "FAIL", err))
         else:
-            n_ok += 1
-            print(f"[ok]   {name} ({len(spark_rows)} rows)")
-    missing = [k for k in oracle if k not in declared]
-    for m in missing:
+            results.append((name, "ok", f"{len(spark_rows)} rows"))
+    for m in (k for k in oracle if k not in declared):
         if m in expect_raise:
             chain = (verify_errors or {}).get(m)
             if verify_errors is None:
-                n_ok += 1
-                print(f"[ok]   {m} (contract raise; errors.json absent — "
-                      "failure mode unverified)")
+                results.append((m, "ok", "contract raise; errors.json absent — "
+                                "failure mode unverified"))
             elif chain is None:
-                n_bad += 1
-                print(f"[FAIL] {m}: expected contract raise but Verify "
-                      "recorded no error (output silently missing)")
+                results.append((m, "FAIL", "expected contract raise but Verify "
+                                "recorded no error (output silently missing)"))
             elif "USER_RAISED_EXCEPTION" not in chain:
-                n_bad += 1
-                print(f"[FAIL] {m}: expected contract raise_error, got: "
-                      f"{chain[:300]}")
+                results.append((m, "FAIL", "expected contract raise_error, got: "
+                                f"{chain[:300]}"))
             elif expect_raise[m] and expect_raise[m] not in chain:
-                n_bad += 1
-                print(f"[FAIL] {m}: raise message lacks contract text "
-                      f"'{expect_raise[m]}': {chain[:300]}")
+                results.append((m, "FAIL", "raise message lacks contract text "
+                                f"'{expect_raise[m]}': {chain[:300]}"))
             else:
-                n_ok += 1
-                print(f"[ok]   {m} (contract raise verified: "
-                      f"{expect_raise[m] or 'USER_RAISED_EXCEPTION'})")
+                results.append((m, "ok", "contract raise verified: "
+                                f"{expect_raise[m] or 'USER_RAISED_EXCEPTION'}"))
         else:
-            n_bad += 1
-            print(f"[FAIL] {m}: spark output missing (query crashed?)")
+            results.append((m, "FAIL", "spark output missing (query crashed?)"))
     if slow:
         print("[timing] oracle-side queries >5s: " +
               ", ".join(f"{n}={t}s" for n, t in
                         sorted(slow, key=lambda x: -x[1])[:10]))
+    return len(oracle), results
+
+
+def result_line(name, verdict, detail):
+    if verdict == "FAIL":
+        return f"[FAIL] {name}: {detail}"
+    if verdict == "rows-only":
+        return f"[rows-only] {name}"
+    return f"[ok]   {name} ({detail})"
+
+
+def main():
+    args = [a for a in sys.argv[1:] if a != "--skip-verify"]
+    sf = args[0] if args else "/root/testdata/sf0.01"
+    out = args[1] if len(args) > 1 else "/tmp/verify_out"
+    t_start = time.time()
+    if "--skip-verify" not in sys.argv:
+        run_verify(sf, out)
+    t_verify = time.time() - t_start
+    _, results = compare_corpus(sf, out)
+    for r in results:
+        print(result_line(*r))
+    n_ok = sum(v == "ok" for _, v, _ in results)
+    n_bad = sum(v == "FAIL" for _, v, _ in results)
     print(f"[timing] verify={round(t_verify, 1)}s "
-          f"compare={round(_time.time() - t_start - t_verify, 1)}s")
+          f"compare={round(time.time() - t_start - t_verify, 1)}s")
     print(f"\n== {n_ok} ok, {n_bad} fail ==")
     sys.exit(1 if n_bad else 0)
 

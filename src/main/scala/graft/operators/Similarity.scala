@@ -704,7 +704,7 @@ object Similarity {
     // full-corpus assignment stays the dominant term. The training set
     // is DEFINED by id (`vec_id < cap`), never by count: an earlier cut
     // skipped the filter when COUNT(*) ≤ cap, silently assuming dense
-    // ids — the replay corpus gate (dup_check.py: same content re-landed
+    // ids — the replay corpus gate (DUPCHECK: same content re-landed
     // under ids +10⁹) broke that assumption and diverged q82/q97 from
     // the mirror, whose tre CTE always applies the predicate. The filter
     // is a pushed-down scan predicate (free at gate SFs where every id

@@ -64,7 +64,7 @@ object Analytic extends QueryModule {
       // <=> (null-safe equality): both aggregates emit a row for the
       // NULL return-flag group (exactPercentiles keeps it by design, as
       // does groupBy) — a bare equi-join would silently drop that group
-      // while the oracle's GROUP BY keeps it (caught by null_check.py)
+      // while the oracle's GROUP BY keeps it (caught by NULLCHECK)
       exact.join(approx, col("l_returnflag") <=> col("__rf"))
         .select(col("l_returnflag"), col("p50"), col("p90"),
           (abs(element_at(col("as"), 1) - col("p50")) / col("p50") <= 0.01 &&
@@ -184,7 +184,7 @@ object Analytic extends QueryModule {
       // IS NOT DISTINCT FROM: `source` is nullable and the NULL-source
       // slice is a stratum like any other — the Spark side's
       // groupBy/window keeps it, and a bare equi-join back onto the
-      // thresholds would silently drop it (caught by null_check.py)
+      // thresholds would silently drop it (caught by NULLCHECK)
       import org.apache.spark.sql.expressions.Window
       val bySource = Window.partitionBy("source")
       val ranked = Tables.documents(s, d).select("doc_id", "source", "n_chars")

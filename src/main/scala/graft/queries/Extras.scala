@@ -125,7 +125,7 @@ object Extras extends QueryModule {
       // `value` is nullable ⇒ the rank-family window order must pin NULL
       // placement: Spark ASC defaults to NULLS FIRST, DuckDB to NULLS
       // LAST — unpinned, every rank/percent_rank/cume/ntile value in a
-      // partition with NULLs diverges (caught by scripts/null_check.py).
+      // partition with NULLs diverges (caught by NULLCHECK).
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val wv = Window.partitionBy(col("user_id")).orderBy(col("value"), col("event_id"))
       Tables.events(s, d).select(
@@ -188,7 +188,7 @@ object Extras extends QueryModule {
     // ---- §1.3 data model: MapType projection from JSON events ----
     // Map keys/values are serialized (array_join) at the SELECT boundary:
     // the driver's pandas compare gate cannot sort array/map cells.
-    // Malformed-input contract (scripts/json_check.py): the map parses
+    // Malformed-input contract (JSONCHECK): the map parses
     // values as STRINGS (a typed Long map would NULL the whole map on one
     // non-numeric value, while json_keys still lists the keys), each
     // value try_casts individually (NULLs are SKIPPED by array_join /
@@ -242,7 +242,7 @@ object Extras extends QueryModule {
       // ignoreNullFields=false: Spark's to_json default DROPS null struct
       // fields ({"uid":7}), while DuckDB's struct-to-json keeps them
       // ({"uid":7,"typ":null}) — with a nullable event_type the two
-      // disagree on every null row (caught by scripts/null_check.py);
+      // disagree on every null row (caught by NULLCHECK);
       // explicit nulls are also the lossless choice for a serialized
       // record.
       val who = struct(col("user_id").as("uid"), col("event_type").as("typ"))

@@ -151,7 +151,7 @@ object Relational extends QueryModule {
     // emits NO rows over an empty relation — including the grand-total
     // row — while standard SQL (DuckDB) emits the () row with n = 0.
     // The engine's contract is Spark's (caught by
-    // scripts/empty_check.py); same pin on q09/q51.
+    // EMPTYCHECK); same pin on q09/q51.
     Q("q08_rollup", Some(s"""
       SELECT l_returnflag, l_linestatus,
         COUNT(*) AS n, ${sqlSum("l_quantity")} AS sum_qty
@@ -283,7 +283,7 @@ object Relational extends QueryModule {
     },
 
     // ---- P1/F7: JSON field projection with typed extraction ----
-    // Malformed-input contract (scripts/json_check.py): invalid JSON,
+    // Malformed-input contract (JSONCHECK): invalid JSON,
     // a non-numeric/overflowing/missing k, and non-object documents all
     // contribute NULL to the sum in BOTH engines. get_json_object NULLs
     // on truncated/garbage input (probed class-by-class — it does NOT

@@ -1282,7 +1282,7 @@ object Text extends QueryModule {
       // of nothing (false, matching the Spark side's left-join +
       // coalesce(false)). Unguarded, SQL's three-valued IN turns EVERY
       // non-matching row NULL once the corpus holds one NULL fp
-      // (caught by scripts/null_check.py).
+      // (caught by NULLCHECK).
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") < 250).select(md5(col("text")).as("fp"))
       val batch = docs.filter(col("doc_id") >= 250)
@@ -1544,7 +1544,7 @@ object Text extends QueryModule {
       // cumulative windows pin NULLS FIRST: the NULL bucket (docs with
       // no measurable length) sorts before bucket 0 in Spark's ASC
       // default but after the last bucket in DuckDB's — unpinned, every
-      // cum_docs/cum_doc_frac cell shifts (caught by null_check.py)
+      // cum_docs/cum_doc_frac cell shifts (caught by NULLCHECK)
       graft.functions.GraftFunctions.register(s)
       val st = tokenStatsOf(col("text"))
       // floor(nt/10) is exact for integer nt: the correctly-rounded
@@ -2043,7 +2043,7 @@ object Text extends QueryModule {
       // LEFT JOIN back onto the corpus = the oracle's doc_id grid:
       // explode of a NULL token list EMITS NO ROWS, so without it a
       // NULL-text doc silently vanishes from the feature table while
-      // the oracle emits its zero vector (caught by null_check.py).
+      // the oracle emits its zero vector (caught by NULLCHECK).
       // A feature table must cover the corpus; no-token docs embed as
       // the zero vector (the coalesce maps the missing map to all-0).
       Tables.documents(s, d).select(col("doc_id"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.{Event, EventWindows, StatefulOps}
 
 /** Streaming replay-parity gate (VERDICT r12 item 1) — the streaming twin
-  * of `scripts/dup_check.py`.
+  * of DUPCHECK.
   *
   * The twelve corpus gates all exercise the BATCH path; the replay axis
   * (at-least-once redelivery) found a real bug there (q82's

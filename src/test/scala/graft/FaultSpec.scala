@@ -314,7 +314,7 @@ class FaultSpec extends SparkTestBase {
     // matched nothing): a partitionBy write of an empty frame emits zero
     // data files, so without the _graft_schema sidecar the first probe
     // used to die with UNABLE_TO_INFER_SCHEMA (caught by
-    // scripts/empty_check.py; pinned here)
+    // EMPTYCHECK; pinned here)
     val base = java.nio.file.Files.createTempDirectory("graft-fault-empty").toString
     val path = s"$base/idx"
     val none = emb.filter(col("vec_id") < 0)

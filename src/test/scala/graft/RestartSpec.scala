@@ -18,18 +18,6 @@ class RestartSpec extends SparkTestBase {
   private def ts(minute: Int, sec: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:$minute%02d:$sec%02d")
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("streamingBloomDedup: bitmap state survives a checkpoint restart") {
     withRocksDb {
       implicit val ctx = spark.sqlContext

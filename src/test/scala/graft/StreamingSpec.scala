@@ -106,38 +106,9 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("streaming near-dup flags arriving docs against stored signatures (U6 x T4)") {
-    implicit val ctx = spark.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val dups = StatefulOps.streamingNearDup(ms.toDS())
-    val q = dups.toDF("doc_id", "dup_of", "est").writeStream
-      .format("memory").queryName("neardup").outputMode("append").start()
-    try {
-      ms.addData((1L, "the quick brown fox jumps over the lazy dog"),
-                 (2L, "completely different text with other tokens here now"))
-      q.processAllAvailable()
-      assert(spark.table("neardup").count() === 0) // first-seen docs: no dups
-      // a later micro-batch re-sends doc 1's content under a new id
-      ms.addData((3L, "the quick brown fox jumps over the lazy dog"),
-                 (4L, "yet another unrelated document entirely about nothing"))
-      q.processAllAvailable()
-      val flagged = spark.table("neardup")
-        .select("doc_id", "dup_of", "est").as[(Long, Long, Double)]
-        .collect().toSet
-      // doc 3 flags against representative 1 (est = 1.0: identical sigs),
-      // possibly once per agreeing band
-      assert(flagged.nonEmpty && flagged.forall(_ == ((3L, 1L, 1.0))))
-      assert(!flagged.exists(_._1 == 4L))
-    } finally q.stop()
-  }
-
   test("bounded streaming near-dup: emit-once pairs + event-time state eviction") {
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
       val ms = MemoryStream[(Long, Timestamp, String)]
       val fox = "the quick brown fox jumps over the lazy dog"
       // 1-minute event-time horizon, zero watermark delay: watermark = max ts
@@ -149,12 +120,18 @@ class StreamingSpec extends SparkTestBase {
         def rows() = spark.table("bounded_nd")
           .select("doc_id", "dup_of").as[(Long, Long)].collect().toSeq
 
-        ms.addData((1L, ts(0), fox))
+        ms.addData((1L, ts(0), fox),
+          (7L, ts(0), "an unrelated sentence about rivers and mountains"))
         q.processAllAvailable()
-        ms.addData((2L, ts(0, 30), fox))
+        assert(rows().isEmpty, "first-seen docs: no dups")
+        // a later micro-batch re-sends doc 1's content under a new id
+        ms.addData((2L, ts(0, 30), fox),
+          (8L, ts(0, 30), "some other words concerning weather and tides today"))
         q.processAllAvailable()
         // identical docs agree in ALL bands, yet exactly one pair emits
         assert(rows() === Seq((2L, 1L)), "emit-once: one row per (doc, dup_of) pair")
+        assert(spark.table("bounded_nd").select("est").as[Double].collect()
+          .toSeq === Seq(1.0), "identical signatures estimate Jaccard 1.0")
 
         // push the watermark far past doc 1/2's buckets' horizon; the
         // unrelated text shares no bucket with them, then one more batch
@@ -175,10 +152,9 @@ class StreamingSpec extends SparkTestBase {
         q.processAllAvailable()
         assert(rows().filter(_._1 == 6L) === Seq((6L, 5L)),
           "new representative owns the bucket after eviction (exactly one pair)")
+        assert(rows().map(_._1).toSet === Set(2L, 6L),
+          "unrelated docs are never flagged")
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -199,21 +175,6 @@ class StreamingSpec extends SparkTestBase {
       q.processAllAvailable()
       val kept = spark.table("corpus").select("doc_id").as[Long].collect().toSet
       assert(kept === Set(1L, 2L, 4L))
-    } finally q.stop()
-  }
-
-  test("keepLatestPerUser emits the newest row per user (T4/A3)") {
-    val ms = newEvents()
-    val q = StatefulOps.keepLatestPerUser(ms.toDS())
-      .writeStream.format("memory").queryName("latest").outputMode("update").start()
-    try {
-      ms.addData(Event(1, ts(5), 7, "a", 1.0), Event(2, ts(3), 7, "b", 2.0))
-      q.processAllAvailable()
-      ms.addData(Event(3, ts(4), 7, "c", 3.0)) // older than current latest
-      q.processAllAvailable()
-      val emitted = spark.table("latest").as[Event].collect()
-      // last emission for user 7 must be event 1 (ts 00:05), never event 3
-      assert(emitted.map(_.event_id).toSet === Set(1L))
     } finally q.stop()
   }
 
@@ -518,22 +479,6 @@ class StreamingSpec extends SparkTestBase {
         case None    => spark.conf.unset(key)
       }
     }
-  }
-
-  test("runningUserTotals maintains keyed state across batches (T4)") {
-    val ms = newEvents()
-    val q = StatefulOps.runningUserTotals(ms.toDS())
-      .toDF("user_id", "n", "total")
-      .writeStream.format("memory").queryName("totals").outputMode("update").start()
-    try {
-      ms.addData(Event(1, ts(1), 7, "a", 10.0))
-      q.processAllAvailable()
-      ms.addData(Event(2, ts(2), 7, "a", 5.0))
-      q.processAllAvailable()
-      val last = spark.table("totals").as[(Long, Long, Double)].collect()
-        .filter(_._1 == 7L).maxBy(_._2)
-      assert(last === ((7L, 2L, 15.0)))
-    } finally q.stop()
   }
 
   test("streamingTokenSketch equals the batch CMS of the stream prefix (U3 x T4)") {
