@@ -11,10 +11,13 @@ ship a query-semantics change with stale *CHECK.json evidence:
   3. replays each corpus through the DuckDB oracle in-process
      (`check_oracle.compare_corpus`);
   4. writes each <GATE>.json, then runs the streaming gates (replay
-     parity, late data, eviction reclaim, bounded-state soak) one by one.
+     parity, late data, eviction reclaim, bounded-state soak) in ONE
+     graft.tools.StreamGates JVM, which writes their artifacts.
 
-Every corpus artifact records `returncode`, `n_declared` and `complete`;
-a gate passes only when it is complete and has no failures. A passing
+Every corpus artifact records `returncode`, `n_declared` and `complete`,
+and every streaming artifact `returncode` and `complete` (a streaming
+gate the harness never finished is rewritten `complete: false`); a gate
+passes only when it is complete and has no failures. A passing
 gate's temporary corpus is deleted; a failing one's stays. A full run
 writes GATESWEEP.json with, per gate, the exit code, wall seconds (its
 rewrite, Verify section and compare) and whether it timed out. Exits
@@ -31,17 +34,13 @@ import check_oracle as co
 from corpus_gates import GATES, cross_layout
 
 REPO = Path(__file__).resolve().parents[1]
-# a Verify with no corpus finished in this long, or a streaming gate
-# running this long, is hung, not slow (the slowest recorded gate,
-# UNICODECHECK, once took ~18 min)
+# a Verify with no corpus finished in this long, or a StreamGates JVM
+# with no gate finished in this long, is hung, not slow (the slowest
+# recorded gate, UNICODECHECK, once took ~18 min)
 GATE_TIMEOUT_SEC = 3600
 
-STREAM_GATES = [
-    ("STREAMREPLAY", "graft.tools.StreamReplay"),
-    ("STREAMLATE",   "graft.tools.StreamLate"),
-    ("EVICTCHECK",   "graft.tools.EvictProof"),
-    ("STREAMSOAK",   "graft.tools.StreamSoak"),
-]
+STREAM_GATES = ["STREAMREPLAY", "STREAMLATE", "EVICTCHECK", "STREAMSOAK"]
+STREAM_DONE = re.compile(r"\[streamgates\] (\S+) done in ([\d.]+) s")
 
 
 def kill_group(p):
@@ -78,18 +77,18 @@ def write_corpus(g):
             "sec": time.time() - t0}
 
 
-def run_verify(pairs, log):
-    """One Verify over every (sf, out) pair, killed once no corpus has
-    finished for GATE_TIMEOUT_SEC. Returns (exit code, timed out)."""
-    cmd = ["sbt", "-batch", "runMain graft.Verify " +
-           " ".join(f"{sf} {out}" for sf, out in pairs)]
+def run_main(main, log, n_done):
+    """`sbt runMain <main>` into `log`, killed once `n_done()` (the count
+    of finished corpora or gates) has not risen for GATE_TIMEOUT_SEC.
+    Returns (exit code, timed out)."""
     with open(log, "w") as f:
-        p = subprocess.Popen(cmd, cwd=REPO, stdout=f, stderr=subprocess.STDOUT,
+        p = subprocess.Popen(["sbt", "-batch", f"runMain {main}"], cwd=REPO,
+                             stdout=f, stderr=subprocess.STDOUT,
                              start_new_session=True)
         done, deadline = 0, time.time() + GATE_TIMEOUT_SEC
         while p.poll() is None:
             time.sleep(2)
-            n = sum(finished(out) for _, out in pairs)
+            n = n_done()
             if n > done:
                 done, deadline = n, time.time() + GATE_TIMEOUT_SEC
             elif time.time() > deadline:
@@ -159,7 +158,9 @@ def corpus_gates(gates):
     print(f"[sweep] Verify over {len(pairs)} corpora (log {log}) ...",
           flush=True)
     t0 = time.time()
-    vrc, timed_out = run_verify(pairs, log)
+    vrc, timed_out = run_main(
+        "graft.Verify " + " ".join(f"{sf} {out}" for sf, out in pairs), log,
+        lambda: sum(finished(out) for _, out in pairs))
     print(f"[sweep] Verify exit {vrc}{' (TIMEOUT)' if timed_out else ''} "
           f"after {time.time() - t0:.1f}s", flush=True)
     # per-corpus wall seconds, as Verify reports them
@@ -168,44 +169,48 @@ def corpus_gates(gates):
     return {r["g"].name: report(r, vrc, timed_out, section) for r in runs}
 
 
-def stream_gate(name, main):
-    t0 = time.time()
-    print(f"[sweep] {name} ...", flush=True)
-    log = tempfile.mkstemp(prefix=f"graft-{name.lower()}-", suffix=".log")[1]
-    with open(log, "w") as f:
-        p = subprocess.Popen(["sbt", "-batch", f"runMain {main}"], cwd=REPO,
-                             stdout=f, stderr=subprocess.STDOUT,
-                             start_new_session=True)
-        try:
-            rc, timed_out = p.wait(timeout=GATE_TIMEOUT_SEC), False
-        except subprocess.TimeoutExpired:
-            # processAllAvailable can block forever on a stuck query
-            kill_group(p)
-            rc, timed_out = -9, True
-    if rc != 0:
+def stream_gates(names):
+    """One StreamGates JVM over `names`; returns their GATESWEEP entries.
+    A gate with no `done` line (the JVM died or hung first) has its
+    artifact rewritten `complete: false` with the harness's exit code."""
+    log = tempfile.mkstemp(prefix="graft-streamgates-", suffix=".log")[1]
+    print(f"[sweep] StreamGates {' '.join(names)} (log {log}) ...", flush=True)
+    done = lambda: dict(STREAM_DONE.findall(open(log).read()))
+    # processAllAvailable can block forever on a stuck query
+    hrc, timed_out = run_main("graft.tools.StreamGates " + " ".join(names),
+                              log, lambda: len(done()))
+    sec, results = done(), {}
+    for name in names:
+        art = REPO / f"{name}.json"
+        if name in sec:
+            rc = json.loads(art.read_text())["returncode"]
+        else:
+            rc = hrc or 1
+            art.write_text(json.dumps({"complete": False, "returncode": rc}) + "\n")
+        r = results[name] = {"rc": rc, "sec": float(sec.get(name, 0)),
+                             "timed_out": timed_out and name not in sec}
+        print(f"[sweep] {name}: {'ok' if rc == 0 else 'TIMEOUT' if r['timed_out'] else 'FAIL'}"
+              f" ({r['sec']}s)", flush=True)
+    if hrc != 0:
         sys.stdout.write(open(log).read()[-3000:])
     else:
         os.remove(log)
-    dt = round(time.time() - t0, 1)
-    print(f"[sweep] {name}: "
-          f"{'ok' if rc == 0 else ('TIMEOUT' if timed_out else 'FAIL')} "
-          f"({dt}s)", flush=True)
-    return {"rc": rc, "sec": dt, "timed_out": timed_out}
+    return results
 
 
 def main():
     names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    known = [g.name for g in GATES] + [n for n, _ in STREAM_GATES]
+    known = [g.name for g in GATES] + STREAM_GATES
     unknown = [n for n in names if n not in known]
     if unknown:
         sys.exit(f"unknown gate(s) {unknown}; known: {known}")
     streams = [] if "--skip-streams" in sys.argv else STREAM_GATES
     gates = [g for g in GATES if not names or g.name in names]
-    streams = [s for s in streams if not names or s[0] in names]
+    streams = [s for s in streams if not names or s in names]
     t0 = time.time()
     results = corpus_gates(gates) if gates else {}
-    for name, main_class in streams:
-        results[name] = stream_gate(name, main_class)
+    if streams:
+        results.update(stream_gates(streams))
     fail = sum(r["rc"] != 0 for r in results.values())
     if len(results) == len(known):
         with open(REPO / "GATESWEEP.json", "w") as f:

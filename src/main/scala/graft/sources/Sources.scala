@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Batch sources (SURVEY §2.1 S6–S8) and the streaming event source (S1).
+/** Batch sources (SURVEY §2.1 S6–S8) and the ingest spool stream (S5).
   *
   * The reference's whole-file reader (utils/utils.c:67-136) and recursive
   * directory walker (utils/utils.c:138-232) map to Spark's `binaryFile`
@@ -16,10 +16,6 @@ object Sources {
   /** S6: whole-document JSON (one JSON object per file). */
   def jsonDocument(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", true).json(path)
-
-  /** JSON-lines event feed. */
-  def jsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
 
   /** S7: whole-file byte scan with metadata (path, modificationTime,
     * length, content). */
@@ -80,15 +76,6 @@ object Sources {
     }
     r
   }
-
-  /** S1 (dev form): file-stream source over an events directory; the
-    * production form is format("kafka") with identical downstream plan.
-    * `cleanSource`/`archiveDir`: see [[jsonEventStream]]. */
-  def eventStream(spark: SparkSession, dir: String, schema: StructType,
-      cleanSource: Option[String] = None,
-      archiveDir: Option[String] = None): DataFrame =
-    withCleanup(spark.readStream.schema(schema), cleanSource, archiveDir)
-      .parquet(dir)
 
   /** S5 spool consumer: NDJSON file-stream over a
     * [[graft.streaming.HttpIngest]] spool directory — one JSON event per

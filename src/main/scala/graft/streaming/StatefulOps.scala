@@ -464,8 +464,4 @@ object StatefulOps {
       }
       .start()
   }
-
-  /** Typed view of an events DataFrame (batch or stream). */
-  def asEvents(df: DataFrame): Dataset[Event] =
-    df.selectExpr("event_id", "ts", "user_id", "event_type", "value").as[Event]
 }

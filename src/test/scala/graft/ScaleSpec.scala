@@ -75,11 +75,7 @@ class ScaleSpec extends SparkTestBase {
 
   test("keep-latest on the transformWithState API (RocksDB state)") {
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = MemoryStream[Event]
       val q = StatefulOps.keepLatestPerUserTws(ms.toDS())
         .writeStream.format("memory").queryName("tws").outputMode("update").start()
@@ -90,9 +86,6 @@ class ScaleSpec extends SparkTestBase {
         q.processAllAvailable()
         assert(spark.table("tws").as[Event].collect().map(_.event_id).toSet === Set(1L))
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

@@ -14,8 +14,7 @@ trait SparkTestBase extends AnyFunSuite {
   protected def withRocksDb[A](body: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(key, graft.tools.StreamGates.RocksDbProvider)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)

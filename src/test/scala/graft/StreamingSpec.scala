@@ -239,11 +239,7 @@ class StreamingSpec extends SparkTestBase {
     // that each op's state classes serialize on the disk-backed
     // provider, their semantics have their own tests
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // sharded Bloom bitmap state: cross-batch duplicate still dropped
       val ms1 = MemoryStream[(String, String)]
       val q1 = StatefulOps.streamingBloomDedup(ms1.toDS(), shards = 4)
@@ -282,9 +278,6 @@ class StreamingSpec extends SparkTestBase {
         assert(spark.table("rk_cms").as[Seq[Long]].head() ===
           Seq("x", "y", "x").foldLeft(agg.zero)((b, t) => agg.reduce(b, t)).toSeq)
       } finally q3.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -492,11 +485,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stateful dedup runs on the RocksDB state store (100 TB state path)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms = newEvents()
       val q = StatefulOps.dedupWithinWatermark(ms.toDF(), "30 minutes", Seq("event_id"))
         .writeStream.format("memory").queryName("rocks").outputMode("append").start()
@@ -507,11 +496,6 @@ class StreamingSpec extends SparkTestBase {
         q.processAllAvailable()
         assert(spark.table("rocks").count() === 2)
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
