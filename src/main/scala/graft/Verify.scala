@@ -16,12 +16,6 @@ object Verify {
     require(args.length >= 2 && args.length % 2 == 0,
       "usage: Verify sfDir outDir [sfDir outDir ...]")
     val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // GRAFT_VERIFY_ONLY=q82_semantic_dedup,q97_hybrid_curation runs a
-    // subset (iteration tooling; the driver leaves it unset → full run).
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(
-      names => SparkEntry.queries.filter { case (n, _) => names(n) })
     // coalesce(1) is a DUMP convenience (one parquet file per query
     // for the driver's compare) — on corpus-sized outputs it funnels
     // the whole result through one task, which at sf10 needs GBs of
@@ -29,7 +23,7 @@ object Verify {
     // under test. The memory soak sets GRAFT_VERIFY_NO_COALESCE=1 to
     // measure the engine, not the dump; the driver leaves it unset.
     run(spark, args.grouped(2).map { case Array(sf, out) => (sf, out) }.toSeq,
-      selected, coalesce = !sys.env.contains("GRAFT_VERIFY_NO_COALESCE"))
+      SparkEntry.queries, coalesce = !sys.env.contains("GRAFT_VERIFY_NO_COALESCE"))
     spark.stop()
   }
 

@@ -735,9 +735,7 @@ object Dedup {
     * is the conservative figure used). ~64 MB / 48 ≈ 1.3 MB of text per
     * task — the budget that pins the expansion stage's shuffle-write
     * buffer at ANY corpus size. */
-  val ShingleTaskBytes: Long =
-    sys.env.get("GRAFT_SHINGLE_TASK_BYTES").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+  val ShingleTaskBytes: Long = 64L * 1024 * 1024
   val ShingleExpansionPerByte: Int = 48
 
   /** In-memory bytes of the CARRIED banded frame per stored text byte
@@ -767,31 +765,23 @@ object Dedup {
     textBytes < 0L ||
       textBytes > MaxBroadcastCarryBytes / CarriedBytesPerTextByte
 
-  /** Text-volume probe cache for [[bandedSignatures]]' re-spread and
-    * broadcast-gate decisions, keyed by the canonicalized source PLAN
-    * (full structural equality — ADVICE r14: a bare 32-bit hashCode key
-    * could collide two lineages, and the stale value doesn't just
-    * mis-size the re-spread, it can flip the broadcast gate open on a
-    * corpus-sized frame — the executor-OOM class the gate prevents).
-    * Parquet sizeInBytes stats reflect COMPRESSED bytes and under-count
-    * repetitive text by 10–20×, so the value is real bytes: priced from
-    * parquet FOOTERS when the lineage allows
-    * ([[graft.sources.ParquetStats.textBytesUpperBound]] — no data
-    * read), else one column-pruned `sum(octet_length(text))` scan per
-    * distinct source lineage per JVM (bench reps and the multi-call
-    * cluster queries hit the cache). A file mutated in place under an
-    * already-cached path can still mis-size the re-spread (both keys and
-    * footer pricing see the same path) — re-reads of a CHANGED file set
-    * re-key naturally (the file listing is part of the relation).
-    *
-    * BOUNDED: a long-lived driver servicing many distinct corpora would
-    * otherwise accumulate plan trees without limit (and a LocalRelation
-    * key pins its in-memory rows); past [[TextBytesCacheMax]] lineages
-    * the cache is cleared — the next probe per lineage re-prices, which
-    * is metadata-cheap for parquet and one scan otherwise. */
-  private[graft] val TextBytesCacheMax = 512
-  private val textBytesCache = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Long]()
+  /** The source text volume, `sum(octet_length(textCol))`, feeding
+    * [[bandedSignatures]]' re-spread and [[candidatePairs]]' broadcast
+    * gate. Parquet sizeInBytes stats reflect COMPRESSED bytes and
+    * under-count repetitive text by 10–20×, so the value is real bytes:
+    * one column-pruned exact scan per distinct source lineage and file
+    * listing per session ([[graft.core.Measured]] — bench reps and the
+    * multi-call cluster queries hit the memo; a table overwritten in
+    * place is scanned again). Exact, never an estimate: both decisions
+    * are safe under over-counting and unsafe under under-counting (a
+    * corpus-sized broadcast HashedRelation, the executor-OOM class the
+    * gate prevents). */
+  private[graft] def textBytes(df: DataFrame, textCol: String): Long = {
+    val text = df.select(col(textCol).as("__text"))
+    graft.core.Measured.once(text, "textBytes")(
+      text.agg(coalesce(sum(octet_length(col("__text"))), lit(0L)))
+        .head().getLong(0))
+  }
 
   /** The shared scan→shingle→signature→band pipeline: one scan → compiled
     * shingling (NgramShingles) → per-element hashing (HashedSet) →
@@ -818,7 +808,7 @@ object Dedup {
     * 128 MB-split 100 TB scan it would be multi-GB per task. The input
     * is re-spread so each expansion task gets ≈
     * [[ShingleTaskBytes]] / expansion of text — sized from an EXACT
-    * cached text-volume probe (see [[textBytesCache]]; parquet size
+    * memoized text-volume probe (see [[textBytes]]; parquet size
     * stats under-count compressed text by 10–20× and cannot drive
     * this) — so one NARROW shuffle of the text buys a task peak that is
     * constant in corpus size, file count and split sizing. Skipped
@@ -857,19 +847,7 @@ object Dedup {
       else (graft.functions.GraftFunctions.wordShingles(_: Column, shingleSize))
 
     val src0 = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    val planKey = src0.queryExecution.analyzed.canonicalized
-    if (textBytesCache.size() >= TextBytesCacheMax) textBytesCache.clear()
-    val textBytes: Long = textBytesCache.computeIfAbsent(planKey, _ =>
-      java.lang.Long.valueOf(
-        // footer-priced when the text column traces to a plain parquet
-        // scan with no dictionary-encoded data pages (a conservative
-        // over-count — see ParquetStats' safety analysis); exact scan
-        // otherwise. Both feed the same two decisions, which are safe
-        // under over-counting and unsafe under under-counting.
-        graft.sources.ParquetStats.textBytesUpperBound(src0, "__text")
-          .getOrElse(
-            src0.agg(coalesce(sum(octet_length(col("__text"))), lit(0L)))
-              .head().getLong(0))))
+    val textBytes = this.textBytes(df, textCol)
     val needed = math.min(1 << 18, // runaway guard
       math.ceil(textBytes.toDouble * ShingleExpansionPerByte
         / ShingleTaskBytes)).toInt
@@ -1094,8 +1072,8 @@ object Dedup {
     *  2. MEASURED TEXT VOLUME. `textBytes` persists the corpus-volume
     *     probe the signatures were built from, so staged-corpus probes
     *     ([[incrementalNearDupsStaged]]'s path overload) price their
-    *     broadcast-vs-merge regime without ever re-scanning (or even
-    *     footer-sweeping) the corpus. -1 = unknown (a pre-sidecar store
+    *     broadcast-vs-merge regime without ever re-scanning the
+    *     corpus. -1 = unknown (a pre-sidecar store
     *     adopted by append) — consumers treat unknown as over-cap, the
     *     conservative regime. Appends ACCUMULATE batch bytes into it. */
   final case class SigFormat(version: Int, numHashes: Int, bands: Int,
@@ -1291,8 +1269,8 @@ object Dedup {
     * `_graft_sig_format.json` sidecar to (a) fail fast on a
     * format/parameter mismatch (see [[SigFormat]]) and (b) pick the
     * corpus side's join regime from the PERSISTED measured text volume —
-    * the staged probe never scans (or footer-sweeps) the corpus to price
-    * it (VERDICT r14 item 1). Unknown volume (pre-sidecar store) is
+    * the staged probe never scans the corpus to price it (VERDICT r14
+    * item 1). Unknown volume (pre-sidecar store) is
     * treated as over-cap: the conservative sort-merge regime. */
   def incrementalNearDupsStaged(
       spark: org.apache.spark.sql.SparkSession,

@@ -196,43 +196,20 @@ object Similarity {
   }
 
   /** Corpus row count feeding the auto-knob rules
-    * ([[occupancyBits]]-derived plane counts / quantizer k), memoized per
-    * (session, canonicalized plan) so repeated invocations over the same
-    * corpus — q48/q82/q97/q125 in one Verify/Bench run, or bench reps —
-    * pay the narrow count scan ONCE, not once per plan construction
-    * (ADVICE r9). The memo assumes the corpus is immutable for the
-    * session's lifetime (true for a batch run over parquet snapshots);
-    * a long-lived session whose underlying table grows should
-    * [[clearCountCache]] so the knobs re-derive.
+    * ([[occupancyBits]]-derived plane counts / quantizer k), measured once
+    * per session, lineage and file listing ([[graft.core.Measured]]), so
+    * repeated invocations over the same corpus — q48/q82/q97/q125 in one
+    * Verify/Bench run, or bench reps — pay the narrow count scan ONCE,
+    * not once per plan construction (ADVICE r9), while a table
+    * overwritten in place is counted again.
     *
     * PARITY CONTRACT: pass the same UNFILTERED corpus the oracle's
     * COUNT(*) sees — the derived knob is mirrored integer-exactly in
     * DuckDB from COUNT(*) of the full table, so deriving it from a
     * filtered frame would silently diverge the two engines' parameters
     * (same contract as `targetOccupancy`/`targetCell` themselves). */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), java.lang.Long]
-  /** Entries hold strong session/plan references, so the memo must not
-    * grow unbounded or outlive its session (ADVICE r10): every lookup
-    * first evicts entries whose SparkContext has stopped (a stopped
-    * session can never hit again — retaining it pins the session AND
-    * its analyzed plans), and a hard cap bounds the pathological
-    * many-distinct-corpora session by dropping the whole memo — a full
-    * re-count is a correctness no-op, the memo is purely a
-    * repeated-invocation optimization. */
-  private val countCacheCap = 256
-  private[graft] def corpusCount(df: DataFrame): Long = {
-    countCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    if (countCache.size > countCacheCap) countCache.clear()
-    countCache.computeIfAbsent(
-      (df.sparkSession, df.queryExecution.analyzed.canonicalized),
-      _ => java.lang.Long.valueOf(df.count())).longValue()
-  }
-
-  /** Drop memoized corpus counts (see [[corpusCount]]) — for long-lived
-    * sessions whose tables change between runs. */
-  def clearCountCache(): Unit = countCache.clear()
+  private[graft] def corpusCount(df: DataFrame): Long =
+    graft.core.Measured.once(df, "rows")(df.count())
 
   /** Embedding-cosine near-duplicate pairs: candidates from shared
     * random-hyperplane buckets (the scale path — no n² comparison), exact

@@ -7,6 +7,7 @@ import graft.streaming.EventWindows
   * (file-stream source → watermarked tumbling window agg → memory sink)
   * over the events table split into N files, and reports events/sec.
   * Usage: runMain graft.tools.StreamBench [sfDir] [nFiles] [filesPerTrigger]
+  * The staging directory is deleted when the run ends.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
@@ -41,6 +42,7 @@ object StreamBench {
     val nBatches = q.recentProgress.length
     q.stop()
     println(f"""{"metric":"stream_events_per_sec","value":${total / secs}%.0f,"events":$total,"sec":$secs%.2f,"microbatches":$nBatches}""")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
     spark.stop()
   }
 }

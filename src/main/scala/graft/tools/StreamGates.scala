@@ -28,7 +28,8 @@ import graft.streaming.{Event, EventWindows, StatefulOps}
   * (0 = passed) and `complete`; a gate that throws is recorded
   * `complete: false` with its message, and the next gate still runs.
   * Prints `[streamgates] <GATE> done in <s> s` once a gate's artifact is
-  * written, and exits 1 unless every gate completed and passed. Cores
+  * written; its checkpoint directories are deleted then, whether it
+  * passed or not. Exits 1 unless every gate completed and passed. Cores
   * follow `SPARK_GRAFT_CPUS` (default 4), like Verify and Bench.
   */
 object StreamGates {
@@ -90,6 +91,7 @@ object StreamGates {
       // no `done` line without a fresh artifact: the sweep marks the gate
       // incomplete rather than reading a previous run's file
       val written = write(outDir.resolve(s"${g.name}.json"), line)
+      dropCheckpoints()
       if (written) System.err.println(f"[streamgates] ${g.name} done in ${
         (System.nanoTime() - t0) / 1e9}%.1f s")
       o.pass && written
@@ -126,8 +128,23 @@ object StreamGates {
     Outcome(s"""$head,"all_ok":$allOk,"ops":$ops""", allOk)
   }
 
-  def ckpt(name: String): String =
-    Files.createTempDirectory(s"graft-stream-$name").toString
+  /** The running gate's checkpoint directories. */
+  private val checkpoints = new ConcurrentLinkedQueue[Path]()
+
+  def ckpt(name: String): String = {
+    val dir = Files.createTempDirectory(s"graft-stream-$name")
+    checkpoints.add(dir)
+    dir.toString
+  }
+
+  /** Deletes the checkpoint directories made since the last call, after
+    * closing the state stores loaded on them: state-store maintenance
+    * would otherwise still visit the deleted directories. */
+  private def dropCheckpoints(): Unit = {
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    Iterator.continually(checkpoints.poll()).takeWhile(_ != null)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
 
   implicit class StartAs(ds: Dataset[_]) {
     /** Starts `ds` as query `name` into sink `format` (a "memory" sink is

@@ -11,7 +11,10 @@ import scala.jdk.CollectionConverters._
   * regime both read `autoBroadcastJoinThreshold` from them). Each
   * session is built fresh, so the confs are the builder's own. No other
   * file in src/main builds a session, so the tools (probes, plan dumps,
-  * streaming gates) run on the same confs. */
+  * streaming gates) run on the same confs, and only tools and mains read
+  * the environment, so no knob outside a session's confs changes what a
+  * library call plans. Measured values ([[graft.core.Measured]]) live
+  * no longer than their session. */
 class SessionConfSpec extends AnyFunSuite {
 
   private def sqlConfs(build: => SparkSession): Map[String, String] = {
@@ -32,15 +35,48 @@ class SessionConfSpec extends AnyFunSuite {
     assert(bench === local)
   }
 
-  test("GraftSession.local is the only SparkSession builder in src/main") {
+  /** The .scala files under `src/main/scala/<dir>` whose text contains
+    * any of `needles`, relative to src/main/scala. */
+  private def sourcesContaining(dir: String, needles: String*): List[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val files = java.nio.file.Files.walk(root)
-    val builders = try files.iterator().asScala
+    val top = root.resolve(dir)
+    assert(java.nio.file.Files.isDirectory(top), top.toAbsolutePath)
+    val files = java.nio.file.Files.walk(top)
+    try files.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(f => java.nio.file.Files.readString(f).contains("SparkSession.builder"))
+      .filter { f =>
+        val text = java.nio.file.Files.readString(f)
+        needles.exists(text.contains)
+      }
       .map(root.relativize(_).toString).toList.sorted
     finally files.close()
-    assert(builders === List("graft/core/GraftSession.scala"))
+  }
+
+  test("GraftSession.local is the only SparkSession builder in src/main") {
+    assert(sourcesContaining("graft", "SparkSession.builder") ===
+      List("graft/core/GraftSession.scala"))
+  }
+
+  test("only tools and mains read the environment") {
+    val libraries = Seq("core", "operators", "queries", "sources",
+      "streaming", "functions", "multimodal", "plans")
+    assert(libraries.flatMap(d =>
+      sourcesContaining(s"graft/$d", "sys.env", "System.getenv")) === Nil)
+  }
+
+  test("stopping a session evicts its measured values") {
+    import graft.core.Measured
+    import graft.operators.Similarity
+    val old = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    old.foreach(_.stop())
+    val first = graft.core.GraftSession.local(4)
+    assert(Similarity.corpusCount(first.range(7).toDF()) === 7)
+    assert(Measured.sessions.contains(first))
+    first.stop()
+    // left running: the remaining suites share this session
+    val next = graft.core.GraftSession.local(4)
+    assert(Similarity.corpusCount(next.range(5).toDF()) === 5)
+    assert(!Measured.sessions.contains(first))
+    assert(Measured.sessions.contains(next))
   }
 }

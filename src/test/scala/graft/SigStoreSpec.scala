@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.operators.Dedup
-import graft.sources.{Layout, ParquetStats}
+import graft.operators.{Dedup, Similarity}
+import graft.sources.Layout
 
-/** r15 pins: the metadata-priced text-volume probe (ParquetStats) and
-  * the staged-signature store format sidecar (ADVICE r14 medium +
-  * VERDICT r14 item 1).
+/** Pins of the LSH family's text volume and the staged-signature store
+  * format sidecar (ADVICE r14 medium + VERDICT r14 item 1).
   *
-  *  - the footer probe must NEVER under-count (under-counting flips the
-  *    LSH family's broadcast gate open on a corpus-sized frame), must
-  *    run ZERO Spark jobs (that is the whole point: metadata, not a
-  *    scan), and must refuse lineages it cannot price;
+  *  - the text volume is one exact `sum(octet_length)` scan, memoized per
+  *    session, lineage and file listing ([[graft.core.Measured]]): a
+  *    re-read of an unchanged table runs no Spark job, and a table
+  *    overwritten in place is measured again (a stale volume could open
+  *    the broadcast gate on a corpus-sized frame);
   *  - the sidecar must fail-fast a mixed-format or mixed-parameter
   *    append/probe BEFORE any corrupting write, and must carry the
   *    measured text volume through stage → append accumulation so the
@@ -38,126 +38,51 @@ class SigStoreSpec extends SparkTestBase {
     df.agg(coalesce(sum(octet_length(col("text"))), lit(0L)))
       .head().getLong(0)
 
-  // ---- ParquetStats ------------------------------------------------------
+  // ---- measured volume and count -----------------------------------------
 
-  test("footer probe: never under-counts, on plain AND dictionary-heavy corpora") {
-    for ((tag, d) <- Seq(("plain", docs(400)), ("dict", docs(4000, repeatEvery = 7)))) {
-      val dir = tmpDir(s"probe-$tag")
-      d.repartition(3).write.mode("overwrite").parquet(s"$dir/t.parquet")
-      val back = spark.read.parquet(s"$dir/t.parquet")
-      val exact = exactBytes(back)
-      ParquetStats.textBytesUpperBound(back, "text") match {
-        case Some(priced) =>
-          assert(priced >= exact,
-            s"$tag: footer price $priced UNDER-counts exact $exact")
-          assert(priced <= exact * 2 + 8192,
-            s"$tag: footer price $priced wildly over exact $exact — useless bound")
-        case None => // refusing is always safe; but a Spark-4-written
-          // plain corpus should be priceable (SizeStatistics or
-          // EncodingStats must be present)
-          fail(s"$tag: Spark-written parquet was not footer-priceable")
-      }
-    }
+  test("a table overwritten in place is measured again (same path, schema and file count)") {
+    val path = tmpDir("overwrite") + "/t.parquet"
+    docs(300).repartition(2).write.parquet(path)
+    val before = spark.read.parquet(path)
+    assert(Similarity.corpusCount(before) == 300)
+    assert(Dedup.textBytes(before, "text") == exactBytes(docs(300)))
+    docs(120, repeatEvery = 7).repartition(2).write.mode("overwrite").parquet(path)
+    val after = spark.read.parquet(path)
+    assert(after.inputFiles.length == 2 && after.schema == before.schema)
+    assert(Similarity.corpusCount(after) == 120, "stale corpus count")
+    assert(Dedup.textBytes(after, "text") == exactBytes(docs(120, repeatEvery = 7)),
+      "stale text volume")
   }
 
-  /** A corpus as an OLDER writer would produce it: no SizeStatistics
-    * (parquet < 1.15 — most existing data lakes), chosen page version /
-    * dictionary setting. Spark's own writer always emits SizeStatistics
-    * (the conf flag isn't wired through ParquetOutputFormat in this
-    * build), so the EncodingStats fallback path needs parquet-mr's
-    * writer directly. */
-  private def writeLegacyStyle(dir: String, v2: Boolean, n: Int): Unit = {
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.schema.MessageTypeParser
-    import org.apache.parquet.column.ParquetProperties.WriterVersion
-    val schema = MessageTypeParser.parseMessageType(
-      "message doc { required int64 doc_id; required binary text (UTF8); }")
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
-      .withType(schema)
-      .withSizeStatisticsEnabled(false)
-      .withDictionaryEncoding(false) // v2 emits DELTA_BYTE_ARRAY, v1 PLAIN
-      .withWriterVersion(
-        if (v2) WriterVersion.PARQUET_2_0 else WriterVersion.PARQUET_1_0)
-      .withConf(spark.sessionState.newHadoopConf())
-      .build()
-    val f = new SimpleGroupFactory(schema)
-    try (0 until n).foreach { i =>
-      w.write(f.newGroup().append("doc_id", i.toLong)
-        .append("text", s"unique document $i with its own words ${i * 37}"))
-    } finally w.close()
-  }
-
-  test("footer probe refuses v2-writer DELTA_BYTE_ARRAY pages (prefix-sharing under-counts)") {
-    // The EncodingStats fallback path (writers without SizeStatistics)
-    // must be a WHITELIST: DELTA_BYTE_ARRAY prefix-shares consecutive
-    // values, so total_uncompressed_size can UNDER-count — the unsafe
-    // direction for the broadcast gate.
-    val dir = tmpDir("v2pages")
-    writeLegacyStyle(s"$dir/v2.parquet", v2 = true, n = 300)
-    assert(ParquetStats.textBytesUpperBound(
-      spark.read.parquet(s"$dir/v2.parquet"), "text").isEmpty,
-      "DELTA_BYTE_ARRAY pages must disqualify the footer bound")
-    // same writer vintage, v1 PLAIN pages: priceable and an upper bound
-    writeLegacyStyle(s"$dir/v1.parquet", v2 = false, n = 300)
-    val v1 = spark.read.parquet(s"$dir/v1.parquet")
-    val priced = ParquetStats.textBytesUpperBound(v1, "text")
-      .getOrElse(fail("plain v1 pages without size stats must be priceable"))
-    assert(priced >= exactBytes(v1), "PLAIN fallback bound under-counts")
-  }
-
-  test("footer probe runs ZERO Spark jobs (metadata only) and traces spread/alias lineage") {
-    val dir = tmpDir("nojobs")
-    docs(300).write.mode("overwrite").parquet(s"$dir/t.parquet")
-    // the q49-family lineage shape: load → repartition (Tables.spread)
-    // → project-alias (bandedSignatures' src0)
-    val frame = spark.read.parquet(s"$dir/t.parquet").repartition(4)
-      .select(col("doc_id").as("id"), col("text").as("__text"))
+  test("a re-read of an unchanged table is measured from the memo: no Spark job") {
+    val path = tmpDir("memo") + "/t.parquet"
+    docs(200).repartition(2).write.parquet(path)
+    val first = spark.read.parquet(path)
+    val measured = (Similarity.corpusCount(first), Dedup.textBytes(first, "text"))
+    assert(measured == ((200L, exactBytes(docs(200)))))
+    // a fresh index over the same listing (the schema given, so the read
+    // itself runs no inference job)
+    val again = spark.read.schema(first.schema).parquet(path)
+    // only jobs of this group count: events of the jobs above may still be
+    // queued when the listener is added
     var jobs = 0
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties.getProperty("spark.jobGroup.id") == "remeasure") jobs += 1
     }
     spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup("remeasure", "re-measure an unchanged table")
     try {
-      val priced = ParquetStats.textBytesUpperBound(frame, "__text")
-      // listener delivery is async; a job started during the probe is
+      val remeasured = (Similarity.corpusCount(again), Dedup.textBytes(again, "text"))
+      // listener delivery is async; a job started by the calls above is
       // delivered well within this bound
       Thread.sleep(500)
-      assert(priced.isDefined, "lineage should be footer-priceable")
-      assert(jobs == 0, s"footer probe launched $jobs Spark jobs — it scanned")
-      val exact = exactBytes(
-        spark.read.parquet(s"$dir/t.parquet").select(col("text")))
-      assert(priced.get >= exact)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  test("distributed footer sweep (files > driver max) prices identically to the driver sweep") {
-    val dir = tmpDir("dist")
-    docs(500).repartition(10).write.mode("overwrite").parquet(s"$dir/t.parquet")
-    val t = spark.read.parquet(s"$dir/t.parquet")
-    val onDriver = ParquetStats.textBytesUpperBound(t, "text")
-    assert(onDriver.isDefined)
-    System.setProperty("graft.footer.driver.max", "4") // 10 files > 4 → Spark job
-    try {
-      val distributed = ParquetStats.textBytesUpperBound(t, "text")
-      assert(distributed == onDriver,
-        s"distributed sweep $distributed != driver sweep $onDriver")
-    } finally System.clearProperty("graft.footer.driver.max")
-  }
-
-  test("footer probe refuses unpriceable lineages (filter, computed column, non-parquet)") {
-    val dir = tmpDir("refuse")
-    docs(100).write.mode("overwrite").parquet(s"$dir/t.parquet")
-    val t = spark.read.parquet(s"$dir/t.parquet")
-    // a filtered frame prices what flows, not the corpus → exact scan path
-    assert(ParquetStats.textBytesUpperBound(
-      t.filter(col("doc_id") < 10), "text").isEmpty)
-    // computed column: footer bytes don't describe it
-    assert(ParquetStats.textBytesUpperBound(
-      t.select(concat(col("text"), col("text")).as("text")), "text").isEmpty)
-    // non-parquet source (in-memory): nothing to price
-    assert(ParquetStats.textBytesUpperBound(docs(10), "text").isEmpty)
+      assert(remeasured == measured)
+      assert(jobs == 0, s"re-measuring an unchanged table ran $jobs Spark jobs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   // ---- staged-signature sidecar ------------------------------------------
@@ -395,36 +320,5 @@ class SigStoreSpec extends SparkTestBase {
       Dedup.readSigFormat(spark, buckets)
     }
     assert(e.getMessage.contains("truncated"), e.getMessage)
-  }
-
-  test("footer probe: suffix-free part files are priced; a corrupt file disqualifies, not throws") {
-    // Hive/Impala-style part files carry no .parquet suffix — a name
-    // filter would silently DROP them from the sweep (an under-counted
-    // bound, the forbidden direction)
-    val dir = tmpDir("suffixfree")
-    docs(200).repartition(2).write.mode("overwrite").parquet(s"$dir/t")
-    val d = new java.io.File(s"$dir/t")
-    var i = 0
-    for (f <- d.listFiles() if f.getName.endsWith(".parquet")) {
-      assert(f.renameTo(new java.io.File(d, f"$i%06d_0"))); i += 1
-    }
-    val t = spark.read.parquet(s"$dir/t")
-    val priced = ParquetStats.textBytesUpperBound(t, "text")
-      .getOrElse(fail("suffix-free part files were not footer-priced"))
-    assert(priced >= exactBytes(t))
-
-    // a 0-byte crash leftover: the exact-scan fallback honors
-    // ignoreCorruptFiles, so the metadata path must disqualify (None),
-    // never abort the dedup call
-    val dir2 = tmpDir("corrupt")
-    docs(50).repartition(1).write.mode("overwrite").parquet(s"$dir2/t")
-    new java.io.FileOutputStream(s"$dir2/t/part-zero.parquet").close()
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-    try {
-      val back = spark.read.parquet(s"$dir2/t")
-      assert(ParquetStats.textBytesUpperBound(back, "text").isEmpty,
-        "an unreadable footer must disqualify the bound")
-      assert(exactBytes(back) > 0) // the fallback the caller takes
-    } finally spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
   }
 }
