@@ -24,7 +24,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
   *
   * Run-varying tokens are scrubbed so reruns diff clean:
   * expression/plan ids (#123, plan_id=456), temp staging dirs, result
-  * ids, and codegen/query-stage ids. Usage:
+  * ids, codegen/query-stage ids and broadcast-stage sizes. Usage:
   * runMain graft.tools.PlansFull [sfDir] → PLANS_full.md + PLANS.md.
   */
 object PlansFull {
@@ -80,6 +80,11 @@ object PlansFull {
     // in its distinct-Expand branch ORDER (seed-keyed) — the one known
     // cosmetic residual a reviewer should ignore when diffing
     .replaceAll("uuid\\(Some\\(-?\\d+\\)\\)", "uuid(Some(X))")
+    // a broadcast relation's size is rounded up to whole memory pages,
+    // and the page size follows the driver heap: the same plan reads
+    // 8.x MiB at one -Xmx and 16.x MiB at another. Its rowCount stays.
+    .replaceAll("(BroadcastQueryStage \\(\\d+\\), Statistics\\(sizeInBytes=)[^,)]+",
+      "$1X")
     // higher-order-function lambda variables are named from a JVM-wide
     // counter (x_27, acc_31), so every lambda built by an earlier query
     // renumbers the ones after it

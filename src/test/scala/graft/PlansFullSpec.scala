@@ -71,4 +71,18 @@ class PlansFullSpec extends SparkTestBase {
         |Arguments: 2
         |""".stripMargin)
   }
+
+  test("scrub masks broadcast-stage sizes, which follow the heap, and keeps row counts") {
+    val at = (size: String) =>
+      s"""+- BroadcastHashJoin Inner BuildRight (12)
+         |   :- ShuffleQueryStage (4), Statistics(sizeInBytes=624.0 B, rowCount=6)
+         |   +- BroadcastQueryStage (11), Statistics(sizeInBytes=$size, rowCount=1.27E+4)
+         |""".stripMargin
+    val scrubbed = graft.tools.PlansFull.scrub(at("8.1 MiB"))
+    assert(scrubbed === graft.tools.PlansFull.scrub(at("16.1 MiB")))
+    assert(scrubbed.contains(
+      "BroadcastQueryStage (11), Statistics(sizeInBytes=X, rowCount=1.27E+4)"), scrubbed)
+    assert(scrubbed.contains(
+      "ShuffleQueryStage (4), Statistics(sizeInBytes=624.0 B, rowCount=6)"), scrubbed)
+  }
 }
