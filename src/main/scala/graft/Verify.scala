@@ -34,10 +34,10 @@ object Verify {
   def run(spark: SparkSession, pairs: Seq[(String, String)],
       queries: Iterable[(String, (SparkSession, String) => DataFrame)],
       coalesce: Boolean = true): Unit = {
-    // Execution-memory telemetry for the memory soak (scripts/
-    // memory_soak.py): spill and peak-execution-memory totals across
-    // every task in the run, dumped to metrics.json. Always on — one
-    // listener, counters only.
+    // Execution-memory telemetry for the memory soaks (MEMSOAK and
+    // MEMSOAK_sf10f in scripts/soak.py): spill and peak-execution-memory
+    // totals across every task in the run, dumped to metrics.json.
+    // Always on — one listener, counters only.
     val memSpilled = new java.util.concurrent.atomic.AtomicLong
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong
     val peakExec = new java.util.concurrent.atomic.AtomicLong

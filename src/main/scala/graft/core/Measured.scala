@@ -51,7 +51,9 @@ object Measured {
   private[graft] def sessions: Set[SparkSession] =
     memo.keySet.asScala.map(_.session).toSet
 
-  private def listing(plan: LogicalPlan): Seq[(String, Long, Long)] =
+  /** Path, length and mtime of every file `plan` reads, from the file
+    * indexes' own listings: no job, no filesystem call. */
+  private[graft] def listing(plan: LogicalPlan): Seq[(String, Long, Long)] =
     plan.collectWithSubqueries { case r: LogicalRelation => r.relation }
       .collect { case fs: HadoopFsRelation => fs.location }
       .collect { case index: PartitioningAwareFileIndex => index.allFiles() }

@@ -757,7 +757,7 @@ object Dedup {
   /** The carried-frame broadcast gate, overflow-safe: true when
     * `textBytes` priced at [[CarriedBytesPerTextByte]] exceeds
     * [[MaxBroadcastCarryBytes]]. Division, not multiplication — a huge
-    * volume (corrupted sidecar, accumulated append drift) times 20
+    * volume (corrupted manifest, accumulated append drift) times 20
     * wraps Long negative, which would OPEN the gate on exactly the
     * corpus the cap exists to deny. Negative volume = unknown =
     * over-cap (never risk the broadcast regime on an unpriced frame). */
@@ -1041,171 +1041,64 @@ object Dedup {
     graft.sources.Layout.atomicStagedWrite(df.sparkSession, path) { tmp =>
       val (banded, textBytes) = bandedSignaturesWithBytes(df, idCol, textCol,
         numHashes, bands, shingleSize, shingler)
-      graft.sources.Layout.clusteredWrite(
-        banded.select("doc_id", "sh", "band", "bkey"),
-        tmp, Seq("band", "bkey"), numFiles)
-      writeSigFormat(df.sparkSession, tmp,
-        SigFormat(SigFormatVersion, numHashes, bands, shingleSize, textBytes,
-          LayoutClustered))
+      val rows = banded.select("doc_id", "sh", "band", "bkey")
+      graft.sources.Layout.clusteredWrite(rows, tmp, Seq("band", "bkey"), numFiles)
+      graft.sources.Layout.writeManifest(df.sparkSession, tmp, sigManifest(
+        SigsClustered, numHashes, bands, shingleSize, rows.schema, textBytes))
     }
 
-  // ---- staged-signature store format sidecar ----------------------------
+  // ---- staged-signature store manifest ------------------------------------
 
-  /** Staged-signature store format descriptor, persisted as the
-    * `_graft_sig_format.json` sidecar inside every [[stageSignatures]] /
-    * [[stageSignatureBuckets]] table (underscore-prefixed — invisible to
-    * Spark's file index, participates in the atomic-commit scope).
-    * Exists for two reasons (ADVICE r14 + VERDICT r14 item 1):
-    *
-    *  1. FORMAT/PARAMETER GUARD. The signature format changed once
-    *     already (v1 carried `sh` as ARRAY<STRING>; v2 carries hashed
-    *     ARRAY<BIGINT>), and [[appendSignatureBuckets]] is map-only by
-    *     design — without a guard, appending v2 rows into a v1 store
-    *     silently creates a mixed-schema parquet table whose readers
-    *     fail (or mis-merge under mergeSchema) long after the
-    *     corrupting write. Parameter drift (numHashes/bands/shingleSize)
-    *     is worse: band keys from different parameters never collide
-    *     correctly, so a mismatched probe silently returns ZERO
-    *     candidates. Append and the path-based probe verify the sidecar
-    *     and fail fast with a restage message.
-    *
-    *  2. MEASURED TEXT VOLUME. `textBytes` persists the corpus-volume
-    *     probe the signatures were built from, so staged-corpus probes
-    *     ([[incrementalNearDupsStaged]]'s path overload) price their
-    *     broadcast-vs-merge regime without ever re-scanning the
-    *     corpus. -1 = unknown (a pre-sidecar store
-    *     adopted by append) — consumers treat unknown as over-cap, the
-    *     conservative regime. Appends ACCUMULATE batch bytes into it. */
-  final case class SigFormat(version: Int, numHashes: Int, bands: Int,
-      shingleSize: Int, textBytes: Long, layout: String)
+  /* Every [[stageSignatures]] / [[stageSignatureBuckets]] table carries a
+   * [[graft.sources.Layout.Manifest]] for two reasons:
+   *
+   *  1. FORMAT/PARAMETER GUARD. The signature format changed once
+   *     already (v1 carried `sh` as ARRAY<STRING>; v2 carries hashed
+   *     ARRAY<BIGINT>), and [[appendSignatureBuckets]] is map-only by
+   *     design — without a guard, appending v2 rows into a v1 store
+   *     silently creates a mixed-schema parquet table whose readers
+   *     fail long after the corrupting write. Parameter drift
+   *     (numHashes/bands/shingleSize) is worse: band keys from
+   *     different parameters never collide correctly, so a mismatched
+   *     probe silently returns ZERO candidates. And a bgrp-partitioned
+   *     append into a flat clustered table mixes directory layouts, so
+   *     partition discovery fails for every later reader. The kind is
+   *     the layout; append and the path-based probe check kind, version
+   *     and parameters and fail fast with a restage message.
+   *
+   *  2. MEASURED TEXT VOLUME. `text_bytes` persists the corpus-volume
+   *     probe the signatures were built from, so the path-based staged
+   *     probe prices its broadcast-vs-merge regime without re-scanning
+   *     the corpus. Appends ACCUMULATE batch bytes into it. */
 
-  private[graft] val SigFormatVersion = 2
-  private[graft] val SigFormatName = "_graft_sig_format.json"
+  private[graft] val SigVersion = 2
   /** [[stageSignatures]]' flat bkey-range-clustered layout. */
-  private[graft] val LayoutClustered = "bkey-clustered"
+  private[graft] val SigsClustered = "bkey-clustered"
   /** [[stageSignatureBuckets]]' hive `bgrp=` append-able layout. */
-  private[graft] val LayoutBuckets = "band-buckets"
+  private[graft] val SigsBuckets = "band-buckets"
 
-  private def writeSigFormat(spark: org.apache.spark.sql.SparkSession,
-      dir: String, f: SigFormat): Unit =
-    graft.sources.Layout.writeSidecar(spark, dir, SigFormatName,
-      s"""{"version":${f.version},"sh":"array<bigint>",""" +
-        s""""layout":"${f.layout}",""" +
-        s""""num_hashes":${f.numHashes},"bands":${f.bands},""" +
-        s""""shingle_size":${f.shingleSize},"text_bytes":${f.textBytes}}""")
+  private def sigParams(numHashes: Int, bands: Int,
+      shingleSize: Int): Map[String, Long] =
+    Map("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
+      "shingle_size" -> shingleSize.toLong)
 
-  private[graft] def readSigFormat(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[SigFormat] =
-    graft.sources.Layout.readSidecar(spark, dir, SigFormatName).map { txt =>
-      // writes are atomic (temp + rename-overwrite) so truncation should
-      // be impossible — but a truncated sidecar is uniquely dangerous
-      // (the regex would match a number's PREFIX digits, silently
-      // under-counting text_bytes), so refuse anything not ending in '}'
-      if (!txt.trim.endsWith("}"))
-        throw new IllegalStateException(
-          s"$SigFormatName in $dir is truncated: $txt — " +
-            "restage the signature table")
-      def num(k: String): Long =
-        (s""""$k":(-?\\d+)""").r.findFirstMatchIn(txt)
-          .getOrElse(throw new IllegalStateException(
-            s"$SigFormatName in $dir is unreadable (missing '$k'): $txt — " +
-              "restage the signature table"))
-          .group(1).toLong
-      // a sidecar without the layout key must not default to the
-      // APPEND-able layout: that would wave a bgrp-partitioned append
-      // into a flat clustered store (mixed directory layouts — every
-      // later reader fails partition discovery). Infer from the
-      // directory shape instead, the same observable the adopted-store
-      // branch of checkSigStore uses.
-      val layout = (s""""layout":"([^"]+)"""").r.findFirstMatchIn(txt)
-        .map(_.group(1))
-        // empty store → clustered: the safe (non-append-able) default
-        .getOrElse(observedLayout(spark, dir).getOrElse(LayoutClustered))
-      SigFormat(num("version").toInt, num("num_hashes").toInt,
-        num("bands").toInt, num("shingle_size").toInt, num("text_bytes"),
-        layout)
-    }
+  private def sigManifest(kind: String, numHashes: Int, bands: Int,
+      shingleSize: Int, schema: StructType,
+      textBytes: Long): graft.sources.Layout.Manifest =
+    graft.sources.Layout.Manifest(kind, SigVersion,
+      sigParams(numHashes, bands, shingleSize),
+      Map(graft.sources.Layout.Root -> schema.toDDL),
+      Map("text_bytes" -> textBytes))
 
-  /** The store layout as the directory shape shows it: all-bgrp= dirs →
-    * the append-able bucket layout, anything else → flat clustered;
-    * None for an empty/absent store. The ONE place the shape test
-    * lives — both the pre-layout-sidecar default and checkSigStore's
-    * adopted-store guard read it, so they can never disagree. */
-  private def observedLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val kids = if (fs.exists(p)) fs.listStatus(p).filter { st =>
-      !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    } else Array.empty[org.apache.hadoop.fs.FileStatus]
-    if (kids.isEmpty) None
-    else if (kids.forall(st => st.isDirectory &&
-        st.getPath.getName.startsWith("bgrp="))) Some(LayoutBuckets)
-    else Some(LayoutClustered)
-  }
-
-  /** Verify an existing store at `path` is format-compatible before a
-    * mutating append or a probe: sidecar present → version + parameters
-    * must match exactly; sidecar absent but data present (a pre-sidecar
-    * store) → the `sh` element type must already be BIGINT (a v1
-    * ARRAY<STRING> store fails fast instead of being silently mixed).
-    * Returns the sidecar if present, None for fresh/adopted stores. */
-  private def checkSigStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, numHashes: Int, bands: Int, shingleSize: Int,
-      op: String, expectedLayout: Option[String] = None): Option[SigFormat] = {
-    val restage = s"restage it with stageSignatureBuckets/stageSignatures " +
-      s"(numHashes=$numHashes, bands=$bands, shingleSize=$shingleSize)"
-    readSigFormat(spark, path) match {
-      case Some(f) =>
-        if (f.version != SigFormatVersion)
-          throw new IllegalStateException(s"$op: staged signature store " +
-            s"$path is format v${f.version}, this build writes " +
-            s"v$SigFormatVersion — $restage")
-        if ((f.numHashes, f.bands, f.shingleSize) !=
-            ((numHashes, bands, shingleSize)))
-          throw new IllegalStateException(s"$op: staged signature store " +
-            s"$path was built with numHashes=${f.numHashes}, " +
-            s"bands=${f.bands}, shingleSize=${f.shingleSize} — a mismatched " +
-            s"$op would silently produce zero/garbage candidates; $restage " +
-            "or pass the store's parameters")
-        // a bgrp-partitioned append into a flat clustered table mixes
-        // directory layouts — partition discovery then fails for EVERY
-        // reader ("Conflicting directory structures"), long after the
-        // corrupting write
-        for (want <- expectedLayout if f.layout != want)
-          throw new IllegalStateException(s"$op: staged signature store " +
-            s"$path has the '${f.layout}' layout; $op requires '$want' — " +
-            s"use stageSignatureBuckets for an append-able store")
-        Some(f)
-      case None =>
-        // adopted (pre-sidecar) store: the layout is observable from the
-        // directory shape — band-buckets stores contain only bgrp= dirs
-        val obs = observedLayout(spark, path)
-        val hasData = obs.isDefined
-        for (want <- expectedLayout; have <- obs if have != want)
-          throw new IllegalStateException(s"$op: $path is a '$have' " +
-            s"store; $op requires '$want' — use stageSignatureBuckets " +
-            "for an append-able store")
-        if (hasData) {
-          val shType = try spark.read.parquet(path).schema("sh").dataType
-          catch { case e: Exception =>
-            throw new IllegalStateException(s"$op: $path exists but is not " +
-              s"a readable signature store (${e.getMessage}) — $restage", e)
-          }
-          shType match { // containsNull-agnostic: only the element type is format
-            case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, _) => ()
-            case other =>
-              throw new IllegalStateException(s"$op: staged signature store " +
-                s"$path carries sh: ${other.simpleString} (the v1 " +
-                s"string-shingle format) — appending/probing would mix " +
-                s"formats; $restage")
-          }
-        }
-        None
-    }
-  }
+  /** The manifest of the signature store at `path`, checked for `op`:
+    * one of `kinds`, this build's version, the given parameters. */
+  private def sigStore(spark: org.apache.spark.sql.SparkSession,
+      path: String, kinds: Set[String], numHashes: Int, bands: Int,
+      shingleSize: Int, op: String): graft.sources.Layout.Manifest =
+    graft.sources.Layout.requireManifest(spark, path, op, kinds, SigVersion,
+      sigParams(numHashes, bands, shingleSize),
+      s"restage it with stageSignatureBuckets/stageSignatures " +
+        s"(numHashes=$numHashes, bands=$bands, shingleSize=$shingleSize)")
 
   /** [[incrementalNearDups]] with the old side read from a
     * [[stageSignatures]] table: the plan scans the NEW batch's documents
@@ -1265,13 +1158,11 @@ object Dedup {
       pinMerge = pinMerge)
   }
 
-  /** [[incrementalNearDupsStaged]] by PATH: reads the store's
-    * `_graft_sig_format.json` sidecar to (a) fail fast on a
-    * format/parameter mismatch (see [[SigFormat]]) and (b) pick the
-    * corpus side's join regime from the PERSISTED measured text volume —
-    * the staged probe never scans the corpus to price it (VERDICT r14
-    * item 1). Unknown volume (pre-sidecar store) is
-    * treated as over-cap: the conservative sort-merge regime. */
+  /** [[incrementalNearDupsStaged]] by PATH: reads the store's manifest
+    * to (a) fail fast on a kind/format/parameter mismatch and (b) pick
+    * the corpus side's join regime from the PERSISTED measured text
+    * volume — the staged probe never scans the corpus to price it. The
+    * store is read with the schema its manifest records. */
   def incrementalNearDupsStaged(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -1283,15 +1174,11 @@ object Dedup {
       shingleSize: Int,
       threshold: Double,
       shingler: Column => Column): DataFrame = {
-    val fmt = checkSigStore(spark, path, numHashes, bands, shingleSize,
-      "incrementalNearDupsStaged")
-    // persisted measured volume, or -1 (unknown) for a pre-sidecar
-    // store — overCarryCap treats negative as over-cap, so an unknown
-    // corpus never risks the broadcast regime
-    val oldBytes = fmt.map(_.textBytes).getOrElse(-1L)
-    stagedProbeImpl(spark.read.parquet(path), newDf, idCol,
-      textCol, numHashes, bands, shingleSize, threshold, shingler,
-      oldBytes = Some(oldBytes), pinMerge = false)
+    val m = sigStore(spark, path, Set(SigsClustered, SigsBuckets),
+      numHashes, bands, shingleSize, "incrementalNearDupsStaged")
+    stagedProbeImpl(graft.sources.Layout.readStaged(spark, path, m), newDf,
+      idCol, textCol, numHashes, bands, shingleSize, threshold, shingler,
+      oldBytes = Some(m.measures("text_bytes")), pinMerge = false)
   }
 
   /** [[stageSignatures]] in the APPEND-able layout: the same
@@ -1319,10 +1206,9 @@ object Dedup {
     graft.sources.Layout.atomicStagedWrite(df.sparkSession, path) { tmp =>
       val (banded, textBytes) = bandedSignaturesWithBytes(df, idCol, textCol,
         numHashes, bands, shingleSize, shingler)
-      writeBandedBuckets(banded, tmp, nGroups, splits, "overwrite")
-      writeSigFormat(df.sparkSession, tmp,
-        SigFormat(SigFormatVersion, numHashes, bands, shingleSize, textBytes,
-          LayoutBuckets))
+      val schema = writeBandedBuckets(banded, tmp, nGroups, splits, "overwrite")
+      graft.sources.Layout.writeManifest(df.sparkSession, tmp, sigManifest(
+        SigsBuckets, numHashes, bands, shingleSize, schema, textBytes))
     }
 
   /** Append an ingest batch's signatures to a [[stageSignatureBuckets]]
@@ -1338,43 +1224,36 @@ object Dedup {
     // concurrency-safety rationale at Layout.withTableWriteLock
     graft.sources.Layout.withTableWriteLock(df.sparkSession, path) {
       // deliberately duplicated from writeBandedBuckets: parameter
-      // validation must fire BEFORE the sidecar update below, or an
+      // validation must fire BEFORE the manifest update below, or an
       // invalid call would bump the accumulated volume with no data
       require(nGroups >= 1, s"nGroups must be >= 1, got $nGroups")
       require(splits >= 1, s"splits must be >= 1, got $splits")
-      // fail fast BEFORE the corrupting write (ADVICE r14): a format or
+      // fail fast BEFORE the corrupting write: a kind, format or
       // parameter mismatch against the existing store otherwise
       // surfaces only when a reader hits the mixed table much later
-      val prior = checkSigStore(df.sparkSession, path, numHashes, bands,
-        shingleSize, "appendSignatureBuckets",
-        expectedLayout = Some(LayoutBuckets))
+      val prior = sigStore(df.sparkSession, path, Set(SigsBuckets),
+        numHashes, bands, shingleSize, "appendSignatureBuckets")
       val (banded, batchBytes) = bandedSignaturesWithBytes(df, idCol,
         textCol, numHashes, bands, shingleSize, shingler)
-      // accumulate the measured corpus volume; a pre-sidecar store's
-      // prior volume is unknown → stays unknown (-1, conservative)
-      val total = prior match {
-        case Some(f) if f.textBytes >= 0 => f.textBytes + batchBytes
-        case _ => -1L
-      }
-      // sidecar BEFORE the data append: a crash between the two then
-      // leaves textBytes OVER-counting (batch counted, rows absent under
+      // manifest BEFORE the data append: a crash between the two then
+      // leaves text_bytes OVER-counting (batch counted, rows absent under
       // the commit protocol) — only a conservative regime choice. The
       // reverse order would leave it UNDER-counting, the direction that
       // can flip the staged probe's broadcast gate open on a frame
       // larger than priced.
-      writeSigFormat(df.sparkSession, path,
-        SigFormat(SigFormatVersion, numHashes, bands, shingleSize, total,
-          LayoutBuckets))
+      graft.sources.Layout.writeManifest(df.sparkSession, path, prior.copy(
+        measures = prior.measures +
+          ("text_bytes" -> (prior.measures("text_bytes") + batchBytes))))
       writeBandedBuckets(banded, path, nGroups, splits, "append")
     }
 
   /** The bucket-store physical write: band-group dirs, (band,bkey)
-    * row-group clustering. */
+    * row-group clustering. Returns the written rows' schema. */
   private def writeBandedBuckets(banded: DataFrame, path: String,
-      nGroups: Int, splits: Int, mode: String): Unit = {
+      nGroups: Int, splits: Int, mode: String): StructType = {
     require(nGroups >= 1, s"nGroups must be >= 1, got $nGroups")
     require(splits >= 1, s"splits must be >= 1, got $splits")
-    banded
+    val rows = banded
       .select(col("doc_id"), col("sh"), col("band"), col("bkey"))
       .withColumn("bgrp", pmod(hash(col("band"), col("bkey")), lit(nGroups)))
       .repartition(col("bgrp"), pmod(hash(col("doc_id")), lit(splits)))
@@ -1383,7 +1262,8 @@ object Dedup {
       // sort per batch — with it, one sort serves both the writer and
       // the documented (band, bkey) row-group clustering
       .sortWithinPartitions(col("bgrp"), col("band"), col("bkey"))
-      .write.mode(mode).partitionBy("bgrp").parquet(path)
+    rows.write.mode(mode).partitionBy("bgrp").parquet(path)
+    rows.schema
   }
 
   /** Compact over-fragmented band-group dirs of a

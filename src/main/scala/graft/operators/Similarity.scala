@@ -315,18 +315,33 @@ object Similarity {
   private def ivfSearch(e: DataFrame, cents: DataFrame, queryPred: Column,
       nprobe: Int, k: Int): DataFrame = {
     val assign = assignCells(e, collectCentroids(cents))
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("n2").as("q_n2"))
+    rankMembers(probeCells(e.filter(queryPred), cents, nprobe),
+      assign.select(col("cell"), col("vec_id"), col("embedding"), col("n2")), k)
+  }
+
+  /** Each query's `nprobe` nearest cells: queries `q` (vec_id,
+    * embedding, n2) × the broadcast quantizer `cents` (cid, c_emb,
+    * c_n2), ranked by squared L2 with the oracle's (dist, cid)
+    * tie-break. Returns (qid, q_emb, q_n2, cell). */
+  private def probeCells(q: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame = {
     val wp = Window.partitionBy(col("qid")).orderBy(col("dist"), col("cid"))
-    val probes = q.crossJoin(broadcast(cents))
+    q.select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
+        col("n2").as("q_n2"))
+      .crossJoin(broadcast(cents))
       .withColumn("dist",
         col("q_n2") + col("c_n2") - lit(2.0) * dotExact(col("q_emb"), col("c_emb")))
       .withColumn("pr", row_number().over(wp)).filter(col("pr") <= nprobe)
       .select(col("qid"), col("q_emb"), col("q_n2"), col("cid").as("cell"))
+  }
+
+  /** The IVF verify tail: probed cells joined to their `members` (cell,
+    * vec_id, embedding, n2), exact fixed-point cosine, each query's top
+    * `k` other vectors. Returns (qid, vid, cell, cosine, rank). */
+  private def rankMembers(probes: DataFrame, members: DataFrame,
+      k: Int): DataFrame = {
     val wr = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("vec_id"))
-    probes.join(assign.select(col("cell"), col("vec_id"), col("embedding"), col("n2")),
-        Seq("cell"))
+    probes.join(members, Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cosine",
         cosineFrom(dotExact(col("q_emb"), col("embedding")), col("q_n2"), col("n2")))
@@ -448,45 +463,36 @@ object Similarity {
       // `cents` is a local relation (k rows held on the driver), so
       // collecting it again for the assignment costs no job
       val table = collectCentroids(cents)
-      // The embedding dimension is a property of the INDEX — persist it
-      // at stage time so every probe batch afterwards reads it from a
-      // sidecar instead of re-running a take(1) job against the
-      // centroid table (VERDICT r12 item 7). Empty/null-vector snapshots
-      // simply omit the sidecar; the probe's broadcast gate then falls
-      // back to no-hint.
-      table.embs.find(_ != null).foreach { c =>
-        graft.sources.Layout.writeSidecar(emb.sparkSession,
-          s"$tmp/centroids", "_graft_dim", c.length.toString)
-      }
       val asg = assignCells(e, table)
         .select(col("cell"), col("vec_id"), col("embedding"), col("n2"))
       asg.repartition(col("cell"), pmod(hash(col("vec_id")), lit(splits)))
         .write.partitionBy("cell").parquet(s"$tmp/assignment")
-      // schema sidecar: a partitionBy write of an EMPTY frame emits zero
-      // data files, and a later schema-inferring read of the assignment
-      // dir throws UNABLE_TO_INFER_SCHEMA — staging an empty snapshot
-      // (a date-scoped run that matched nothing) must yield a READABLE
-      // empty index, not a crashed probe. `_`-prefixed files are
-      // invisible to Spark's file index, so the sidecar never pollutes
-      // the scan; [[readStagedAssignment]] uses it when present.
-      graft.sources.Layout.writeSidecar(emb.sparkSession,
-        s"$tmp/assignment", "_graft_schema", asg.schema.toDDL)
+      // The manifest records both sub-tables' schemas — a partitionBy
+      // write of an EMPTY frame emits zero data files, and staging an
+      // empty snapshot (a date-scoped run that matched nothing) must
+      // yield a READABLE empty index — and the embedding dimension, a
+      // property of the INDEX, so no probe batch runs a job to learn it.
+      // An empty or null-vector snapshot records no dim; the probe's
+      // broadcast gate then gives no hint.
+      graft.sources.Layout.writeManifest(emb.sparkSession, tmp,
+        graft.sources.Layout.Manifest(IvfKind, IvfVersion,
+          params = Map("k_centroids" -> kCentroids.toLong,
+            "iters" -> iters.toLong),
+          schemas = Map("centroids" -> cents.schema.toDDL,
+            "assignment" -> asg.schema.toDDL),
+          measures = table.embs.find(_ != null)
+            .map(c => "dim" -> c.length.toLong).toMap))
     }
   }
 
-  /** Schema-explicit read of a staged assignment table: uses the
-    * `_graft_schema` sidecar [[stageIvfIndex]] writes (required for
-    * empty snapshots — see there); falls back to inference for indexes
-    * staged before the sidecar existed. */
-  private def readStagedAssignment(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    graft.sources.Layout.readSidecar(spark, s"$path/assignment",
-        "_graft_schema") match {
-      case Some(ddl) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(s"$path/assignment")
-      case None => spark.read.parquet(s"$path/assignment")
-    }
+  private[graft] val IvfKind = "ivf-index"
+  private val IvfVersion = 1
+
+  /** The manifest of the IVF index at `path`, checked for `op`. */
+  private def ivfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      op: String): graft.sources.Layout.Manifest =
+    graft.sources.Layout.requireManifest(spark, path, op, Set(IvfKind),
+      IvfVersion, Map.empty, "restage it with stageIvfIndex")
 
   /** Assign a NEW batch of vectors against a staged index's FROZEN
     * centroids and append them to the cell-partitioned assignment —
@@ -502,7 +508,9 @@ object Similarity {
     // three lifecycle ops of one index serialize — rationale at
     // Layout.withTableWriteLock
     graft.sources.Layout.withTableWriteLock(spark, path) {
-      val cents = collectCentroids(spark.read.parquet(s"$path/centroids"))
+      val m = ivfIndex(spark, path, "appendToIvfIndex")
+      val cents = collectCentroids(
+        graft.sources.Layout.readStaged(spark, path, m, "centroids"))
       assignCells(withNorm2(newEmb), cents)
         .select(col("cell"), col("vec_id"), col("embedding"), col("n2"))
         .repartition(col("cell"), pmod(hash(col("vec_id")), lit(splits)))
@@ -550,19 +558,12 @@ object Similarity {
     * query itself when it is part of the corpus. */
   def ivfProbeStaged(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val q = withNorm2(queries)
-      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
-        col("n2").as("q_n2"))
-    val wp = Window.partitionBy(col("qid")).orderBy(col("dist"), col("cid"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("dist",
-        col("q_n2") + col("c_n2") - lit(2.0) * dotExact(col("q_emb"), col("c_emb")))
-      .withColumn("pr", row_number().over(wp)).filter(col("pr") <= nprobe)
-      .select(col("qid"), col("q_emb"), col("q_n2"), col("cid").as("cell"))
-    // partition-column values come back type-inferred — pin to the cid's
-    // long so the join and the q128-shared oracle see one type
-    val members = readStagedAssignment(spark, path)
+    val m = ivfIndex(spark, path, "ivfProbeStaged")
+    val probes = probeCells(withNorm2(queries),
+      graft.sources.Layout.readStaged(spark, path, m, "centroids"), nprobe)
+    // pin the cell to the cid's long so the join and the q128-shared
+    // oracle see one type whatever the recorded partition type
+    val members = graft.sources.Layout.readStaged(spark, path, m, "assignment")
       .withColumn("cell", col("cell").cast("long"))
     // STATIC partition pruning, not DPP-only: the probed cell set is
     // bounded by contract (≤ |queries|·nprobe and ≤ kCentroids — the
@@ -590,7 +591,6 @@ object Similarity {
       if (cellCounts.length <= 65536)
         members.filter(col("cell").isInCollection(cellCounts.map(_.getLong(0)).toSeq))
       else members
-    val wr = Window.partitionBy(col("qid")).orderBy(desc("cosine"), col("vec_id"))
     // The bounded probe frame is the natural broadcast build side, but
     // only the probed CELL count is bounded by contract — the probe ROW
     // count is |queries|·nprobe with `queries` caller-supplied, and an
@@ -599,11 +599,11 @@ object Similarity {
     // the hint on the measured BYTES, not rows alone (ADVICE r11: a
     // 2^17-row cap at dim-1024 embeddings is ~1 GB — legal but enough to
     // OOM a small executor): the cell-count pass yields the probe row
-    // count, and the embedding width comes from the (k-row, already
-    // scanned) centroid frame — probe q_emb has the same dimension by
-    // construction, and measuring it there keeps the array column out
-    // of the cell-count aggregate (a first cut ran max(size(q_emb))
-    // inside it and cost q131 a consistent ~1.3× at sf0.1). Together
+    // count, and the embedding width is the index's recorded dim —
+    // probe q_emb has the same dimension by construction, and reading
+    // it there keeps the array column out of the cell-count aggregate
+    // (a first cut ran max(size(q_emb)) inside it and cost q131 a
+    // consistent ~1.3× at sf0.1). Together
     // rows·(8·dim + rowOverhead) bounds the broadcast within 64 MB —
     // comfortably inside any executor, ~an order of magnitude over
     // typical autoBroadcastJoinThreshold (the hint exists because the
@@ -614,27 +614,13 @@ object Similarity {
     val build =
       if (cellCounts.length <= 65536) {
         val rows = cellCounts.map(_.getLong(1)).sum
-        // Dim comes from the `_graft_dim` sidecar stageIvfIndex persists
-        // (VERDICT r12 item 7: no per-probe take(1) job); indexes staged
-        // before the sidecar existed fall back to probing the k-row
-        // centroid frame, null-guarded (ADVICE r12: a null c_emb makes
-        // size() null and getInt NPE — treat as not-fits / no hint).
-        val dim: Option[Long] =
-          graft.sources.Layout.readSidecar(spark, s"$path/centroids",
-              "_graft_dim").flatMap(s => s.trim.toLongOption)
-            .orElse(cents.select(size(col("c_emb"))).take(1).headOption
-              .filterNot(_.isNullAt(0)).map(_.getInt(0).toLong))
-        if (dim.exists(broadcastProbeFits(rows, _))) probes.hint("broadcast")
+        // an index that records no dim (empty or null-vector snapshot)
+        // gets no hint
+        if (m.measures.get("dim").exists(broadcastProbeFits(rows, _)))
+          probes.hint("broadcast")
         else probes
       } else probes
-    build.join(pruned, Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cosine",
-        cosineFrom(dotExact(col("q_emb"), col("embedding")), col("q_n2"), col("n2")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("vid"), col("cell"), col("cosine"),
-        col("rank"))
+    rankMembers(build, pruned, k)
   }
 
   /** SemDeDup-style semantic deduplication: cluster the corpus with the

@@ -920,52 +920,22 @@ object Text extends QueryModule {
       FROM j WHERE jaccard >= 0.5 AND a < 250 AND b >= 250
       GROUP BY b ORDER BY doc_id""")) { (s, d) =>
       val docs = Tables.documents(s, d)
-      // content-addressed staging path: dataset + signature params + the
-      // corpus parquet's (size, mtime) fingerprint. Staging is the ONCE-
-      // per-snapshot cost, so skip the rewrite when the staged table for
-      // this exact content already exists (the _SUCCESS marker commits
-      // it) — repeat invocations (bench runs, the oracle run, the plan
-      // spec) measure the cheap per-batch probe, which is the production
-      // steady state, and concurrent runs over the same corpus share a
-      // finished table instead of racing an overwrite against a reader.
-      val src = new java.io.File(s"$d/documents.parquet")
-      // v2s = stageSignatures' bkey-clustered parquet layout with the
-      // HASHED shingle carry (sh: ARRAY<BIGINT> — see bandedSignatures)
-      // PLUS the _graft_sig_format.json sidecar (r15): salting the key
-      // with the format version means a format change (v1 carried sh as
-      // ARRAY<STRING>; plain v2 lacked the sidecar the path-based probe
-      // verifies) can never silently reuse an incompatible staged table
-      // left in tmpdir.
-      // Content enters via the per-file tree fingerprint — a top-level
-      // (length, mtime) missed part-file rewrites in directory datasets
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"v2s|$d|h=8|b=4|sh=3|${graft.core.Staging.contentFingerprint(src)}"
-          .getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val staged =
-        s"${System.getProperty("java.io.tmpdir")}/graft_staged_sigs_$key"
-      if (!new java.io.File(staged, "_SUCCESS").exists()) {
-        // stage into a unique temp dir and rename into the keyed path
-        // (the HttpIngest spool pattern): the rename is the commit, so
-        // two concurrent first runs never interleave writes — the loser's
-        // rename fails against the winner's directory and is discarded
-        val tmp = s"$staged.tmp-${java.util.UUID.randomUUID()}"
+      // Staging is the ONCE-per-snapshot cost: the staged table is keyed
+      // by the documents' file listing and the signature format + params
+      // (v3s: stageSignatures' bkey-clustered layout, hashed shingle
+      // carry, manifest), so repeat invocations (bench runs, the oracle
+      // run, the plan spec) measure the cheap per-batch probe — the
+      // production steady state — and a format change never reuses an
+      // incompatible table left in tmpdir.
+      val staged = graft.sources.Layout.stagedSnapshot(docs, "sigs",
+          "v3s|h=8|b=4|sh=3") { tmp =>
         Dedup.stageSignatures(docs.filter(col("doc_id") < 250), "doc_id",
           "text", tmp, numHashes = 8, bands = 4, shingleSize = 3,
           numFiles = 4)
-        try
-          java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-            java.nio.file.Paths.get(staged),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileSystemException =>
-            // a concurrent run committed first — use its table
-            org.apache.commons.io.FileUtils
-              .deleteDirectory(new java.io.File(tmp))
-        }
       }
-      // the PATH overload: sidecar-verified parameters + the persisted
+      // the PATH overload: manifest-checked parameters + the persisted
       // measured text volume picks the corpus side's join regime — the
-      // staged probe never re-scans the corpus to price it (r15)
+      // staged probe never re-scans the corpus to price it
       Dedup.incrementalNearDupsStaged(
           s, staged, docs.filter(col("doc_id") >= 250),
           "doc_id", "text", numHashes = 8, bands = 4, shingleSize = 3,

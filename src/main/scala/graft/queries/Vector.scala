@@ -89,7 +89,7 @@ object Vector extends QueryModule {
     * training, a hash-sampled CTE for the q128 sampled-training shape
     * (mirrors kmeansCentroids' trainPred). */
   private def dkKmIter(prev: String, next: String,
-      src: String = "embeddings"): String = s"""
+      src: String): String = s"""
       ${prev}n2 AS (SELECT cid, ${dkDecSum("comp * comp")} AS cn2
         FROM $prev GROUP BY cid),
       ${prev}d AS (SELECT e.vec_id, c.cid,
@@ -110,19 +110,18 @@ object Vector extends QueryModule {
             generate_series(1, 64) g(j)
           GROUP BY a.cell, g.j) m ON m.cid = c.cid AND m.j = c.j)"""
 
-  /** The sample-trained IVF chain (50% md5-hash training slice, 2 Lloyd
-    * iterations, full-corpus assignment, nprobe=2, top-3) — ONE oracle
-    * shared by q128 (in-plan quantizer) and q131 (staged index probe):
-    * the staged round-trip must change NOTHING about the results, so the
-    * same SQL gates both and any staging drift hash-mismatches q131. */
-  private lazy val dkIvfSampled: String = s"""
-      WITH $dkNorm2,
-      tr AS (SELECT * FROM embeddings
-        WHERE ${dkHash("CAST(vec_id AS VARCHAR)", 7)} % 100 < 50),
+  /** The trained-IVF oracle chain: 2 Lloyd iterations on the training
+    * relation, full-corpus assignment, nprobe=2, top-3. `sample` is the
+    * training CTE's body; None trains on all of `embeddings` (q79). */
+  private def dkIvfTrained(sample: Option[String]): String = {
+    val src = if (sample.isDefined) "tr" else "embeddings"
+    val trCte = sample.fold("")(t => s"\n      tr AS ($t),")
+    s"""
+      WITH $dkNorm2,$trCte
       c0 AS (SELECT vec_id AS cid, g.j, CAST(embedding[g.j] AS DOUBLE) AS comp
         FROM embeddings, generate_series(1, 64) g(j) WHERE vec_id < 8),
-      ${dkKmIter("c0", "c1", "tr")},
-      ${dkKmIter("c1", "c2", "tr")},
+      ${dkKmIter("c0", "c1", src)},
+      ${dkKmIter("c1", "c2", src)},
       fn2 AS (SELECT cid, ${dkDecSum("comp * comp")} AS cn2 FROM c2 GROUP BY cid),
       fd AS (SELECT e.vec_id, c.cid,
         ${dkDecSum("CAST(e.embedding[c.j] AS DOUBLE) * c.comp")} AS dot
@@ -148,6 +147,15 @@ object Vector extends QueryModule {
         FROM dots d JOIN n2 a ON a.vec_id = d.qid JOIN n2 b ON b.vec_id = d.vid)
       SELECT qid, vid, cell, cosine, CAST(rn AS INT) AS rank
       FROM cos WHERE rn <= 3 ORDER BY qid, rank"""
+  }
+
+  /** The sample-trained IVF chain (50% md5-hash training slice) — ONE
+    * oracle shared by q128 (in-plan quantizer) and q131 (staged index
+    * probe): the staged round-trip must change NOTHING about the
+    * results, so the same SQL gates both and any staging drift
+    * hash-mismatches q131. */
+  private lazy val dkIvfSampled: String = dkIvfTrained(Some(s"""SELECT * FROM embeddings
+        WHERE ${dkHash("CAST(vec_id AS VARCHAR)", 7)} % 100 < 50"""))
 
   val all: Seq[Q] = Seq(
 
@@ -421,37 +429,7 @@ object Vector extends QueryModule {
     // refined by two deterministic k-means iterations (fixed-point
     // assignment + fixed-point means ⇒ bit-identical centroids in both
     // engines; the mirror unrolls the loop as CTE chains c0→c1→c2).
-    Q("q79_ann_ivf_trained", Some(s"""
-      WITH $dkNorm2,
-      c0 AS (SELECT vec_id AS cid, g.j, CAST(embedding[g.j] AS DOUBLE) AS comp
-        FROM embeddings, generate_series(1, 64) g(j) WHERE vec_id < 8),
-      ${dkKmIter("c0", "c1")},
-      ${dkKmIter("c1", "c2")},
-      fn2 AS (SELECT cid, ${dkDecSum("comp * comp")} AS cn2 FROM c2 GROUP BY cid),
-      fd AS (SELECT e.vec_id, c.cid,
-        ${dkDecSum("CAST(e.embedding[c.j] AS DOUBLE) * c.comp")} AS dot
-        FROM embeddings e, c2 c GROUP BY e.vec_id, c.cid),
-      fdist AS (SELECT fd.vec_id, fd.cid, (n.n2 + cn.cn2 - 2.0 * fd.dot) AS dist
-        FROM fd JOIN n2 n ON n.vec_id = fd.vec_id JOIN fn2 cn ON cn.cid = fd.cid),
-      fassign AS (SELECT vec_id, cid AS cell FROM (
-        SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM fdist) WHERE rn = 1),
-      probes AS (SELECT vec_id AS qid, cid AS cell FROM (
-        SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-        FROM fdist WHERE vec_id < 8) WHERE rn <= 2),
-      cand AS (SELECT p.qid, a.vec_id AS vid, a.cell
-        FROM probes p JOIN fassign a ON a.cell = p.cell AND a.vec_id <> p.qid),
-      dots AS (SELECT c.qid, c.vid, c.cell,
-        ${dkDecSum("CAST(q.embedding[g.j] AS DOUBLE) * CAST(e.embedding[g.j] AS DOUBLE)")} AS dot
-        FROM cand c JOIN embeddings q ON q.vec_id = c.qid
-          JOIN embeddings e ON e.vec_id = c.vid, generate_series(1, 64) g(j)
-        GROUP BY c.qid, c.vid, c.cell),
-      cos AS (SELECT d.qid, d.vid, d.cell, d.dot/(sqrt(a.n2)*sqrt(b.n2)) AS cosine,
-        ROW_NUMBER() OVER (PARTITION BY d.qid
-          ORDER BY d.dot/(sqrt(a.n2)*sqrt(b.n2)) DESC, d.vid) AS rn
-        FROM dots d JOIN n2 a ON a.vec_id = d.qid JOIN n2 b ON b.vec_id = d.vid)
-      SELECT qid, vid, cell, cosine, CAST(rn AS INT) AS rank
-      FROM cos WHERE rn <= 3 ORDER BY qid, rank""")) { (s, d) =>
+    Q("q79_ann_ivf_trained", Some(dkIvfTrained(None))) { (s, d) =>
       Similarity.ivfTrainedTopK(Tables.embeddings(s, d), col("vec_id") < 8,
           kCentroids = 8, iters = 2, nprobe = 2, k = 3)
         .orderBy("qid", "rank")
@@ -487,29 +465,14 @@ object Vector extends QueryModule {
     // Gated against the SAME oracle as q128: the staged round-trip must
     // be invisible in the results.
     Q("q131_ann_ivf_staged", Some(dkIvfSampled)) { (s, d) =>
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      // ivf-v1 = {centroids/, assignment/ hive-partitioned on cell};
-      // key = layout version + dataset + quantizer params + content
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"ivf-v1|$d|k=8|it=2|tp=7:50|${graft.core.Staging.contentFingerprint(src)}"
-          .getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val staged =
-        s"${System.getProperty("java.io.tmpdir")}/graft_staged_ivf_$key"
-      if (!new java.io.File(s"$staged/assignment", "_SUCCESS").exists()) {
-        val tmp = s"$staged.tmp-${java.util.UUID.randomUUID()}"
-        Similarity.stageIvfIndex(Tables.embeddings(s, d), kCentroids = 8,
-          iters = 2, path = tmp, trainPred = Some(
+      val emb = Tables.embeddings(s, d)
+      // ivf-v2 = {centroids/, assignment/ hive-partitioned on cell,
+      // manifest}; keyed by the embeddings' file listing
+      val staged = graft.sources.Layout.stagedSnapshot(emb, "ivf",
+          "ivf-v2|k=8|it=2|tp=7:50") { tmp =>
+        Similarity.stageIvfIndex(emb, kCentroids = 8, iters = 2, path = tmp,
+          trainPred = Some(
             graft.operators.Sampling.hashBucket(col("vec_id"), seed = 7) < 50))
-        try
-          java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-            java.nio.file.Paths.get(staged),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: java.nio.file.FileSystemException =>
-            // a concurrent run committed first — use its index
-            org.apache.commons.io.FileUtils
-              .deleteDirectory(new java.io.File(tmp))
-        }
       }
       Similarity.ivfProbeStaged(s, staged,
           Tables.embeddings(s, d).filter(col("vec_id") < 8),

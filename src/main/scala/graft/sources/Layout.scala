@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -114,36 +116,56 @@ object Layout {
     try body finally lock.unlock()
   }
 
-  /** Write a small `_`-prefixed metadata file inside a staged table dir
-    * (Spark's file index ignores underscore files, like _SUCCESS — the
-    * sidecar never pollutes a scan). Used for the staged-assignment
-    * schema sidecar: a partitionBy write of an empty frame emits zero
-    * data files, so without a recorded schema a later read of the empty
-    * snapshot throws UNABLE_TO_INFER_SCHEMA. Participates in whatever
+  // ---- the staged-table manifest -----------------------------------------
+
+  /** The one metadata file of every table the engine stages and reads
+    * back by path (signature stores, IVF indexes, the upsert store).
+    * `_`-prefixed, so Spark's file index never lists it. */
+  private[graft] val ManifestName = "_graft_manifest.json"
+
+  /** What a staged table records about itself: its `kind` and format
+    * `version`, the staging `params` a reader must match, each
+    * sub-table's schema as DDL (keyed by its path under the table root,
+    * [[Root]] for the root itself), and the `measures` a reader needs
+    * without scanning (`text_bytes`, `dim`). */
+  final case class Manifest(kind: String, version: Int,
+      params: Map[String, Long] = Map.empty,
+      schemas: Map[String, String] = Map.empty,
+      measures: Map[String, Long] = Map.empty)
+
+  /** The sub-table key of a table's root directory. */
+  val Root = "."
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature
+      .FAIL_ON_TRAILING_TOKENS)
+
+  /** Write `m` as `dir`'s manifest. It participates in whatever
     * atomic-commit scope the caller writes under.
     *
-    * ATOMIC REPLACE: sidecars are also REWRITTEN in place on live
-    * tables (the signature append accumulates text_bytes), and readers
-    * are lock-free by contract — so the update is write-temp +
-    * rename-overwrite, never create-truncate (a truncate window would
-    * show concurrent readers an empty/partial file, and a crash
-    * mid-write could persist JSON truncated mid-number, whose numeric
-    * PREFIX still regex-parses: a silent massive under-count of the
-    * volume the broadcast gate prices). The temp is dot-prefixed —
-    * invisible to both the file index and [[readSidecar]] — so a crash
-    * before the rename leaves the old sidecar fully intact. */
-  def writeSidecar(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String, content: String): Unit = {
-    require(name.startsWith("_"),
-      s"sidecar name must be _-prefixed (Spark file-index invisible): $name")
+    * ATOMIC REPLACE: manifests are also REWRITTEN in place on live
+    * tables (the signature append accumulates text_bytes, the upsert
+    * rewrites its manifest after every batch), and readers are
+    * lock-free by contract — so the update is write-temp +
+    * rename-overwrite, never create-truncate: a truncate window would
+    * show concurrent readers an empty or partial file, and a crash
+    * mid-write would leave one behind. The temp is dot-prefixed —
+    * invisible to the file index and to [[readManifest]] — so a crash
+    * before the rename leaves the old manifest intact. */
+  def writeManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: Manifest): Unit = {
+    def sorted(kv: Map[String, Any]) = new java.util.TreeMap[String, Any](kv.asJava)
+    val content = json.writeValueAsString(sorted(Map("kind" -> m.kind,
+      "version" -> m.version, "params" -> sorted(m.params),
+      "schemas" -> sorted(m.schemas), "measures" -> sorted(m.measures))))
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     // qualify BOTH paths through the FileSystem so the FileContext
     // rename below cannot resolve a relative dir against a different
     // working directory than the create did
-    val p = fs.makeQualified(new org.apache.hadoop.fs.Path(dir, name))
+    val p = fs.makeQualified(new org.apache.hadoop.fs.Path(dir, ManifestName))
     val tmp = fs.makeQualified(new org.apache.hadoop.fs.Path(dir,
-      s".$name.tmp-${java.util.UUID.randomUUID()}"))
+      s".$ManifestName.tmp-${java.util.UUID.randomUUID()}"))
     var renamed = false
     try {
       val out = fs.create(tmp, true)
@@ -155,28 +177,128 @@ object Layout {
         // scheme has a FileSystem but no AbstractFileSystem binding
         // (e.g. a bare gs:// connector): fall back to delete+rename —
         // not one atomic op, but the full-content temp still closes the
-        // truncation window the old create-truncate path had
+        // truncation window a create-truncate would have
         fs.delete(p, false)
         if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"sidecar rename failed: $tmp -> $p")
+          throw new java.io.IOException(s"manifest rename failed: $tmp -> $p")
       }
       renamed = true
     } finally if (!renamed) fs.delete(tmp, false)
   }
 
-  /** Read a [[writeSidecar]] file; None when absent (tables staged
-    * before the sidecar existed fall back to schema inference). */
-  def readSidecar(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
+  /** `dir`'s manifest; None when it has none. A manifest that does not
+    * parse as one whole JSON object — empty, truncated, garbled — is
+    * refused with a restage message, never read in part. */
+  def readManifest(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[Manifest] = {
+    val p = new org.apache.hadoop.fs.Path(dir, ManifestName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
+      val txt = try new String(
+        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
+      def unreadable(why: String) = new IllegalStateException(
+        s"$ManifestName in $dir is unreadable ($why) — restage the table")
+      val node = try json.readTree(txt)
+      catch { case e: com.fasterxml.jackson.core.JacksonException =>
+        throw unreadable(e.getOriginalMessage) }
+      if (node == null || !node.isObject) throw unreadable(s"not a JSON object: '$txt'")
+      def field(k: String) = Option(node.get(k)).filterNot(_.isNull)
+        .getOrElse(throw unreadable(s"no '$k'"))
+      def long(k: String, v: com.fasterxml.jackson.databind.JsonNode) =
+        if (v.isIntegralNumber && v.canConvertToLong) v.asLong
+        else throw unreadable(s"'$k' is not a whole number: $v")
+      def fields(k: String) = field(k).properties().asScala
+        .map(e => e.getKey -> e.getValue).toMap
+      Some(Manifest(field("kind").asText, long("version", field("version")).toInt,
+        fields("params").map { case (k, v) => k -> long(k, v) },
+        fields("schemas").map { case (k, v) => k -> v.asText },
+        fields("measures").map { case (k, v) => k -> long(k, v) }))
     }
+  }
+
+  /** The one compatibility check: `m` (read from `dir`) must be one of
+    * `kinds`, at `version`, staged with `params` (keys `m` lacks or
+    * records differently fail alike). Fails with `op`, the mismatch and
+    * `restage`, the caller's remedy. */
+  private[graft] def checkManifest(m: Manifest, dir: String, op: String, kinds: Set[String],
+      version: Int, params: Map[String, Long], restage: String): Manifest = {
+    def fail(what: String) =
+      throw new IllegalStateException(s"$op: $dir $what — $restage")
+    if (!kinds(m.kind))
+      fail(s"is a '${m.kind}' table; $op reads ${kinds.toSeq.sorted.mkString("'", "' or '", "'")}")
+    if (m.version != version)
+      fail(s"is '${m.kind}' format v${m.version}, this build reads v$version")
+    val differ = params.filter { case (k, v) => !m.params.get(k).contains(v) }
+    if (differ.nonEmpty) {
+      def show(kv: Map[String, Any]) =
+        kv.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(", ")
+      fail(s"was staged with ${show(differ.keySet.map(k =>
+        k -> m.params.getOrElse(k, "none")).toMap)}, $op got ${show(differ)}")
+    }
+    m
+  }
+
+  /** `dir`'s manifest, checked by [[checkManifest]]; a table without one
+    * (not staged, or staged before manifests) fails fast. */
+  private[graft] def requireManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
+      op: String, kinds: Set[String], version: Int, params: Map[String, Long],
+      restage: String): Manifest =
+    checkManifest(readManifest(spark, dir).getOrElse(throw
+        new IllegalStateException(s"$op: $dir has no $ManifestName — $restage")),
+      dir, op, kinds, version, params, restage)
+
+  /** Sub-table `table` of the staged table at `dir`, read with the schema
+    * its manifest records: no inference job, and an empty snapshot (a
+    * partitioned write of zero rows leaves no data file) reads as empty. */
+  private[graft] def readStaged(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: Manifest, table: String = Root): DataFrame = {
+    val ddl = m.schemas.getOrElse(table, throw new IllegalStateException(
+      s"$ManifestName in $dir records no schema for '$table' — restage the table"))
+    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      .parquet(if (table == Root) dir else s"$dir/$table")
+  }
+
+  /** A snapshot staged once per source content: `stage` writes the table
+    * for `source`, manifest included, into a fresh directory, which is
+    * renamed to a path under the JVM temp dir keyed by `salt` (the staged
+    * format and its parameters) and the source frame's file listing —
+    * the (path, length, mtime) key [[graft.core.Measured]] trusts. A
+    * later call over the same files finds the keyed path's manifest and
+    * stages nothing; a source rewritten in place changes the listing, so
+    * it gets a new key and is restaged. The rename is the commit: the
+    * keyed path exists only whole, and of two concurrent first calls the
+    * loser's rename fails and its copy is discarded. Returns the keyed
+    * path.
+    *
+    * Same trust model as rsync's quick-check: a file rewritten in place
+    * to the same length within one mtime tick keeps its key. Spark's
+    * writers never do that (every job writes fresh part-file names). */
+  private[graft] def stagedSnapshot(source: DataFrame, name: String, salt: String)(
+      stage: String => Unit): String = {
+    val files = graft.core.Measured.listing(source.queryExecution.analyzed)
+    require(files.nonEmpty, s"stagedSnapshot($name): the source reads no files")
+    val listing = files.map { case (p, len, mtime) => s"$p|$len|$mtime" }
+      .sorted.mkString("\n")
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$salt|$listing".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val staged = s"${System.getProperty("java.io.tmpdir")}/graft_staged_${name}_$key"
+    if (!new java.io.File(staged, ManifestName).exists()) {
+      val tmp = s"$staged.tmp-${java.util.UUID.randomUUID()}"
+      stage(tmp)
+      try
+        java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
+          java.nio.file.Paths.get(staged),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case _: java.nio.file.FileSystemException =>
+          // a concurrent call committed first — use its table
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      }
+    }
+    staged
   }
 
   private def atomicStagedWriteLocked(fs: org.apache.hadoop.fs.FileSystem,

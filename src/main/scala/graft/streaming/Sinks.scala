@@ -55,11 +55,11 @@ object Sinks {
         // rows). A bare directory-exists check is not enough: a crash
         // before the first commit can leave an empty/staging-only dir
         // that would wedge every retry on schema inference. The bucket
-        // count is persisted and validated — remixing keys with a
-        // different count would strand stale rows in old buckets.
+        // count is recorded in the store's manifest and checked —
+        // remixing keys with a different count would strand stale rows
+        // in old buckets.
         val fsPath = new org.apache.hadoop.fs.Path(path)
         val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val metaPath = new org.apache.hadoop.fs.Path(path, "_graft_buckets")
         // one LIST serves both the data probe and layout validation —
         // on object stores this is a billable per-batch RPC
         val dataDirs = (if (fs.exists(fsPath)) fs.listStatus(fsPath)
@@ -67,18 +67,17 @@ object Sinks {
           val n = st.getPath.getName
           st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
         }
-        val recorded: Option[Int] =
-          if (dataDirs.nonEmpty && fs.exists(metaPath)) {
-            val in = fs.open(metaPath)
-            try Some(new String(
-              org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toInt)
-            finally in.close()
-          } else None
+        val recorded =
+          if (dataDirs.isEmpty) None
+          else graft.sources.Layout.readManifest(spark, path).map(m =>
+            graft.sources.Layout.checkManifest(m, path, "upsertParquet",
+              Set(UpsertKind), UpsertVersion, Map("buckets" -> buckets.toLong),
+              "a different count strands stale keys in unvisited buckets"))
         val (merged, overwriteMode) =
-          if (dataDirs.nonEmpty && recorded.exists(_ == buckets)) {
-            // Marker matches → incremental path: merge with only the
+          if (recorded.isDefined) {
+            // Manifest matches → incremental path: merge with only the
             // touched buckets, dynamically overwrite those partitions.
-            val cur = spark.read.parquet(path)
+            val cur = graft.sources.Layout.readStaged(spark, path, recorded.get)
               .join(latest.select("part_bucket").distinct(), Seq("part_bucket"),
                 "left_semi")
             // Materialize the merge (bounded by touched buckets) BEFORE
@@ -90,23 +89,21 @@ object Sinks {
             (graft.operators.Dedup.keepLatest(cur.unionByName(latest), keys, order)
               .localCheckpoint(true), "dynamic")
           } else if (dataDirs.nonEmpty) {
-            recorded.foreach(r => require(r == buckets,
-              s"store at $path was written with buckets=$r, got $buckets — " +
-                "a different count strands stale keys in unvisited buckets"))
-            // Marker absent (store pre-dates markers, or the marker was
-            // lost). The partition names alone cannot prove WHICH bucket
-            // count laid the store out (part_bucket=0..3 fits buckets=4
-            // and buckets=16, and adopting the wrong count strands stale
-            // keys in buckets the incremental merge never visits), so
-            // adoption = one full re-bucketing rewrite: merge the WHOLE
-            // store, recompute every row's bucket under the current
-            // count, statically overwrite. One-time migration cost; the
-            // rewritten marker makes every later batch incremental.
+            // Manifest absent: a crash between the first data commit and
+            // its manifest, or a store written before manifests. The
+            // partition names alone cannot prove WHICH bucket count laid
+            // the store out (part_bucket=0..3 fits buckets=4 and
+            // buckets=16, and adopting the wrong count strands stale keys
+            // in buckets the incremental merge never visits), so adoption
+            // = one full re-bucketing rewrite: merge the WHOLE store,
+            // recompute every row's bucket under the current count,
+            // statically overwrite. One-time migration cost; the
+            // rewritten manifest makes every later batch incremental.
             dataDirs.foreach { st =>
               val n = st.getPath.getName
               require(n.startsWith("part_bucket=") &&
                 n.stripPrefix("part_bucket=").toIntOption.exists(_ >= 0),
-                s"$path has data but no _graft_buckets marker and " +
+                s"$path has data but no manifest and " +
                   s"partition '$n' is not a part_bucket layout — " +
                   "not adoptable, refusing to overwrite")
             }
@@ -121,14 +118,19 @@ object Sinks {
           // dynamic-overwrite semantics into concurrent queries
           .option("partitionOverwriteMode", overwriteMode)
           .partitionBy("part_bucket").parquet(path)
-        // (re)written after EVERY successful write: the marker describes
-        // the data just committed, so a stale marker left beside an
-        // emptied/adopted store can never wedge the next batch
-        val out = fs.create(metaPath, true)
-        try out.write(s"$buckets\n".getBytes("UTF-8")) finally out.close()
+        // (re)written after EVERY successful write: the manifest
+        // describes the data just committed, so a stale one left beside
+        // an emptied/adopted store can never wedge the next batch
+        graft.sources.Layout.writeManifest(spark, path,
+          graft.sources.Layout.Manifest(UpsertKind, UpsertVersion,
+            params = Map("buckets" -> buckets.toLong),
+            schemas = Map(graft.sources.Layout.Root -> merged.schema.toDDL)))
       }
       .trigger(Trigger.AvailableNow())
       .start()
+
+  private val UpsertKind = "upsert-store"
+  private val UpsertVersion = 1
 
   /** Alert delivery contract (SMTP in the reference; any transport here). */
   trait Notifier extends Serializable {

@@ -100,7 +100,7 @@ class ConcurrencySpec extends SparkTestBase {
   // ---- signature-bucket store -------------------------------------------
 
   test("racing appends + concurrent probes: no lost batches, probes dominated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-conc-sig").toString
+    val dir = tmpDir("conc-sig")
     val path = s"$dir/buckets"
     Dedup.stageSignatureBuckets(base, "doc_id", "text", path, nGroups = 4)
 
@@ -135,7 +135,7 @@ class ConcurrencySpec extends SparkTestBase {
   }
 
   test("appends racing compactions: serialized by the table lock, zero rows lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-conc-cmp").toString
+    val dir = tmpDir("conc-cmp")
     val path = s"$dir/buckets"
     Dedup.stageSignatureBuckets(base, "doc_id", "text", path, nGroups = 4)
 
@@ -188,7 +188,7 @@ class ConcurrencySpec extends SparkTestBase {
 
   test("IVF append/compact/probe interleaving: frozen-quantizer equality holds under races") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-conc-ivf").toString
+    val dir = tmpDir("conc-ivf")
     val path = s"$dir/idx"
     val trainPred = col("vec_id") < 100
     Similarity.stageIvfIndex(emb.filter(col("vec_id") < 100), kCentroids = 4,

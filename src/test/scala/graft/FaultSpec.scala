@@ -119,7 +119,7 @@ class FaultSpec extends SparkTestBase {
 
   test("kill while writing the staging dir: live table untouched; next call clears the wreck") {
     lifecycles.foreach { lc =>
-      val base = java.nio.file.Files.createTempDirectory(s"graft-fault-w").toString
+      val base = tmpDir("fault-w")
       val path = s"$base/${lc.name}"
       lc.stage(path)
       val ref = lc.probe(path)
@@ -137,7 +137,7 @@ class FaultSpec extends SparkTestBase {
 
   test("kill between the two commit renames: next call's recovery restores the whole snapshot") {
     lifecycles.foreach { lc =>
-      val base = java.nio.file.Files.createTempDirectory(s"graft-fault-r").toString
+      val base = tmpDir("fault-r")
       val path = s"$base/${lc.name}"
       lc.stage(path)
       val ref = lc.probe(path)
@@ -158,7 +158,7 @@ class FaultSpec extends SparkTestBase {
 
   test("kill after commit, before old-snapshot cleanup: next call discards the stale .old") {
     lifecycles.foreach { lc =>
-      val base = java.nio.file.Files.createTempDirectory(s"graft-fault-c").toString
+      val base = tmpDir("fault-c")
       val path = s"$base/${lc.name}"
       // v1 staged elsewhere becomes the stale `.old-<name>`; v2 is live
       val v1 = s"$base/v1-${lc.name}"
@@ -175,7 +175,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("restage whose WRITE fails leaves the old snapshot live and recoverable") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-f").toString
+    val base = tmpDir("fault-f")
     val path = s"$base/sigs"
     Dedup.stageSignatures(corpus, "doc_id", "text", path, numFiles = 2)
     def probe() = Dedup.incrementalNearDupsStaged(spark.read.parquet(path),
@@ -198,7 +198,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("mergeSpanStats crash mid-merge leaves the staged table whole; the retry lands the batch") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-m").toString
+    val base = tmpDir("fault-m")
     val path = s"$base/spanstats"
     Dedup.stageSpanStats(corpus, "doc_id", "text", path, span = 3, numFiles = 2)
     def probe() = Dedup.dupSpanStatsStaged(spark.read.parquet(path), batch,
@@ -226,7 +226,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("concurrent restage of one path fails loudly and releases the single-writer lock") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-l").toString
+    val base = tmpDir("fault-l")
     val path = s"$base/t"
     Postings.stagePostings(corpus, "doc_id", "text", path, numFiles = 2)
     def probe() = Postings.searchStaged(spark, path, Seq("spark"), k = 5)
@@ -277,7 +277,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("compactSignatureBuckets: kill mid-compact recovers to bit-identical probes") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-cb").toString
+    val base = tmpDir("fault-cb")
     val path = s"$base/buckets"
     Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 4)
     (0 until 3).foreach { b =>
@@ -294,7 +294,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("compactIvfCells: kill mid-compact recovers to bit-identical probes") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-ci").toString
+    val base = tmpDir("fault-ci")
     val path = s"$base/idx"
     Similarity.stageIvfIndex(emb.filter(col("vec_id") < 100), kCentroids = 4,
       iters = 1, path = path, trainPred = Some(col("vec_id") < 100))
@@ -312,10 +312,10 @@ class FaultSpec extends SparkTestBase {
   test("staging an IVF index over an EMPTY corpus yields a readable, appendable snapshot") {
     // the empty-partition production edge (a date-scoped snapshot that
     // matched nothing): a partitionBy write of an empty frame emits zero
-    // data files, so without the _graft_schema sidecar the first probe
+    // data files, so without the schema its manifest records the first probe
     // used to die with UNABLE_TO_INFER_SCHEMA (caught by
     // EMPTYCHECK; pinned here)
-    val base = java.nio.file.Files.createTempDirectory("graft-fault-empty").toString
+    val base = tmpDir("fault-empty")
     val path = s"$base/idx"
     val none = emb.filter(col("vec_id") < 0)
     Similarity.stageIvfIndex(none, kCentroids = 4, iters = 1, path = path)
@@ -336,7 +336,7 @@ class FaultSpec extends SparkTestBase {
   }
 
   test("nearDupClusters reliable-checkpoint path handles an empty pair list") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-empty").toString
+    val ckpt = tmpDir("cc-empty")
     val pairs = Seq.empty[(Long, Long)].toDF("a", "b")
     assert(Dedup.nearDupClusters(pairs, checkpointDir = Some(ckpt)).count() === 0)
   }

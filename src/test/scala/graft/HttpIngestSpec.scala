@@ -23,7 +23,7 @@ class HttpIngestSpec extends SparkTestBase {
   }
 
   test("POSTed NDJSON events flow through the spool into a streaming query") {
-    val spool = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val spool = tmpDir("ingest")
     val srv = HttpIngest.start(spool)
     try {
       assert(post(srv.port,
@@ -53,8 +53,8 @@ class HttpIngestSpec extends SparkTestBase {
   }
 
   test("spool retention: cleanSource=delete reclaims committed batches, archive keeps a trail") {
-    val spool = java.nio.file.Files.createTempDirectory("graft-ingest-gc").toString
-    val arch = java.nio.file.Files.createTempDirectory("graft-ingest-arch").toString
+    val spool = tmpDir("ingest-gc")
+    val arch = tmpDir("ingest-arch")
     val srv = HttpIngest.start(spool)
     val schema = StructType(Seq(
       StructField("event_id", LongType),
@@ -121,7 +121,7 @@ class HttpIngestSpec extends SparkTestBase {
   }
 
   test("ingest rejects non-POST, empty bodies, and bad bearer tokens (S11 auth)") {
-    val spool = java.nio.file.Files.createTempDirectory("graft-ingest-auth").toString
+    val spool = tmpDir("ingest-auth")
     // S11-for-S5: gate on a real RS256 JWT
     val kpg = java.security.KeyPairGenerator.getInstance("RSA")
     kpg.initialize(2048)
@@ -159,7 +159,7 @@ class HttpIngestSpec extends SparkTestBase {
   }
 
   test("ingest caps the body: over-cap 413 (declared and chunked), at-cap spooled") {
-    val spool = java.nio.file.Files.createTempDirectory("graft-ingest-cap").toString
+    val spool = tmpDir("ingest-cap")
     val srv = HttpIngest.start(spool, maxBodyBytes = 1024)
     try {
       // declared Content-Length over the cap → 413 before any byte spools
@@ -189,7 +189,7 @@ class HttpIngestSpec extends SparkTestBase {
     // Nagle on, the body waits for the client's delayed ACK of the
     // headers (~40 ms on Linux) on every POST after the first on a
     // kept-alive connection — 20 POSTs then take 800 ms or more.
-    val spool = java.nio.file.Files.createTempDirectory("graft-ingest-ka").toString
+    val spool = tmpDir("ingest-ka")
     val srv = HttpIngest.start(spool)
     val sock = new java.net.Socket("127.0.0.1", srv.port)
     try {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -38,7 +37,7 @@ class KafkaEndToEndSpec extends SparkTestBase {
     val src = KafkaIO.eventSource(spark, "fake:9092", topic)
     val q = src.writeStream.format("memory").queryName("kafka_e2e_src")
       .option("checkpointLocation",
-        Files.createTempDirectory("kafka-e2e-src").toString)
+        tmpDir("kafka-e2e-src"))
       .start()
     try {
       q.processAllAvailable() // resolve the tail-start ("latest") offset first
@@ -57,7 +56,7 @@ class KafkaEndToEndSpec extends SparkTestBase {
   test("S1→S2 end-to-end: consume, transform, publish — events round-trip bit-identically") {
     FakeBroker.reset()
     val (in, out) = ("e2e-pipe-in", "e2e-pipe-out")
-    val ckpt = Files.createTempDirectory("kafka-e2e-pipe").toString
+    val ckpt = tmpDir("kafka-e2e-pipe")
     // Real S1 builder → filter transform → real S2 builder.
     val consumed = KafkaIO.eventSource(spark, "fake:9092", in)
       .filter(col("event_type") =!= "noise")
@@ -108,7 +107,7 @@ class KafkaEndToEndSpec extends SparkTestBase {
     // duplicates — while the pre-crash append means no loss either.
     FakeBroker.reset()
     val (in, out) = ("e2e-crash-in", "e2e-crash-out")
-    val ckpt = Files.createTempDirectory("kafka-e2e-crash").toString
+    val ckpt = tmpDir("kafka-e2e-crash")
     def start() = KafkaIO.sink(
       KafkaIO.eventSource(spark, "fake:9092", in)
         .select("event_id", "ts", "user_id", "event_type", "value", "props"),
@@ -145,7 +144,7 @@ class KafkaEndToEndSpec extends SparkTestBase {
     // exactly once.
     FakeBroker.reset()
     val (in, out) = ("e2e-midw-in", "e2e-midw-out")
-    val ckpt = Files.createTempDirectory("kafka-e2e-midw").toString
+    val ckpt = tmpDir("kafka-e2e-midw")
     def start() = KafkaIO.sink(
       KafkaIO.eventSource(spark, "fake:9092", in)
         .select("event_id", "ts", "user_id", "event_type", "value", "props"),
@@ -182,7 +181,7 @@ class KafkaEndToEndSpec extends SparkTestBase {
         .load()
         .writeStream.format("memory").queryName("kafka_e2e_bad")
         .option("checkpointLocation",
-          Files.createTempDirectory("kafka-e2e-bad").toString)
+          tmpDir("kafka-e2e-bad"))
         .start()
       try q.processAllAvailable() finally q.stop()
     }

@@ -411,7 +411,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("nearDupClusters/updateClusters reliable-checkpoint option: same labels, data on disk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val dir = tmpDir("cc-ckpt")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     val reliable = Dedup.nearDupClusters(pairs, checkpointDir = Some(dir))
       .as[(Long, Long)].collect().toMap
@@ -1135,7 +1135,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("appendToIvfIndex: probing after an append equals probing a full restage") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val base = tmpDir("ivf")
     // identical training slice for both stagings, so the quantizers are
     // bit-identical and only assignment COVERAGE differs
     val tp = Some(col("vec_id") < 400)
@@ -1155,7 +1155,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("compactIvfCells: probes bit-identical, hot cells rewritten to few files, cold cells untouched") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
+    val base = tmpDir("ivf-compact")
     val path = s"$base/idx"
     // stage, then fragment the hot cells with many small appended batches
     // (each append adds >=1 file per touched cell — the lifecycle problem)
@@ -1225,7 +1225,7 @@ class OperatorsSpec extends SparkTestBase {
       (901L, "totally unrelated probe text aa bb cc dd ee")    // novel
     ).toDF("doc_id", "text")
 
-    val base = java.nio.file.Files.createTempDirectory("graft-sigbuckets").toString
+    val base = tmpDir("sigbuckets")
     val inc = s"$base/inc"; val full = s"$base/full"
     Dedup.stageSignatureBuckets(corpus, "doc_id", "text", inc, nGroups = 4)
     batches.foreach(b =>
@@ -1296,25 +1296,27 @@ class OperatorsSpec extends SparkTestBase {
 
   test("stageIvfIndex persists the embedding dim; probe reads it without a centroid job") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfdim").toString + "/idx"
+    val path = tmpDir("ivfdim") + "/idx"
     Similarity.stageIvfIndex(emb, kCentroids = 4, iters = 1, path = path)
-    val side = graft.sources.Layout.readSidecar(spark, s"$path/centroids",
-      "_graft_dim")
+    val m = graft.sources.Layout.readManifest(spark, path)
+      .getOrElse(fail("stage wrote no manifest"))
     val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
       .head().getInt(0)
-    assert(side.map(_.trim) === Some(dim.toString))
-    // probe still works (and the broadcast gate path exercises the
-    // sidecar read); a pre-sidecar index keeps working via the fallback
+    assert(m.kind === Similarity.IvfKind)
+    assert(m.measures.get("dim") === Some(dim.toLong))
+    assert(m.params === Map("k_centroids" -> 4L, "iters" -> 1L))
+    assert(m.schemas.keySet === Set("centroids", "assignment"))
+    // the probe's broadcast gate reads the recorded dim
     val hits = Similarity.ivfProbeStaged(spark, path,
       emb.filter(col("vec_id") < 3), nprobe = 2, k = 3)
     assert(hits.groupBy("qid").count().collect().forall(_.getLong(1) === 3L))
-    val fs = new org.apache.hadoop.fs.Path(s"$path/centroids/_graft_dim")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids/_graft_dim"), false)
-    val hits2 = Similarity.ivfProbeStaged(spark, path,
-      emb.filter(col("vec_id") < 3), nprobe = 2, k = 3)
-    assert(hits2.orderBy("qid", "rank").collect().toSeq ===
-      hits.orderBy("qid", "rank").collect().toSeq)
+    // an index without its manifest is refused, not probed by inference
+    assert(new java.io.File(path, graft.sources.Layout.ManifestName).delete())
+    val e = intercept[IllegalStateException] {
+      Similarity.ivfProbeStaged(spark, path, emb.filter(col("vec_id") < 3),
+        nprobe = 2, k = 3)
+    }
+    assert(e.getMessage.contains("restage"), e.getMessage)
   }
 
   test("registerAll exposes the pre-spread props frame as events_props (VERDICT r11 item 5)") {

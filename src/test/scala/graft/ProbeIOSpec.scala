@@ -51,7 +51,7 @@ class ProbeIOSpec extends SparkTestBase {
 
   test("IVF staged probe reads ONLY the probed cells' files (numeric DPP pin)") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-ivf").toString
+    val dir = tmpDir("io-ivf")
     val path = s"$dir/idx"
     Similarity.stageIvfIndex(emb, kCentroids = 16, iters = 1, path = path,
       trainPred = Some(col("vec_id") < 200))
@@ -81,7 +81,7 @@ class ProbeIOSpec extends SparkTestBase {
 
   test("postings probe rows-read bounded by the query terms' file ranges (footer-skip pin)") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-post").toString
+    val dir = tmpDir("io-post")
     val path = s"$dir/postings"
     Postings.stagePostings(docs, "doc_id", "text", path, numFiles = 8)
 
@@ -152,7 +152,7 @@ class ProbeIOSpec extends SparkTestBase {
     // 2-date range, and assert numFiles == the matching partition dirs'
     // data files — not one more.
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-s9").toString
+    val dir = tmpDir("io-s9")
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, java.sql.Timestamp)]
     ms.addData((0 until 600).map { i =>
@@ -185,7 +185,7 @@ class ProbeIOSpec extends SparkTestBase {
     // from footer stats. Pin it numerically the way the postings probe
     // is pinned: rows surfaced by the scan ≤ the rows of the files whose
     // [min,max] intersect the predicate, strictly below the table total.
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-clust").toString
+    val dir = tmpDir("io-clust")
     val li = graft.core.Tables.lineitem(spark, "/root/testdata/sf0.01")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     graft.sources.Layout.clusteredWrite(li, s"$dir/tbl",
@@ -223,7 +223,7 @@ class ProbeIOSpec extends SparkTestBase {
 
   test("staged-signature probe: documents scanned once (batch only); staged table bounded") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-sig").toString
+    val dir = tmpDir("io-sig")
     val path = s"$dir/sigs"
     Dedup.stageSignatures(docs.filter(col("doc_id") < 250), "doc_id", "text",
       path, numFiles = 4)

@@ -17,7 +17,7 @@ class RegistrySourcesSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val reg = new TopicRegistry
     val seen = new ConcurrentLinkedQueue[Long]()
-    val dir = java.nio.file.Files.createTempDirectory("graft-reg").toString
+    val dir = tmpDir("reg")
     val ms = MemoryStream[Event]
     val q = reg.subscribe("brokerA", "topic1", ms.toDF(), dir) { (batch, _) =>
       batch.collect().foreach(r => seen.add(r.getAs[Long]("event_id")))
@@ -28,7 +28,7 @@ class RegistrySourcesSpec extends SparkTestBase {
     assert(seen.toArray.toSeq === Seq(42L))
 
     // upsert: re-subscribing the same key replaces the query (A4)
-    val q2 = reg.subscribe("brokerA", "topic1", ms.toDF(), dir + "2") { (_, _) => () }
+    val q2 = reg.subscribe("brokerA", "topic1", ms.toDF(), tmpDir("reg2")) { (_, _) => () }
     assert(!q.isActive && q2.isActive)
     assert(reg.active === Seq(("brokerA", "topic1")))
 
@@ -55,7 +55,7 @@ class RegistrySourcesSpec extends SparkTestBase {
   }
 
   test("binaryFiles + recursive listing skip hidden files (S7/S8)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-src")
+    val dir = java.nio.file.Paths.get(tmpDir("src"))
     val sub = java.nio.file.Files.createDirectory(dir.resolve("sub"))
     java.nio.file.Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(sub.resolve("b.bin"), Array[Byte](4, 5))
@@ -84,7 +84,7 @@ class RegistrySourcesSpec extends SparkTestBase {
   }
 
   test("whole-document JSON scan (S6)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json")
+    val dir = java.nio.file.Paths.get(tmpDir("json"))
     java.nio.file.Files.writeString(dir.resolve("conf.json"),
       """{ "broker": "localhost:9092",
            "topics": ["a", "b"] }""")

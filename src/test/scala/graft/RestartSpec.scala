@@ -21,7 +21,7 @@ class RestartSpec extends SparkTestBase {
   test("streamingBloomDedup: bitmap state survives a checkpoint restart") {
     withRocksDb {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-bloom-rs").toString
+      val ckpt = tmpDir("bloom-rs")
       val ms = MemoryStream[(String, String)]
       val emitted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       def start() = StatefulOps.streamingBloomDedup(ms.toDS(), shards = 4)
@@ -51,7 +51,7 @@ class RestartSpec extends SparkTestBase {
   test("streamingStratifiedSample: reservoir survives a restart, converges to the batch draw") {
     withRocksDb {
       implicit val ctx = spark.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-strat-rs").toString
+      val ckpt = tmpDir("strat-rs")
       val ms = MemoryStream[(String, Long)]
       val last = new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
       def start() = StatefulOps.streamingStratifiedSample(ms.toDS(), cap = 3, seed = 7)
@@ -91,7 +91,7 @@ class RestartSpec extends SparkTestBase {
   test("streamingNearDupBounded: bucket representatives survive a restart") {
     withRocksDb {
       implicit val ctx = spark.sqlContext
-      val dir = java.nio.file.Files.createTempDirectory("graft-nd-rs").toString
+      val dir = tmpDir("nd-rs")
       val ms = MemoryStream[(Long, Timestamp, String)]
       val fox = "the quick brown fox jumps over the lazy dog"
       def start() = StatefulOps.streamingNearDupBounded(ms.toDS(),
@@ -131,7 +131,7 @@ class RestartSpec extends SparkTestBase {
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[String]
       graft.streaming.Sinks.BufferingNotifier.buffer.clear()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-hh-rocks").toString
+      val ckpt = tmpDir("hh-rocks")
       def start() = StatefulOps.streamingHeavyHitterAlerts(
         ms.toDS().toDF("token"), watchlist = Seq("hot", "warm"),
         threshold = 5L, notifier = new graft.streaming.Sinks.BufferingNotifier,
@@ -162,7 +162,7 @@ class RestartSpec extends SparkTestBase {
     withRocksDb {
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[graft.streaming.Event]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-kl-rocks").toString
+      val ckpt = tmpDir("kl-rocks")
       val emitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
       def start() = StatefulOps.keepLatestPerUserTws(ms.toDS())
         .writeStream

@@ -53,7 +53,7 @@ class ScaleSpec extends SparkTestBase {
 
   test("stateful dedup state survives a query restart from checkpoint (T1)") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tmpDir("ckpt")
     val ms = MemoryStream[Event]
     def start() = StatefulOps
       .dedupWithinWatermark(ms.toDF(), "2 hours", Seq("event_id"))
@@ -166,7 +166,7 @@ class ScaleSpec extends SparkTestBase {
   }
 
   test("event-date partitioned layout prunes partitions on time-range scans (S9)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tmpDir("part")
     Seq(
       (1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
       (2L, Timestamp.valueOf("2024-01-02 10:00:00"), 2.0),
@@ -205,7 +205,7 @@ class ScaleSpec extends SparkTestBase {
   test("staged span stats ≡ inline dupSpanStats; probe never scans the corpus") {
     import graft.operators.Dedup
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("span_stats_").toString
+    val dir = tmpDir("span_stats")
     try {
       // physically separate corpus and batch tables, so the plan itself
       // can prove which one the probe reads
@@ -252,7 +252,7 @@ class ScaleSpec extends SparkTestBase {
   test("staged postings ≡ inline q129; probe reads only the index") {
     import graft.operators.Postings
     val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("postings_").toString
+    val dir = tmpDir("postings")
     try {
       Postings.stagePostings(
         spark.read.parquet(s"$d/documents.parquet"), "doc_id", "text", dir,
@@ -550,7 +550,7 @@ class ScaleSpec extends SparkTestBase {
   }
 
   test("clusteredWrite produces disjoint per-file ranges (file-skipping layout)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = tmpDir("layout")
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_shipdate", "l_quantity")
     graft.sources.Layout.clusteredWrite(li, s"$dir/t", Seq("l_shipdate"), 8)

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.jdk.CollectionConverters._
-
 /** What the oracle verifies must be what the benchmark runs: Verify's
   * and Bench's sessions carry exactly the SQL confs of the engine's
   * session factory (the CC driver bound and the candidate-pair join
@@ -37,20 +35,8 @@ class SessionConfSpec extends AnyFunSuite {
 
   /** The .scala files under `src/main/scala/<dir>` whose text contains
     * any of `needles`, relative to src/main/scala. */
-  private def sourcesContaining(dir: String, needles: String*): List[String] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val top = root.resolve(dir)
-    assert(java.nio.file.Files.isDirectory(top), top.toAbsolutePath)
-    val files = java.nio.file.Files.walk(top)
-    try files.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter { f =>
-        val text = java.nio.file.Files.readString(f)
-        needles.exists(text.contains)
-      }
-      .map(root.relativize(_).toString).toList.sorted
-    finally files.close()
-  }
+  private def sourcesContaining(dir: String, needles: String*): List[String] =
+    MainSources.matching(dir)(text => needles.exists(text.contains))
 
   test("GraftSession.local is the only SparkSession builder in src/main") {
     assert(sourcesContaining("graft", "SparkSession.builder") ===

@@ -8,23 +8,20 @@ import graft.operators.{Dedup, Similarity}
 import graft.sources.Layout
 
 /** Pins of the LSH family's text volume and the staged-signature store
-  * format sidecar (ADVICE r14 medium + VERDICT r14 item 1).
+  * manifest.
   *
   *  - the text volume is one exact `sum(octet_length)` scan, memoized per
   *    session, lineage and file listing ([[graft.core.Measured]]): a
   *    re-read of an unchanged table runs no Spark job, and a table
   *    overwritten in place is measured again (a stale volume could open
   *    the broadcast gate on a corpus-sized frame);
-  *  - the sidecar must fail-fast a mixed-format or mixed-parameter
+  *  - the manifest must fail-fast a mixed-format or mixed-parameter
   *    append/probe BEFORE any corrupting write, and must carry the
   *    measured text volume through stage → append accumulation so the
   *    path-based staged probe prices its join regime without scanning.
   */
 class SigStoreSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-sig-$tag").toString
 
   private def docs(n: Int, repeatEvery: Int = 0): DataFrame =
     (0 until n).map { i =>
@@ -85,42 +82,47 @@ class SigStoreSpec extends SparkTestBase {
     }
   }
 
-  // ---- staged-signature sidecar ------------------------------------------
+  // ---- staged-signature manifest -----------------------------------------
+
+  private def manifest(path: String): Layout.Manifest =
+    Layout.readManifest(spark, path).getOrElse(fail(s"no manifest at $path"))
+
+  private def textBytesOf(path: String): Long = manifest(path).measures("text_bytes")
+
+  /** Every file under `path`, with its length and mtime. */
+  private def files(path: String): Set[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] = {
+      val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
+      kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(walk)
+    }
+    walk(new java.io.File(path)).map(f => (f.getPath, f.length, f.lastModified)).toSet
+  }
 
   test("stage writes the format sidecar; append accumulates measured textBytes") {
     val path = tmpDir("sidecar") + "/sigs"
     val base = docs(200)
     val batch = docs(60).withColumn("doc_id", col("doc_id") + 1000L)
     Dedup.stageSignatureBuckets(base, "doc_id", "text", path, nGroups = 4)
-    val f0 = Dedup.readSigFormat(spark, path)
-      .getOrElse(fail("stage wrote no sidecar"))
-    assert(f0.version == Dedup.SigFormatVersion)
-    assert((f0.numHashes, f0.bands, f0.shingleSize) == ((8, 4, 3)))
-    assert(f0.textBytes == exactBytes(base),
+    val f0 = manifest(path)
+    assert(f0.kind == Dedup.SigsBuckets && f0.version == Dedup.SigVersion)
+    assert(f0.params == Map("num_hashes" -> 8L, "bands" -> 4L, "shingle_size" -> 3L))
+    assert(f0.measures("text_bytes") == exactBytes(base),
       "staged textBytes must equal the measured corpus volume")
     Dedup.appendSignatureBuckets(batch, "doc_id", "text", path, nGroups = 4)
-    val f1 = Dedup.readSigFormat(spark, path).get
-    assert(f1.textBytes == exactBytes(base) + exactBytes(batch),
+    assert(textBytesOf(path) == exactBytes(base) + exactBytes(batch),
       "append must accumulate the batch's measured volume")
   }
 
   test("append fails fast on parameter mismatch, BEFORE writing") {
     val path = tmpDir("mismatch") + "/sigs"
     Dedup.stageSignatureBuckets(docs(50), "doc_id", "text", path, nGroups = 4)
-    def files(): Set[String] = {
-      def walk(f: java.io.File): Seq[String] = {
-        val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        kids.filter(_.isFile).map(_.getPath) ++ kids.filter(_.isDirectory).flatMap(walk)
-      }
-      walk(new java.io.File(path)).toSet
-    }
-    val before = files()
+    val before = files(path)
     val e = intercept[IllegalStateException] {
       Dedup.appendSignatureBuckets(docs(10), "doc_id", "text", path,
         numHashes = 16, bands = 8, nGroups = 4)
     }
     assert(e.getMessage.contains("restage"), s"not actionable: ${e.getMessage}")
-    assert(files() == before, "mismatched append mutated the store")
+    assert(files(path) == before, "mismatched append mutated the store")
   }
 
   test("append into a flat clustered store fails fast (layout guard)") {
@@ -131,22 +133,13 @@ class SigStoreSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("layout") ||
       e.getMessage.contains("stageSignatureBuckets"), e.getMessage)
-    // adopted store without a sidecar: the directory shape still tells
-    val bare = tmpDir("layout-bare") + "/sigs"
-    Dedup.stageSignatures(docs(40), "doc_id", "text", bare, numFiles = 2)
-    val fs = new java.io.File(bare, Dedup.SigFormatName)
-    assert(fs.delete(), "fixture: could not remove sidecar")
-    val e2 = intercept[IllegalStateException] {
-      Dedup.appendSignatureBuckets(docs(10), "doc_id", "text", bare)
-    }
-    assert(e2.getMessage.contains("band-buckets"), e2.getMessage)
   }
 
   test("append and probe fail fast on a v1 (string-shingle) store") {
     val path = tmpDir("v1") + "/sigs"
-    // fake a v1 store: sh as ARRAY<STRING>, no sidecar, bucket layout
-    // (bgrp-partitioned so the layout guard passes and the format
-    // check is what fires)
+    // fake a v1 store: sh as ARRAY<STRING>, no manifest, bucket layout —
+    // append refuses the store without a manifest, and the frame probe
+    // refuses the string shingle type
     Seq((1L, Seq("a b c"), 0, "k", 0))
       .toDF("doc_id", "sh", "band", "bkey", "bgrp")
       .write.partitionBy("bgrp").parquet(path)
@@ -162,7 +155,7 @@ class SigStoreSpec extends SparkTestBase {
   }
 
   test("append crash between sidecar and data write over-counts (never under-counts); retry converges") {
-    // appendSignatureBuckets writes the accumulated-volume sidecar BEFORE
+    // appendSignatureBuckets writes the accumulated-volume manifest BEFORE
     // the bucket append by design: a crash between the two must leave
     // textBytes OVER-counting (batch priced, rows absent — a conservative
     // regime choice), never under-counting (which could flip the staged
@@ -175,7 +168,7 @@ class SigStoreSpec extends SparkTestBase {
 
     // a shingler that passes analysis but throws on every row at
     // execution time — textBytes is measured on the raw text (no
-    // shingler), so the failure lands exactly between the sidecar
+    // shingler), so the failure lands exactly between the manifest
     // write and the data append
     val bomb: Column => Column =
       c => split(assert_true(length(c) < 0).cast("string"), " ")
@@ -184,24 +177,23 @@ class SigStoreSpec extends SparkTestBase {
         nGroups = 4, shingler = bomb)
     }
 
-    val f = Dedup.readSigFormat(spark, path).get
-    assert(f.textBytes == exactBytes(base) + exactBytes(batch),
-      "crashed append must leave the sidecar counting the batch (over-count)")
+    val f = manifest(path)
+    assert(f.measures("text_bytes") == exactBytes(base) + exactBytes(batch),
+      "crashed append must leave the manifest counting the batch (over-count)")
     assert(spark.read.parquet(path).count() == stagedRows,
       "crashed append committed data rows")
 
-    // an invalid-parameter append must fail BEFORE touching the sidecar
+    // an invalid-parameter append must fail BEFORE touching the manifest
     intercept[IllegalArgumentException] {
       Dedup.appendSignatureBuckets(batch, "doc_id", "text", path, nGroups = 0)
     }
-    assert(Dedup.readSigFormat(spark, path).get == f,
-      "invalid-parameter append mutated the sidecar")
+    assert(manifest(path) == f,
+      "invalid-parameter append mutated the manifest")
 
     // retry with a working shingler: data lands, volume accumulates again
     // (the documented over-count drift — still the conservative direction)
     Dedup.appendSignatureBuckets(batch, "doc_id", "text", path, nGroups = 4)
-    val f2 = Dedup.readSigFormat(spark, path).get
-    assert(f2.textBytes == exactBytes(base) + 2 * exactBytes(batch))
+    assert(textBytesOf(path) == exactBytes(base) + 2 * exactBytes(batch))
     assert(spark.read.parquet(path).count() > stagedRows,
       "retried append wrote no rows")
 
@@ -241,10 +233,8 @@ class SigStoreSpec extends SparkTestBase {
     // broadcast — but a MEASURED under-cap batch beside it is broadcast
     // explicitly (the big-corpus/small-batch ingest shape): the
     // BroadcastExchange must sit on the batch (left/x) side
-    Layout.writeSidecar(spark, path, Dedup.SigFormatName,
-      s"""{"version":2,"sh":"array<bigint>","layout":"bkey-clustered",""" +
-        s""""num_hashes":8,"bands":4,""" +
-        s""""shingle_size":3,"text_bytes":${Long.MaxValue / 64}}""")
+    Layout.writeManifest(spark, path, manifest(path).copy(
+      measures = Map("text_bytes" -> Long.MaxValue / 64)))
     val big = Dedup.incrementalNearDupsStaged(spark, path, batch,
       "doc_id", "text", numHashes = 8, bands = 4, shingleSize = 3,
       threshold = 0.5, shingler = null)
@@ -256,7 +246,7 @@ class SigStoreSpec extends SparkTestBase {
 
     // the gate arithmetic must be overflow-safe: Long.MaxValue/10 × 20
     // wraps to -16, so a product-form gate would return UNDER-cap and
-    // open the corpus broadcast on a corrupted-volume sidecar
+    // open the corpus broadcast on a corrupted-volume manifest
     assert(Dedup.overCarryCap(Long.MaxValue / 10), "overflow opened the gate")
     assert((Long.MaxValue / 10) * Dedup.CarriedBytesPerTextByte < 0,
       "fixture no longer overflows — pick a volume whose ×20 wraps negative")
@@ -271,10 +261,8 @@ class SigStoreSpec extends SparkTestBase {
     val corpus = docs(60)
     val path = tmpDir("bothover") + "/sigs"
     Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 2)
-    Layout.writeSidecar(spark, path, Dedup.SigFormatName,
-      s"""{"version":2,"sh":"array<bigint>","layout":"band-buckets",""" +
-        s""""num_hashes":8,"bands":4,""" +
-        s""""shingle_size":3,"text_bytes":${Long.MaxValue / 64}}""")
+    Layout.writeManifest(spark, path, manifest(path).copy(
+      measures = Map("text_bytes" -> Long.MaxValue / 64)))
     val filler = (0 until 600).map(j => s"word$j token${j * 13}").mkString(" ")
     val bigBatch = (0 until 1200).map(i => (i + 9000L, s"doc $i $filler"))
       .toDF("doc_id", "text")
@@ -291,34 +279,88 @@ class SigStoreSpec extends SparkTestBase {
     assert(plan.contains("SortMergeJoin"), s"expected pinned SMJ:\n$plan")
   }
 
-  test("a pre-layout sidecar infers layout from directory shape (no permissive default)") {
-    // a store staged by the intermediate r15 build wrote sidecars
-    // WITHOUT the layout key; defaulting those to the append-able
-    // layout would wave a bgrp append into a flat clustered store —
-    // mixed directory layouts, every later reader fails discovery
-    val flat = tmpDir("prelayout-flat") + "/sigs"
-    Dedup.stageSignatures(docs(30), "doc_id", "text", flat, numFiles = 2)
-    Layout.writeSidecar(spark, flat, Dedup.SigFormatName,
-      """{"version":2,"sh":"array<bigint>","num_hashes":8,"bands":4,""" +
-        """"shingle_size":3,"text_bytes":100}""")
-    assert(Dedup.readSigFormat(spark, flat).get.layout == "bkey-clustered")
-    intercept[IllegalStateException] {
-      Dedup.appendSignatureBuckets(docs(5), "doc_id", "text", flat)
+  test("a store with data but no manifest fails fast with restage on append and path probe, writing nothing") {
+    val buckets = tmpDir("nomanifest-bkt") + "/sigs"
+    Dedup.stageSignatureBuckets(docs(40), "doc_id", "text", buckets, nGroups = 2)
+    val flat = tmpDir("nomanifest-flat") + "/sigs"
+    Dedup.stageSignatures(docs(40), "doc_id", "text", flat, numFiles = 2)
+    Seq(buckets, flat).foreach { path =>
+      assert(new java.io.File(path, Layout.ManifestName).delete())
+      val before = files(path)
+      val eApp = intercept[IllegalStateException] {
+        Dedup.appendSignatureBuckets(docs(5), "doc_id", "text", path, nGroups = 2)
+      }
+      assert(eApp.getMessage.contains("restage"), eApp.getMessage)
+      val eProbe = intercept[IllegalStateException] {
+        Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text",
+          numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
+          shingler = null)
+      }
+      assert(eProbe.getMessage.contains("restage"), eProbe.getMessage)
+      assert(files(path) == before, s"a refused call wrote into $path")
     }
-    val buckets = tmpDir("prelayout-bkt") + "/sigs"
-    Dedup.stageSignatureBuckets(docs(30), "doc_id", "text", buckets, nGroups = 2)
-    Layout.writeSidecar(spark, buckets, Dedup.SigFormatName,
-      """{"version":2,"sh":"array<bigint>","num_hashes":8,"bands":4,""" +
-        """"shingle_size":3,"text_bytes":100}""")
-    assert(Dedup.readSigFormat(spark, buckets).get.layout == "band-buckets")
-    // and a truncated sidecar (regex would match a number's PREFIX) is
-    // refused outright, never silently under-counted
-    Layout.writeSidecar(spark, buckets, Dedup.SigFormatName,
-      """{"version":2,"sh":"array<bigint>","num_hashes":8,"bands":4,""" +
-        """"shingle_size":3,"text_bytes":52""")
-    val e = intercept[IllegalStateException] {
-      Dedup.readSigFormat(spark, buckets)
+  }
+
+  test("a kind, version, parameter or layout mismatch fails fast before any write") {
+    val path = tmpDir("mismatch-all") + "/sigs"
+    Dedup.stageSignatureBuckets(docs(40), "doc_id", "text", path, nGroups = 2)
+    val good = manifest(path)
+    Seq(
+      good.copy(kind = Similarity.IvfKind),
+      good.copy(kind = Dedup.SigsClustered), // the flat layout: append-only refusal
+      good.copy(version = good.version + 1),
+      good.copy(params = good.params + ("bands" -> 8L)),
+      good.copy(params = good.params - "shingle_size")
+    ).foreach { bad =>
+      Layout.writeManifest(spark, path, bad)
+      val before = files(path)
+      val e = intercept[IllegalStateException] {
+        Dedup.appendSignatureBuckets(docs(5), "doc_id", "text", path, nGroups = 2)
+      }
+      assert(e.getMessage.contains("restage"), e.getMessage)
+      assert(files(path) == before, s"append wrote past $bad")
+      if (bad.kind != Dedup.SigsClustered) // the probe reads either layout
+        assert(intercept[IllegalStateException] {
+          Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text",
+            numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
+            shingler = null)
+        }.getMessage.contains("restage"))
     }
-    assert(e.getMessage.contains("truncated"), e.getMessage)
+  }
+
+  test("a truncated, empty or trailing-garbage manifest is refused, never read in part") {
+    val path = tmpDir("truncated") + "/sigs"
+    Dedup.stageSignatureBuckets(docs(30), "doc_id", "text", path, nGroups = 2)
+    val whole = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, Layout.ManifestName)), "UTF-8")
+    // a cut inside the volume would be a silent under-count if any
+    // prefix were accepted
+    val cut = whole.take(whole.indexOf("\"text_bytes\":") + 14)
+    Seq(cut, "", whole + "}").foreach { bad =>
+      writeFile(s"$path/${Layout.ManifestName}", bad)
+      val e = intercept[IllegalStateException](Layout.readManifest(spark, path))
+      assert(e.getMessage.contains(Layout.ManifestName) &&
+        e.getMessage.contains("restage"), e.getMessage)
+    }
+  }
+
+  test("staging an empty corpus yields a readable signature store") {
+    val none = docs(10).filter(col("doc_id") < 0)
+    val buckets = tmpDir("empty-bkt") + "/sigs"
+    Dedup.stageSignatureBuckets(none, "doc_id", "text", buckets, nGroups = 4)
+    val flat = tmpDir("empty-flat") + "/sigs"
+    Dedup.stageSignatures(none, "doc_id", "text", flat, numFiles = 2)
+    Seq(buckets, flat).foreach { path =>
+      assert(textBytesOf(path) == 0L)
+      assert(Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id",
+        "text", numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
+        shingler = null).count() == 0)
+    }
+    // and the empty bucket store takes appends
+    Dedup.appendSignatureBuckets(docs(20), "doc_id", "text", buckets, nGroups = 4)
+    assert(Dedup.incrementalNearDupsStaged(spark, buckets,
+      docs(5).withColumn("doc_id", col("doc_id") + 5000L), "doc_id", "text",
+      numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
+      shingler = null).count() == 5)
   }
 }

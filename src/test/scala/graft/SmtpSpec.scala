@@ -159,7 +159,7 @@ class SmtpSpec extends SparkTestBase {
 
   test("SmtpNotifier STARTTLS + AUTH PLAIN: envelope only inside TLS (S10 security modes)") {
     // Self-signed cert via the JDK's own keytool (no new deps, no egress)
-    val dir = java.nio.file.Files.createTempDirectory("graft-smtp-tls")
+    val dir = java.nio.file.Paths.get(tmpDir("smtp-tls"))
     val ksPath = dir.resolve("ks.p12").toString
     val kt = new ProcessBuilder("keytool", "-genkeypair", "-alias", "smtp",
       "-keyalg", "RSA", "-keysize", "2048", "-storetype", "PKCS12",
@@ -219,7 +219,7 @@ class SmtpSpec extends SparkTestBase {
 
   test("streaming alerts deliver through the real SMTP transport end-to-end") {
     val srv = new FakeSmtpServer
-    val dir = java.nio.file.Files.createTempDirectory("graft-smtp").toString
+    val dir = tmpDir("smtp")
     try {
       implicit val ctx = spark.sqlContext
       val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]

@@ -10,7 +10,7 @@ import graft.tools.StreamGates
   * cases: a gate that throws, then the real STREAMLATE gate. */
 class StreamGatesSpec extends SparkTestBase {
 
-  private val out = Files.createTempDirectory("graft-streamgates-spec")
+  private val out = Paths.get(tmpDir("streamgates-spec"))
   private val boom = StreamGates.Gate("BOOM")(_ =>
     throw new IllegalStateException("boom"))
 

@@ -84,7 +84,7 @@ class StreamingSpec extends SparkTestBase {
   test("streaming ANN probe matches the batch staged-index probe per micro-batch (U6 x T4)") {
     implicit val ctx = spark.sqlContext
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
+    val dir = tmpDir("ivf-stream")
     graft.operators.Similarity.stageIvfIndex(emb, kCentroids = 4, iters = 1,
       path = dir)
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
@@ -383,7 +383,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("partitioned parquet sink writes event-date partitions (S9)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val dir = tmpDir("sink")
     val ms = newEvents()
     ms.addData(Event(1, ts(1), 7, "purchase", 10.0))
     val q = Sinks.partitionedParquet(ms.toDF(), s"$dir/data", s"$dir/ckpt")
@@ -394,7 +394,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("upsertParquet keeps exactly the latest row per key across batches (S9 upsert)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val dir = tmpDir("upsert")
     val ms = newEvents()
     def run(): Unit = {
       val q = Sinks.upsertParquet(ms.toDF(), s"$dir/store", s"$dir/ckpt",
@@ -415,7 +415,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("upsertParquet adopts legacy marker-less stores; marker rewritten per write") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-legacy").toString
+    val dir = tmpDir("upsert-legacy")
     val ms = newEvents()
     def run(buckets: Int): Unit = {
       val q = Sinks.upsertParquet(ms.toDF(), s"$dir/store", s"$dir/ckpt",
@@ -429,8 +429,8 @@ class StreamingSpec extends SparkTestBase {
     ms.addData(Event(1, ts(1), 7, "a", 1.0), Event(10, ts(1), 8, "a", 1.0),
       Event(11, ts(1), 9, "a", 1.0))
     run(buckets = 4)
-    // simulate a store written before markers existed
-    val marker = java.nio.file.Paths.get(s"$dir/store/_graft_buckets")
+    // simulate a store written before manifests existed
+    val marker = java.nio.file.Paths.get(s"$dir/store", graft.sources.Layout.ManifestName)
     assert(java.nio.file.Files.deleteIfExists(marker))
     ms.addData(Event(2, ts(2), 7, "b", 2.0))
     run(buckets = 16) // adopts via a full re-bucketing rewrite
@@ -454,7 +454,7 @@ class StreamingSpec extends SparkTestBase {
       Option(remix.getCause).exists(_.getMessage.contains("strands stale keys")))
 
     // foreign (non-bucketed) data is NOT adoptable — refuse, don't overwrite
-    val foreign = java.nio.file.Files.createTempDirectory("graft-upsert-foreign").toString
+    val foreign = tmpDir("upsert-foreign")
     spark.range(3).withColumn("v", col("id") * 2)
       .write.partitionBy("id").parquet(s"$foreign/store")
     val ms2 = newEvents()
@@ -469,10 +469,56 @@ class StreamingSpec extends SparkTestBase {
     // the foreign data is untouched
     assert(spark.read.parquet(s"$foreign/store").count() === 3)
   }
+  test("upsertParquet: an empty or garbled manifest fails the batch, naming the manifest") {
+    // an empty file is what a crash between create and write would have
+    // left; a truncated one what a crash mid-write would have left
+    Seq("", """{"kind":"upsert-store","version":1,"params":{"buck""").foreach { bad =>
+      val dir = tmpDir("upsert-garbled")
+      val ms = newEvents()
+      def run(): Unit = Sinks.upsertParquet(ms.toDF(), s"$dir/store", s"$dir/ckpt",
+        keys = Seq("user_id"), seqCol = "ts").awaitTermination(60000)
+      ms.addData(Event(1, ts(1), 7, "a", 1.0))
+      run()
+      writeFile(s"$dir/store/${graft.sources.Layout.ManifestName}", bad)
+      ms.addData(Event(2, ts(2), 7, "b", 2.0))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.toString).toSeq
+      assert(chain.exists(_.contains(graft.sources.Layout.ManifestName)), chain)
+      assert(!chain.exists(_.contains("NumberFormatException")), chain)
+    }
+  }
+
+  test("upsertParquet: a leftover temp manifest (crash before the rename) leaves the next batch incremental") {
+    val dir = tmpDir("upsert-tmpleft")
+    val ms = newEvents()
+    def run(): Unit = Sinks.upsertParquet(ms.toDF(), s"$dir/store", s"$dir/ckpt",
+      keys = Seq("user_id"), seqCol = "ts", buckets = 4).awaitTermination(60000)
+    ms.addData((1 to 8).map(u => Event(u, ts(1), u, "a", 1.0)): _*)
+    run()
+    writeFile(s"$dir/store/.${graft.sources.Layout.ManifestName}.tmp-crashed",
+      """{"kind":"upsert-store","vers""")
+    def bucketFiles(): Map[String, Set[String]] =
+      new java.io.File(s"$dir/store").listFiles().filter(_.getName.startsWith("part_bucket="))
+        .map(d => d.getName -> d.list().filter(_.endsWith(".parquet")).toSet).toMap
+    val before = bucketFiles()
+    assert(before.size >= 2, s"fixture needs several buckets: $before")
+    ms.addData(Event(9, ts(2), 3, "b", 2.0))
+    run()
+    val after = bucketFiles()
+    // incremental: only the touched bucket is rewritten (a re-bucketing
+    // rewrite would replace every bucket's files)
+    assert(before.keySet === after.keySet)
+    assert(before.count { case (b, fs) => after(b) != fs } === 1)
+    val store = spark.read.parquet(s"$dir/store")
+      .select("user_id", "event_id").as[(Long, Long)].collect().toMap
+    assert(store === (1 to 8).map(u => u.toLong -> u.toLong).toMap + (3L -> 9L))
+  }
+
 
   test("alert sink delivers matching rows through the Notifier (T6/S10)") {
     Sinks.BufferingNotifier.buffer.clear()
-    val dir = java.nio.file.Files.createTempDirectory("graft-alert").toString
+    val dir = tmpDir("alert")
     val ms = newEvents()
     val alerts = ms.toDF().filter(col("event_type") === "error")
     val q = Sinks.alerts(alerts, new Sinks.BufferingNotifier, s"$dir/ckpt")
@@ -527,7 +573,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
     Sinks.BufferingNotifier.buffer.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hh-ckpt").toString
+    val ckpt = tmpDir("hh-ckpt")
     val q = StatefulOps.streamingHeavyHitterAlerts(
       ms.toDS().toDF("token"), watchlist = Seq("hot", "cold"),
       threshold = 5L, notifier = new Sinks.BufferingNotifier, ckpt,
@@ -554,7 +600,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
     Sinks.BufferingNotifier.buffer.clear()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-hh-ckpt2").toString
+    val ckpt = tmpDir("hh-ckpt2")
     val q1 = StatefulOps.streamingHeavyHitterAlerts(
       ms.toDS().toDF("token"), watchlist = Seq("hot"),
       threshold = 3L, notifier = new Sinks.BufferingNotifier, ckpt,

@@ -14,7 +14,7 @@ class VerifySpec extends SparkTestBase {
 
   test("Verify.run dumps every (sfDir, outDir) pair in one session") {
     val src = Paths.get("/root/testdata/sf0.001")
-    val tmp = Files.createTempDirectory("graft-verify-spec")
+    val tmp = Paths.get(tmpDir("verify-spec"))
     val copy = Files.createDirectory(tmp.resolve("sf-copy"))
     Files.list(src).iterator().asScala.foreach(f =>
       Files.copy(f, copy.resolve(f.getFileName)))
