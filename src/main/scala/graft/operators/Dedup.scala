@@ -960,49 +960,39 @@ object Dedup {
       numHashes, bands, shingleSize, shingler)
     // same relation-blowup control as candidatePairs, on BOTH sides:
     // neither side's carried sets may be planner-broadcast past the cap
-    crossBatchVerdicts(bn, bo, threshold,
-      newBytes = newBytes, oldBytes = Some(oldBytes), pinMerge = false)
+    crossBatchVerdicts(bn, bo, threshold, newBytes = newBytes, oldBytes = oldBytes)
   }
 
   /** The new-batch × old-corpus bucket join + exact-Jaccard verification
     * shared by [[incrementalNearDups]] (old side computed inline) and
-    * [[incrementalNearDupsStaged]] (old side read from a staged table).
+    * [[incrementalNearDupsStaged]] (old side read from a signature store).
     * Both sides must carry (doc_id, sh, band, bkey).
     *
-    * Regime. A side COMPUTED from text (bn always; bo when inline) has
-    * lying planner stats — parquet sizes under-count the banded carry
-    * ~50–100× — so its broadcast eligibility comes from the MEASURED
-    * volume only (the candidatePairs discipline): the SMALLER
-    * measured-safe side is broadcast EXPLICITLY (the predicted regime
-    * is the planned regime), and a measured over-cap side is denied
-    * the broadcast outright. A STAGED bo read from a signature table
-    * has roughly honest stats (the table physically stores the carried
-    * rows), so with no measurement (`oldBytes = None`) it may be left
-    * to the planner — but only while bn is measured under-cap; an
-    * over-cap bn beside an unpriced corpus pins sort-merge (never
-    * trade an OOM for a maybe-faster plan). `pinMerge` (the public
-    * forceMerge contract) and a disabled `autoBroadcastJoinThreshold`
-    * each veto every explicit broadcast — a session that opted out of
-    * broadcasts must not get one from a hint (the same
-    * `conf.autoBroadcastJoinThreshold > 0` gate candidatePairs
-    * applies). `oldBytes = Some(-1)` (unknown persisted volume) is
-    * over-cap via [[overCarryCap]]'s negative rule. */
+    * Regime. Both sides are priced by MEASURED text volume — bn and an
+    * inline bo by a scan, a staged bo by its manifest's `text_bytes` —
+    * never by planner stats, which under-count the banded carry ~50–100×
+    * (the candidatePairs discipline). Four regimes:
+    *  1. a disabled `autoBroadcastJoinThreshold` vetoes every explicit
+    *     broadcast — a session that opted out of broadcasts must not get
+    *     one from a hint (the same gate candidatePairs applies);
+    *  2. an under-cap old side no larger than the batch (or beside an
+    *     over-cap batch) is broadcast explicitly;
+    *  3. otherwise an under-cap batch is broadcast explicitly;
+    *  4. both sides over the cap pin sort-merge (never trade an OOM for
+    *     a maybe-faster plan).
+    * The predicted regime is the planned regime. `oldBytes = -1`
+    * (unknown persisted volume) is over-cap via [[overCarryCap]]'s
+    * negative rule. */
   private def crossBatchVerdicts(bn: DataFrame, bo: DataFrame,
-      threshold: Double, newBytes: Long, oldBytes: Option[Long],
-      pinMerge: Boolean): DataFrame = {
-    val bcastOk = bn.sparkSession.sessionState.conf
-      .autoBroadcastJoinThreshold > 0 && !pinMerge
-    val newOver = overCarryCap(newBytes)
-    val merged = (bn.as("x").hint("merge"), bo.as("y").hint("merge"))
-    val (jx, jy) = oldBytes match {
-      case _ if !bcastOk => merged
-      case Some(ob) if !overCarryCap(ob) && (newOver || ob <= newBytes) =>
+      threshold: Double, newBytes: Long, oldBytes: Long): DataFrame = {
+    val vetoed = bn.sparkSession.sessionState.conf.autoBroadcastJoinThreshold <= 0
+    val (newOver, oldOver) = (overCarryCap(newBytes), overCarryCap(oldBytes))
+    val (jx, jy) =
+      if (vetoed || (newOver && oldOver))
+        (bn.as("x").hint("merge"), bo.as("y").hint("merge"))
+      else if (!oldOver && (newOver || oldBytes <= newBytes))
         (bn.as("x"), broadcast(bo.as("y")))
-      case Some(_) if !newOver => (broadcast(bn.as("x")), bo.as("y"))
-      case Some(_) => merged // both sides measured over-cap
-      case None if newOver => merged // unpriced corpus beside an over-cap batch
-      case None => (bn.as("x"), bo.as("y")) // planner decides from honest stats
-    }
+      else (broadcast(bn.as("x")), bo.as("y"))
     val cand = jx.join(jy,
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") =!= col("y.doc_id"))
@@ -1018,38 +1008,9 @@ object Dedup {
       .agg(min(col("old_id")).as("dup_of"), max(col("jaccard")).as("best_jaccard"))
   }
 
-  /** Stage banded LSH signatures to a parquet table — compute the
-    * corpus's scan→shingle→signature→band pipeline ONCE and persist
-    * (doc_id, sh, band, bkey), bkey-range-clustered so each probe
-    * bucket's rows sit in few files. This is the production ingest shape
-    * SCALING.md describes: the self-join pipeline recomputes the
-    * signature subtree per consumer, and [[incrementalNearDups]]
-    * recomputes the old side per batch — at 100 TB the corpus side is
-    * written once per snapshot here, and every later consumer
-    * ([[incrementalNearDupsStaged]], audits, provenance joins) reads the
-    * staged table instead of re-shingling the corpus. The staged table is
-    * signature-sized (ids + shingle sets + band keys, no document text).
-    *
-    * The table carries the shingle sets alongside the band keys, so exact
-    * verification on the consumer side needs no join back to the corpus.
-    * Parameters (numHashes/bands/shingleSize/shingler) must match between
-    * staging and probing — band keys from different parameters never
-    * collide correctly; a mismatch silently yields zero candidates. */
-  def stageSignatures(df: DataFrame, idCol: String, textCol: String,
-      path: String, numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
-      numFiles: Int = 8, shingler: Column => Column = null): Unit =
-    graft.sources.Layout.atomicStagedWrite(df.sparkSession, path) { tmp =>
-      val (banded, textBytes) = bandedSignaturesWithBytes(df, idCol, textCol,
-        numHashes, bands, shingleSize, shingler)
-      val rows = banded.select("doc_id", "sh", "band", "bkey")
-      graft.sources.Layout.clusteredWrite(rows, tmp, Seq("band", "bkey"), numFiles)
-      graft.sources.Layout.writeManifest(df.sparkSession, tmp, sigManifest(
-        SigsClustered, numHashes, bands, shingleSize, rows.schema, textBytes))
-    }
-
   // ---- staged-signature store manifest ------------------------------------
 
-  /* Every [[stageSignatures]] / [[stageSignatureBuckets]] table carries a
+  /* Every [[stageSignatureBuckets]] store carries a
    * [[graft.sources.Layout.Manifest]] for two reasons:
    *
    *  1. FORMAT/PARAMETER GUARD. The signature format changed once
@@ -1060,20 +1021,16 @@ object Dedup {
    *     fail long after the corrupting write. Parameter drift
    *     (numHashes/bands/shingleSize) is worse: band keys from
    *     different parameters never collide correctly, so a mismatched
-   *     probe silently returns ZERO candidates. And a bgrp-partitioned
-   *     append into a flat clustered table mixes directory layouts, so
-   *     partition discovery fails for every later reader. The kind is
-   *     the layout; append and the path-based probe check kind, version
-   *     and parameters and fail fast with a restage message.
+   *     probe silently returns ZERO candidates. Append and the staged
+   *     probe check kind, version and parameters and fail fast with a
+   *     restage message.
    *
    *  2. MEASURED TEXT VOLUME. `text_bytes` persists the corpus-volume
-   *     probe the signatures were built from, so the path-based staged
-   *     probe prices its broadcast-vs-merge regime without re-scanning
+   *     probe the signatures were built from, so the staged probe
+   *     prices its broadcast-vs-merge regime without re-scanning
    *     the corpus. Appends ACCUMULATE batch bytes into it. */
 
   private[graft] val SigVersion = 2
-  /** [[stageSignatures]]' flat bkey-range-clustered layout. */
-  private[graft] val SigsClustered = "bkey-clustered"
   /** [[stageSignatureBuckets]]' hive `bgrp=` append-able layout. */
   private[graft] val SigsBuckets = "band-buckets"
 
@@ -1082,32 +1039,29 @@ object Dedup {
     Map("num_hashes" -> numHashes.toLong, "bands" -> bands.toLong,
       "shingle_size" -> shingleSize.toLong)
 
-  private def sigManifest(kind: String, numHashes: Int, bands: Int,
-      shingleSize: Int, schema: StructType,
-      textBytes: Long): graft.sources.Layout.Manifest =
-    graft.sources.Layout.Manifest(kind, SigVersion,
-      sigParams(numHashes, bands, shingleSize),
-      Map(graft.sources.Layout.Root -> schema.toDDL),
-      Map("text_bytes" -> textBytes))
-
   /** The manifest of the signature store at `path`, checked for `op`:
-    * one of `kinds`, this build's version, the given parameters. */
+    * the bucket kind, this build's version, the given parameters. */
   private def sigStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, kinds: Set[String], numHashes: Int, bands: Int,
+      path: String, numHashes: Int, bands: Int,
       shingleSize: Int, op: String): graft.sources.Layout.Manifest =
-    graft.sources.Layout.requireManifest(spark, path, op, kinds, SigVersion,
-      sigParams(numHashes, bands, shingleSize),
-      s"restage it with stageSignatureBuckets/stageSignatures " +
+    graft.sources.Layout.requireManifest(spark, path, op, Set(SigsBuckets),
+      SigVersion, sigParams(numHashes, bands, shingleSize),
+      s"restage it with stageSignatureBuckets " +
         s"(numHashes=$numHashes, bands=$bands, shingleSize=$shingleSize)")
 
-  /** [[incrementalNearDups]] with the old side read from a
-    * [[stageSignatures]] table: the plan scans the NEW batch's documents
-    * plus the staged signature parquet — the existing corpus is never
-    * re-shingled. Per-batch cost is new-batch-sized; the old side's cost
-    * was paid once at staging time. Signature parameters must match the
-    * staging call (see [[stageSignatures]]). */
+  /** [[incrementalNearDups]] with the old side read from the
+    * [[stageSignatureBuckets]] store at `path`: the plan scans the NEW
+    * batch's documents plus the staged signatures — the existing corpus
+    * is never re-shingled. Per-batch cost is new-batch-sized; the old
+    * side's cost was paid once at staging. The store's manifest (a)
+    * fails fast on a kind/format/parameter mismatch, which would
+    * otherwise silently return zero candidates, and (b) prices the
+    * corpus side's join regime from the PERSISTED measured text volume —
+    * the probe never scans the corpus to price it. The store is read
+    * with the schema its manifest records. */
   def incrementalNearDupsStaged(
-      stagedSigs: DataFrame,
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
       newDf: DataFrame,
       idCol: String,
       textCol: String,
@@ -1115,91 +1069,47 @@ object Dedup {
       bands: Int = 4,
       shingleSize: Int = 3,
       threshold: Double = 0.5,
-      shingler: Column => Column = null,
-      forceMerge: Boolean = false): DataFrame =
-    // forceMerge keeps its historical contract — SMJ guaranteed, no
-    // broadcast of EITHER side (callers pass it to forbid broadcasts
-    // outright). false: corpus unmeasured — the staged frame's own
-    // (roughly honest) stats decide, never an explicit broadcast.
-    stagedProbeImpl(stagedSigs, newDf, idCol, textCol, numHashes, bands,
-      shingleSize, threshold, shingler,
-      oldBytes = None, pinMerge = forceMerge)
-
-  private def stagedProbeImpl(
-      stagedSigs: DataFrame,
-      newDf: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      shingleSize: Int,
-      threshold: Double,
-      shingler: Column => Column,
-      oldBytes: Option[Long],
-      pinMerge: Boolean): DataFrame = {
-    // fail fast on a v1 (string-shingle) frame: its band keys can never
-    // match this build's hashed pipeline — the probe would silently
-    // return zero candidates (ADVICE r14's mixed-format failure class)
-    stagedSigs.schema("sh").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, _) => ()
-      case other => throw new IllegalStateException(
-        s"incrementalNearDupsStaged: staged frame carries " +
-          s"sh: ${other.simpleString} — this build's signatures are " +
-          "ARRAY<BIGINT> (v2); restage the signature table")
-    }
+      shingler: Column => Column = null): DataFrame = {
+    val m = sigStore(spark, path, numHashes, bands, shingleSize,
+      "incrementalNearDupsStaged")
     // the batch side is measured too: a repetitive ~10 MB-compressed
     // batch expands 50–100× past its parquet stats, so an un-gated bn
     // could be planner-broadcast at corpus-carry size
     val (bn, newBytes) = bandedSignaturesWithBytes(newDf, idCol, textCol,
       numHashes, bands, shingleSize, shingler)
-    crossBatchVerdicts(bn, stagedSigs.select("doc_id", "sh", "band", "bkey"),
-      threshold, newBytes = newBytes, oldBytes = oldBytes,
-      pinMerge = pinMerge)
+    crossBatchVerdicts(bn, graft.sources.Layout.readStaged(spark, path, m)
+        .select("doc_id", "sh", "band", "bkey"),
+      threshold, newBytes = newBytes, oldBytes = m.measures("text_bytes"))
   }
 
-  /** [[incrementalNearDupsStaged]] by PATH: reads the store's manifest
-    * to (a) fail fast on a kind/format/parameter mismatch and (b) pick
-    * the corpus side's join regime from the PERSISTED measured text
-    * volume — the staged probe never scans the corpus to price it. The
-    * store is read with the schema its manifest records. */
-  def incrementalNearDupsStaged(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      newDf: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      shingleSize: Int,
-      threshold: Double,
-      shingler: Column => Column): DataFrame = {
-    val m = sigStore(spark, path, Set(SigsClustered, SigsBuckets),
-      numHashes, bands, shingleSize, "incrementalNearDupsStaged")
-    stagedProbeImpl(graft.sources.Layout.readStaged(spark, path, m), newDf,
-      idCol, textCol, numHashes, bands, shingleSize, threshold, shingler,
-      oldBytes = Some(m.measures("text_bytes")), pinMerge = false)
-  }
-
-  /** [[stageSignatures]] in the APPEND-able layout: the same
-    * (doc_id, sh, band, bkey) rows, hive-partitioned on a band-group
-    * column `bgrp = hash(band, bkey) mod nGroups` so later ingest
-    * batches can land by `mode=append` without rewriting the snapshot —
-    * the [[graft.operators.Similarity.stageIvfIndex]] lifecycle
-    * (stage → append per batch → compact in maintenance windows) for
-    * the text-dedup family. Within each dir rows sort on (band, bkey)
-    * to tighten row-group stats. `nGroups` bounds dir count (partition
-    * dirs must stay low-cardinality; raw bkeys are corpus-sized);
-    * `splits` spreads each group over that many writer tasks/files per
-    * batch — size it so group_files ≈ group_bytes / 128 MB at scale.
+  /** Stage banded LSH signatures to an append-able parquet store: the
+    * corpus's scan→shingle→signature→band pipeline runs ONCE and
+    * persists (doc_id, sh, band, bkey), hive-partitioned on a band-group
+    * column `bgrp = hash(band, bkey) mod nGroups` so later ingest batches
+    * land by `mode=append` ([[appendSignatureBuckets]]) without
+    * rewriting the snapshot, and maintenance windows compact them
+    * ([[compactSignatureBuckets]]) — the
+    * [[graft.operators.Similarity.stageIvfIndex]] lifecycle for the
+    * text-dedup family. This is the production ingest shape SCALING.md
+    * describes: [[incrementalNearDups]] recomputes the old side per
+    * batch, while at 100 TB the corpus side is written once per snapshot
+    * here and every later probe ([[incrementalNearDupsStaged]]) reads
+    * the store instead of re-shingling the corpus. The store is
+    * signature-sized (ids + shingle sets + band keys, no document text),
+    * and the shingle sets it carries let exact verification run without
+    * a join back to the corpus.
     *
-    * Readers are layout-agnostic: `spark.read.parquet(path)` feeds
-    * [[incrementalNearDupsStaged]] unchanged (the extra `bgrp` column is
-    * dropped by its projection), and a stage/append `nGroups` mismatch
-    * costs only placement locality, never correctness — the candidate
-    * join keys on (band, bkey), not on the dir column. Signature
-    * parameters (numHashes/bands/shingleSize/shingler) must still match
-    * across stage, append and probe (see [[stageSignatures]]). */
+    * Within each dir rows sort on (band, bkey) to tighten row-group
+    * stats. `nGroups` bounds dir count (partition dirs must stay
+    * low-cardinality; raw bkeys are corpus-sized); `splits` spreads each
+    * group over that many writer tasks/files per batch — size it so
+    * group_files ≈ group_bytes / 128 MB at scale. A stage/append
+    * `nGroups` mismatch costs only placement locality, never correctness
+    * — the candidate join keys on (band, bkey), not on the dir column.
+    * Signature parameters must match across stage, append and probe:
+    * band keys from different parameters never collide. The manifest
+    * refuses a numHashes/bands/shingleSize mismatch; a different
+    * `shingler` silently yields zero candidates. */
   def stageSignatureBuckets(df: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 8, bands: Int = 4, shingleSize: Int = 3,
       nGroups: Int = 64, splits: Int = 1, shingler: Column => Column = null): Unit =
@@ -1207,8 +1117,11 @@ object Dedup {
       val (banded, textBytes) = bandedSignaturesWithBytes(df, idCol, textCol,
         numHashes, bands, shingleSize, shingler)
       val schema = writeBandedBuckets(banded, tmp, nGroups, splits, "overwrite")
-      graft.sources.Layout.writeManifest(df.sparkSession, tmp, sigManifest(
-        SigsBuckets, numHashes, bands, shingleSize, schema, textBytes))
+      graft.sources.Layout.writeManifest(df.sparkSession, tmp,
+        graft.sources.Layout.Manifest(SigsBuckets, SigVersion,
+          sigParams(numHashes, bands, shingleSize),
+          Map(graft.sources.Layout.Root -> schema.toDDL),
+          Map("text_bytes" -> textBytes)))
     }
 
   /** Append an ingest batch's signatures to a [[stageSignatureBuckets]]
@@ -1231,8 +1144,8 @@ object Dedup {
       // fail fast BEFORE the corrupting write: a kind, format or
       // parameter mismatch against the existing store otherwise
       // surfaces only when a reader hits the mixed table much later
-      val prior = sigStore(df.sparkSession, path, Set(SigsBuckets),
-        numHashes, bands, shingleSize, "appendSignatureBuckets")
+      val prior = sigStore(df.sparkSession, path, numHashes, bands,
+        shingleSize, "appendSignatureBuckets")
       val (banded, batchBytes) = bandedSignaturesWithBytes(df, idCol,
         textCol, numHashes, bands, shingleSize, shingler)
       // manifest BEFORE the data append: a crash between the two then
@@ -1273,15 +1186,14 @@ object Dedup {
     * scan. Delegates to the shared minor-compaction machinery
     * ([[graft.sources.Layout.compactHiveDirs]] — semantics, crash
     * recovery and the streaming-sink caveat documented there): only
-    * dirs over both `maxFiles` and the ~`targetBytes`-per-file ideal
-    * are rewritten, cold dirs stay byte-identical, row content is
+    * dirs over both `maxFiles` and the ~128 MB-per-file ideal are
+    * rewritten, cold dirs stay byte-identical, row content is
     * preserved exactly (spec-proven: probes are row-identical
     * before/after). Returns the number of dirs rewritten. */
   def compactSignatureBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFiles: Int = 8, targetBytes: Long = 128L << 20): Int =
+      path: String, maxFiles: Int = 8): Int =
     graft.sources.Layout.withTableWriteLock(spark, path) {
-      graft.sources.Layout.compactHiveDirs(spark, path, "bgrp=", maxFiles,
-        targetBytes)
+      graft.sources.Layout.compactHiveDirs(spark, path, "bgrp=", maxFiles)
     }
 
   // ---- duplicated-span statistics (ExactSubstr family, q86's operator) ----
@@ -1351,7 +1263,7 @@ object Dedup {
   }
 
   /** Stage the corpus's span-frequency table to parquet — the
-    * [[stageSignatures]] contract for the ExactSubstr family. The global
+    * [[stageSignatureBuckets]] contract for the ExactSubstr family. The global
     * span groupBy (corpus-token-count × 16 bytes of shuffle) is paid
     * ONCE per corpus snapshot; the staged table is (h, n_docs) —
     * span-vocabulary-sized, two int64 columns, no text — hash-range-

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Inverted-index staging for keyword search (q129's production form;
   * reference behavior: full-scan keyword scoring, re-expressed as a
   * stage-once/probe-many layout — the same contract as
-  * [[Dedup.stageSignatures]] (q112) and [[Dedup.stageSpanStats]]).
+  * [[Dedup.stageSignatureBuckets]] (q112) and [[Dedup.stageSpanStats]]).
   *
   * The inline search (q129) pays a full corpus scan + token explode per
   * query. [[stagePostings]] pays that once per corpus snapshot, writing
@@ -34,7 +34,7 @@ object Postings {
     * uses the corpus document count at staging time, so probes against
     * a stale index score against the snapshot — re-stage (or append and
     * re-derive weights) when the corpus advances, exactly the
-    * [[Dedup.stageSignatures]] snapshot contract.
+    * [[Dedup.stageSignatureBuckets]] snapshot contract.
     *
     * The two tables are INTERDEPENDENT (weights derive from postings),
     * so the restage commits through

@@ -433,8 +433,8 @@ object Similarity {
     * the corpus table.
     *
     * The ANN production shape ([[ivfProbeStaged]] / [[appendToIvfIndex]]
-    * complete it), mirroring what Dedup.stageSignatures does for text
-    * dedup: training + full-corpus assignment are the ONCE-per-snapshot
+    * complete it), mirroring what Dedup.stageSignatureBuckets does for
+    * text dedup: training + full-corpus assignment are the ONCE-per-snapshot
     * cost; each query batch afterwards probes the staged table. Because
     * `assignment` is hive-partitioned on `cell`, a probe's bucket join
     * triggers dynamic partition pruning — the scan reads ONLY the
@@ -526,16 +526,16 @@ object Similarity {
     * compaction machinery ([[graft.sources.Layout.compactHiveDirs]] —
     * semantics, crash recovery, and the streaming-sink caveat documented
     * there) rewrites ONLY the cells whose file count exceeds `maxFiles`
-    * and the ~`targetBytes`-per-file ideal (the same ~128 MB sizing rule
-    * as [[stageIvfIndex]]'s `splits`), leaving cold cells' files
+    * and the ~128 MB-per-file ideal (the same sizing rule as
+    * [[stageIvfIndex]]'s `splits`), leaving cold cells' files
     * byte-identical. Returns the number of cells rewritten. Row content
     * is preserved exactly (spec-proven: probes are bit-identical
     * before/after). */
   def compactIvfCells(spark: org.apache.spark.sql.SparkSession, path: String,
-      maxFiles: Int = 8, targetBytes: Long = 128L << 20): Int =
+      maxFiles: Int = 8): Int =
     graft.sources.Layout.withTableWriteLock(spark, path) {
       graft.sources.Layout.compactHiveDirs(spark, s"$path/assignment", "cell=",
-        maxFiles, targetBytes)
+        maxFiles)
     }
 
   /** Whether a measured probe frame (row count + max embedding width)

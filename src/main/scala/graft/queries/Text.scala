@@ -908,34 +908,35 @@ object Text extends QueryModule {
 
     // ---- staged-signature incremental dedup (stage once, probe cheap) ----
     // q85's production form: the corpus side's shingle+signature pipeline
-    // is paid ONCE by Dedup.stageSignatures (bkey-clustered parquet, no
-    // document text) and every ingest batch probes the staged table —
-    // the per-batch plan scans documents exactly once (the new batch;
-    // asserted in ScaleSpec) plus the signature table. Same verdicts as
-    // q85 by construction, so the same oracle gates both: a staging
-    // round-trip that altered any verdict would hash-mismatch here.
+    // is paid ONCE by Dedup.stageSignatureBuckets (the append-able
+    // band-group store, no document text) and every ingest batch probes
+    // the store — the per-batch plan scans documents exactly once (the
+    // new batch; asserted in ScaleSpec) plus the signature store. Same
+    // verdicts as q85 by construction, so the same oracle gates both: a
+    // staging round-trip that altered any verdict would hash-mismatch
+    // here.
     Q("q112_staged_incremental_dedup", Some(s"""
       WITH $dkLshPairs
       SELECT b AS doc_id, MIN(a) AS dup_of, MAX(jaccard) AS best_jaccard
       FROM j WHERE jaccard >= 0.5 AND a < 250 AND b >= 250
       GROUP BY b ORDER BY doc_id""")) { (s, d) =>
       val docs = Tables.documents(s, d)
-      // Staging is the ONCE-per-snapshot cost: the staged table is keyed
+      // Staging is the ONCE-per-snapshot cost: the staged store is keyed
       // by the documents' file listing and the signature format + params
-      // (v3s: stageSignatures' bkey-clustered layout, hashed shingle
-      // carry, manifest), so repeat invocations (bench runs, the oracle
-      // run, the plan spec) measure the cheap per-batch probe — the
-      // production steady state — and a format change never reuses an
-      // incompatible table left in tmpdir.
+      // (v4s: stageSignatureBuckets' band-group layout, four `bgrp=`
+      // dirs, hashed shingle carry, manifest), so repeat invocations in
+      // one JVM (bench reps, the oracle run, the plan spec) measure the
+      // cheap per-batch probe — the production steady state — and a
+      // format change never reuses an incompatible store.
       val staged = graft.sources.Layout.stagedSnapshot(docs, "sigs",
-          "v3s|h=8|b=4|sh=3") { tmp =>
-        Dedup.stageSignatures(docs.filter(col("doc_id") < 250), "doc_id",
+          "v4s|h=8|b=4|sh=3") { tmp =>
+        Dedup.stageSignatureBuckets(docs.filter(col("doc_id") < 250), "doc_id",
           "text", tmp, numHashes = 8, bands = 4, shingleSize = 3,
-          numFiles = 4)
+          nGroups = 4)
       }
-      // the PATH overload: manifest-checked parameters + the persisted
-      // measured text volume picks the corpus side's join regime — the
-      // staged probe never re-scans the corpus to price it
+      // manifest-checked parameters + the persisted measured text volume
+      // pick the corpus side's join regime — the staged probe never
+      // re-scans the corpus to price it
       Dedup.incrementalNearDupsStaged(
           s, staged, docs.filter(col("doc_id") >= 250),
           "doc_id", "text", numHashes = 8, bands = 4, shingleSize = 3,
@@ -1793,7 +1794,7 @@ object Text extends QueryModule {
         ROW_NUMBER() OVER (PARTITION BY doc_id
           ORDER BY run_len DESC, start_pos, tok) AS rn FROM runs)
       SELECT doc_id, tok AS run_token, CAST(run_len AS BIGINT) AS max_run,
-        CAST(start_pos AS BIGINT) AS start_pos, run_len >= 3 AS looped
+        CAST(start_pos AS INTEGER) AS start_pos, run_len >= 3 AS looped
       FROM best WHERE rn = 1 ORDER BY doc_id""")) { (s, d) =>
       val t = Tables.documents(s, d)
         .select(col("doc_id"),

@@ -263,15 +263,15 @@ object Layout {
 
   /** A snapshot staged once per source content: `stage` writes the table
     * for `source`, manifest included, into a fresh directory, which is
-    * renamed to a path under the JVM temp dir keyed by `salt` (the staged
+    * renamed to a path under [[snapshotRoot]] keyed by `salt` (the staged
     * format and its parameters) and the source frame's file listing —
     * the (path, length, mtime) key [[graft.core.Measured]] trusts. A
-    * later call over the same files finds the keyed path's manifest and
-    * stages nothing; a source rewritten in place changes the listing, so
-    * it gets a new key and is restaged. The rename is the commit: the
-    * keyed path exists only whole, and of two concurrent first calls the
-    * loser's rename fails and its copy is discarded. Returns the keyed
-    * path.
+    * later call in this JVM over the same files finds the keyed path's
+    * manifest and stages nothing; a source rewritten in place changes the
+    * listing, so it gets a new key and is restaged. The rename is the
+    * commit: the keyed path exists only whole, and of two concurrent
+    * first calls the loser's rename fails and its copy is discarded.
+    * Returns the keyed path.
     *
     * Same trust model as rsync's quick-check: a file rewritten in place
     * to the same length within one mtime tick keeps its key. Spark's
@@ -284,7 +284,7 @@ object Layout {
       .sorted.mkString("\n")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$salt|$listing".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val staged = s"${System.getProperty("java.io.tmpdir")}/graft_staged_${name}_$key"
+    val staged = s"${snapshotRoot.getPath}/graft_staged_${name}_$key"
     if (!new java.io.File(staged, ManifestName).exists()) {
       val tmp = s"$staged.tmp-${java.util.UUID.randomUUID()}"
       stage(tmp)
@@ -300,6 +300,22 @@ object Layout {
     }
     staged
   }
+
+  /** The parent of every [[stagedSnapshot]] this JVM stages: one dir in
+    * java.io.tmpdir, made on the first stage. A snapshot is therefore
+    * reused only within one JVM, and no JVM deletes a snapshot another
+    * is reading. A shutdown hook runs [[dropSnapshots]]; a JVM killed
+    * without running its hooks (SIGKILL) leaves the dir behind. */
+  private[graft] lazy val snapshotRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft_staged_jvm").toFile
+    sys.addShutdownHook(dropSnapshots())
+    root
+  }
+
+  /** Delete [[snapshotRoot]] and every snapshot under it: the shutdown
+    * hook's body. A later [[stagedSnapshot]] in this JVM restages. */
+  private[graft] def dropSnapshots(): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(snapshotRoot)
 
   private def atomicStagedWriteLocked(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path)(write: String => Unit): Unit = {
@@ -332,10 +348,10 @@ object Layout {
     *
     * Rewrites ONLY the dirs under `tableDir` (matching `prefix`, e.g.
     * `"cell="` / `"bgrp="`) whose file count exceeds both `maxFiles` and
-    * the ~`targetBytes`-per-file ideal; cold dirs' files stay
+    * the ~[[CompactTargetBytes]]-per-file ideal; cold dirs' files stay
     * byte-identical — cost is proportional to the fragmented fraction,
     * never a full-table rewrite. Each selected dir is rewritten to
-    * `ceil(bytes / targetBytes)` files and committed by directory
+    * `ceil(bytes / CompactTargetBytes)` files and committed by directory
     * rename: new files land in a hidden sibling dir, the old dir is
     * moved aside, the new one renamed in, then the old files are
     * deleted. Renames are atomic per-directory on HDFS-like stores; a
@@ -357,10 +373,8 @@ object Layout {
     * lakehouse table format's job, out of scope with parquet-only
     * deps). */
   private[graft] def compactHiveDirs(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, prefix: String, maxFiles: Int,
-      targetBytes: Long): Int = {
+      tableDir: String, prefix: String, maxFiles: Int): Int = {
     require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
     import org.apache.hadoop.fs.Path
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -384,7 +398,8 @@ object Layout {
       val parts = fs.listStatus(cd.getPath).filter(f => f.isFile &&
         !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
       val bytes = parts.map(_.getLen).sum
-      val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      val want = math.max(1L,
+        (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
       if (parts.length > math.max(maxFiles, want)) {
         val name = cd.getPath.getName
         val newDir = new Path(root, s".compact-new-$name")
@@ -406,4 +421,7 @@ object Layout {
     }
     compacted
   }
+
+  /** The file size [[compactHiveDirs]] rewrites a fragmented dir to. */
+  private val CompactTargetBytes = 128L << 20
 }

@@ -48,7 +48,7 @@ object PlansFull {
     "q103_centroid_outliers" -> "centroid outliers: label centroids from one float-native array-buffer partial agg (no per-row cast allocation above the scan), broadcast back, map-side distances, per-label rank window",
     "q56_tfidf_top_terms" -> "TF-IDF: corpus tokenized once, df counted from tf's already-distinct (doc, term) rows — no COUNT(DISTINCT) Expand row-multiplication through the first shuffle",
     "q107_embedding_covariance" -> "covariance: per-row triangle products into ONE global array-buffer aggregate (partial + final, no dim-pair explode), single-row posexplode unfurl",
-    "q112_staged_incremental_dedup" -> "staged-signature probe: the new batch is the ONLY documents scan (the corpus side reads the bkey-clustered signature table) — the once-per-snapshot staging cost is absent from the per-batch plan",
+    "q112_staged_incremental_dedup" -> "staged-signature probe: the new batch is the ONLY documents scan (the corpus side reads the band-group signature store) — the once-per-snapshot staging cost is absent from the per-batch plan",
     "q113_incremental_clusters" -> "incremental CC: existing labels replayed as star edges + new pairs, one checkpointed pair materialization shared by both consumers — CC input is labels + new pairs, never the pair history; both CC calls fit the driver bound, so each is one edges pin + one collect + union-find, and the plan joins two local relations",
     "q115_span_novelty" -> "span novelty: compiled span hashing map-only, ONE partial-aggregated min per span hash, hash equi-join back — the ExactSubstr-style audit without a suffix array",
     "q119_centroid_drift" -> "centroid drift: two array-buffer centroid aggregates (one per snapshot slice), label-count-sized equi-join, grid-floored integer distance",
@@ -90,8 +90,9 @@ object PlansFull {
     // renumbers the ones after it
     .replaceAll("(lambda \\w+?)_\\d+", "$1_X")
     // temp staging roots (IVF indexes, signature stores, spools) get a
-    // fresh random dir per run
-    .replaceAll("/tmp/[-\\w.]+", "TMPDIR")
+    // fresh random dir per run; content-keyed snapshots sit under the
+    // JVM's own snapshot root
+    .replaceAll("/tmp/(?:graft_staged_jvm\\d+/)?[-\\w.]+", "TMPDIR")
     .replaceAll("target/[-\\w./]*tmp[-\\w./]*", "TMPDIR"))
 
   /** Whole-stage codegen ids and AQE query-stage ids are handed out as

@@ -80,7 +80,7 @@ class ConcurrencySpec extends SparkTestBase {
       .toDF("doc_id", "text")
 
   private def probeSigs(path: String): Seq[Row] =
-    Dedup.incrementalNearDupsStaged(spark.read.parquet(path), probeBatch,
+    Dedup.incrementalNearDupsStaged(spark, path, probeBatch,
         "doc_id", "text", threshold = 0.3)
       .orderBy("doc_id").collect().toSeq
 

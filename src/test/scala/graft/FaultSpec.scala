@@ -94,8 +94,8 @@ class FaultSpec extends SparkTestBase {
 
   private lazy val lifecycles = Seq(
     Lifecycle("signatures",
-      p => Dedup.stageSignatures(corpus, "doc_id", "text", p, numFiles = 2),
-      p => Dedup.incrementalNearDupsStaged(spark.read.parquet(p), batch,
+      p => Dedup.stageSignatureBuckets(corpus, "doc_id", "text", p, nGroups = 2),
+      p => Dedup.incrementalNearDupsStaged(spark, p, batch,
           "doc_id", "text", threshold = 0.5)
         .orderBy("doc_id").collect().toSeq),
     Lifecycle("span-stats",
@@ -177,8 +177,8 @@ class FaultSpec extends SparkTestBase {
   test("restage whose WRITE fails leaves the old snapshot live and recoverable") {
     val base = tmpDir("fault-f")
     val path = s"$base/sigs"
-    Dedup.stageSignatures(corpus, "doc_id", "text", path, numFiles = 2)
-    def probe() = Dedup.incrementalNearDupsStaged(spark.read.parquet(path),
+    Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 2)
+    def probe() = Dedup.incrementalNearDupsStaged(spark, path,
       batch, "doc_id", "text", threshold = 0.5).orderBy("doc_id").collect().toSeq
     val ref = probe()
     // a restage that dies mid-write (worker lost, OOM, bad input...)
@@ -192,7 +192,7 @@ class FaultSpec extends SparkTestBase {
     }
     assert(probe() === ref)
     // the wreck is cleared and the table restages cleanly afterwards
-    Dedup.stageSignatures(corpus, "doc_id", "text", path, numFiles = 2)
+    Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 2)
     assert(probe() === ref)
     assert(!fs.exists(stagingOf(path)) && !fs.exists(oldOf(path)))
   }
@@ -288,7 +288,7 @@ class FaultSpec extends SparkTestBase {
     }
     compactCrashCheck(path, "bgrp=",
       () => Dedup.compactSignatureBuckets(spark, path, maxFiles = 1),
-      () => Dedup.incrementalNearDupsStaged(spark.read.parquet(path), batch,
+      () => Dedup.incrementalNearDupsStaged(spark, path, batch,
           "doc_id", "text", threshold = 0.5)
         .orderBy("doc_id").collect().toSeq)
   }

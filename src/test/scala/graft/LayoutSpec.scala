@@ -45,4 +45,27 @@ class LayoutSpec extends SparkTestBase {
     } finally Seq(first, second).foreach(p =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
+
+  test("every snapshot lies under this JVM's root, and the shutdown hook's delete removes them") {
+    val src = tmpDir("snapshot-root") + "/t.parquet"
+    spark.range(10).write.parquet(src)
+    val salt = s"layout-spec-${java.util.UUID.randomUUID()}"
+    def snapshot(name: String): java.io.File = new java.io.File(
+      Layout.stagedSnapshot(spark.read.parquet(src), name, salt) { tmp =>
+        spark.range(10).write.parquet(tmp)
+        Layout.writeManifest(spark, tmp, Layout.Manifest("spec", 1))
+      })
+    val snaps = Seq(snapshot("a"), snapshot("b"))
+    val root = Layout.snapshotRoot
+    assert(root.getParentFile == new java.io.File(System.getProperty("java.io.tmpdir")))
+    snaps.foreach { p =>
+      assert(p.getParentFile == root, s"$p is not under $root")
+      assert(new java.io.File(p, Layout.ManifestName).exists())
+    }
+    Layout.dropSnapshots()
+    assert(!root.exists() && snaps.forall(!_.exists()), "snapshots survived the hook's delete")
+    // a later stage in this JVM makes the root again
+    val again = snapshot("a")
+    assert(again.getParentFile == root && new java.io.File(again, Layout.ManifestName).exists())
+  }
 }

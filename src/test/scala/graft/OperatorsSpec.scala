@@ -1234,7 +1234,7 @@ class OperatorsSpec extends SparkTestBase {
       "doc_id", "text", full, nGroups = 4)
 
     def verdicts(p: String) = Dedup.incrementalNearDupsStaged(
-        spark.read.parquet(p), probe, "doc_id", "text", threshold = 0.5)
+        spark, p, probe, "doc_id", "text", threshold = 0.5)
       .orderBy("doc_id").collect().toSeq
     // band keys depend only on the signature parameters, so ingest by
     // append is row-identical to restaging the union

@@ -225,15 +225,15 @@ class ProbeIOSpec extends SparkTestBase {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.01")
     val dir = tmpDir("io-sig")
     val path = s"$dir/sigs"
-    Dedup.stageSignatures(docs.filter(col("doc_id") < 250), "doc_id", "text",
-      path, numFiles = 4)
+    Dedup.stageSignatureBuckets(docs.filter(col("doc_id") < 250), "doc_id",
+      "text", path, nGroups = 4)
 
-    val probe = Dedup.incrementalNearDupsStaged(spark.read.parquet(path),
+    val probe = Dedup.incrementalNearDupsStaged(spark, path,
       docs.filter(col("doc_id") >= 250), "doc_id", "text", threshold = 0.5)
     probe.collect()
 
     // corpus is never re-shingled: exactly ONE documents scan (the new
-    // batch), and the staged side reads its own 4 clustered files — a
+    // batch), and the staged side reads its own band-group files — a
     // probe whose cost became corpus-shaped would add documents scans
     val docScans = scansUnder(probe, "documents.parquet")
     assert(docScans.size === 1,

@@ -300,11 +300,12 @@ class ScaleSpec extends SparkTestBase {
     val d = "/root/testdata/sf0.001"
     val q = SparkEntry.queries("q112_staged_incremental_dedup")
     val df1 = q(spark, d) // builds (or reuses) the staged signature table
-    val plan = df1.queryExecution.executedPlan.toString
-    val dir = "graft_staged_sigs_[0-9a-f]+".r.findFirstIn(plan)
-    assert(dir.isDefined, s"staged path not in plan:\n$plan")
+    // the plan string abbreviates long scan locations; the input files
+    // carry the whole staged path
+    val dir = "graft_staged_sigs_[0-9a-f]+".r.findFirstIn(df1.inputFiles.mkString(" "))
+    assert(dir.isDefined, s"staged path not among the inputs: ${df1.inputFiles.toSeq}")
     val success = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/${dir.get}", "_SUCCESS")
+      s"${graft.sources.Layout.snapshotRoot}/${dir.get}", "_SUCCESS")
     assert(success.exists, s"missing commit marker at $success")
     val t0 = success.lastModified
     Thread.sleep(1100) // fs mtime granularity

@@ -125,21 +125,10 @@ class SigStoreSpec extends SparkTestBase {
     assert(files(path) == before, "mismatched append mutated the store")
   }
 
-  test("append into a flat clustered store fails fast (layout guard)") {
-    val path = tmpDir("layout") + "/sigs"
-    Dedup.stageSignatures(docs(40), "doc_id", "text", path, numFiles = 2)
-    val e = intercept[IllegalStateException] {
-      Dedup.appendSignatureBuckets(docs(10), "doc_id", "text", path)
-    }
-    assert(e.getMessage.contains("layout") ||
-      e.getMessage.contains("stageSignatureBuckets"), e.getMessage)
-  }
-
   test("append and probe fail fast on a v1 (string-shingle) store") {
     val path = tmpDir("v1") + "/sigs"
     // fake a v1 store: sh as ARRAY<STRING>, no manifest, bucket layout —
-    // append refuses the store without a manifest, and the frame probe
-    // refuses the string shingle type
+    // append and probe both refuse a store without a manifest
     Seq((1L, Seq("a b c"), 0, "k", 0))
       .toDF("doc_id", "sh", "band", "bkey", "bgrp")
       .write.partitionBy("bgrp").parquet(path)
@@ -148,8 +137,7 @@ class SigStoreSpec extends SparkTestBase {
     }
     assert(eApp.getMessage.contains("restage"))
     val eProbe = intercept[IllegalStateException] {
-      Dedup.incrementalNearDupsStaged(spark.read.parquet(path), docs(5),
-        "doc_id", "text")
+      Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text")
     }
     assert(eProbe.getMessage.contains("restage"))
   }
@@ -211,7 +199,7 @@ class SigStoreSpec extends SparkTestBase {
     val corpus = all.filter(col("doc_id") < 90)
     val batch = all.filter(col("doc_id") >= 90)
     val path = tmpDir("probe-parity") + "/sigs"
-    Dedup.stageSignatures(corpus, "doc_id", "text", path, numFiles = 2)
+    Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 2)
 
     // parameter mismatch fails fast instead of silently zero candidates
     intercept[IllegalStateException] {
@@ -279,26 +267,45 @@ class SigStoreSpec extends SparkTestBase {
     assert(plan.contains("SortMergeJoin"), s"expected pinned SMJ:\n$plan")
   }
 
+  test("a disabled broadcast threshold vetoes every broadcast of the staged probe") {
+    val all = docs(120, repeatEvery = 30)
+    val corpus = all.filter(col("doc_id") < 90)
+    val batch = all.filter(col("doc_id") >= 90)
+    val path = tmpDir("veto") + "/sigs"
+    Dedup.stageSignatureBuckets(corpus, "doc_id", "text", path, nGroups = 2)
+    val inline = Dedup.incrementalNearDups(corpus, batch, "doc_id", "text")
+      .orderBy("doc_id").collect().toSeq
+    assert(inline.nonEmpty, "fixture produced no near-dups")
+    // both sides are far under the carry cap: only the conf can deny them
+    // the explicit broadcast
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val staged = Dedup.incrementalNearDupsStaged(spark, path, batch,
+        "doc_id", "text").orderBy("doc_id")
+      assert(staged.collect().toSeq === inline)
+      val plan = staged.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange"),
+        s"a broadcast planned with broadcasts disabled:\n$plan")
+      assert(plan.contains("SortMergeJoin"), s"expected sort-merge:\n$plan")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("a store with data but no manifest fails fast with restage on append and path probe, writing nothing") {
-    val buckets = tmpDir("nomanifest-bkt") + "/sigs"
-    Dedup.stageSignatureBuckets(docs(40), "doc_id", "text", buckets, nGroups = 2)
-    val flat = tmpDir("nomanifest-flat") + "/sigs"
-    Dedup.stageSignatures(docs(40), "doc_id", "text", flat, numFiles = 2)
-    Seq(buckets, flat).foreach { path =>
-      assert(new java.io.File(path, Layout.ManifestName).delete())
-      val before = files(path)
-      val eApp = intercept[IllegalStateException] {
-        Dedup.appendSignatureBuckets(docs(5), "doc_id", "text", path, nGroups = 2)
-      }
-      assert(eApp.getMessage.contains("restage"), eApp.getMessage)
-      val eProbe = intercept[IllegalStateException] {
-        Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text",
-          numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
-          shingler = null)
-      }
-      assert(eProbe.getMessage.contains("restage"), eProbe.getMessage)
-      assert(files(path) == before, s"a refused call wrote into $path")
+    val path = tmpDir("nomanifest-bkt") + "/sigs"
+    Dedup.stageSignatureBuckets(docs(40), "doc_id", "text", path, nGroups = 2)
+    assert(new java.io.File(path, Layout.ManifestName).delete())
+    val before = files(path)
+    val eApp = intercept[IllegalStateException] {
+      Dedup.appendSignatureBuckets(docs(5), "doc_id", "text", path, nGroups = 2)
     }
+    assert(eApp.getMessage.contains("restage"), eApp.getMessage)
+    val eProbe = intercept[IllegalStateException] {
+      Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text")
+    }
+    assert(eProbe.getMessage.contains("restage"), eProbe.getMessage)
+    assert(files(path) == before, s"a refused call wrote into $path")
   }
 
   test("a kind, version, parameter or layout mismatch fails fast before any write") {
@@ -307,7 +314,6 @@ class SigStoreSpec extends SparkTestBase {
     val good = manifest(path)
     Seq(
       good.copy(kind = Similarity.IvfKind),
-      good.copy(kind = Dedup.SigsClustered), // the flat layout: append-only refusal
       good.copy(version = good.version + 1),
       good.copy(params = good.params + ("bands" -> 8L)),
       good.copy(params = good.params - "shingle_size")
@@ -319,12 +325,9 @@ class SigStoreSpec extends SparkTestBase {
       }
       assert(e.getMessage.contains("restage"), e.getMessage)
       assert(files(path) == before, s"append wrote past $bad")
-      if (bad.kind != Dedup.SigsClustered) // the probe reads either layout
-        assert(intercept[IllegalStateException] {
-          Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text",
-            numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
-            shingler = null)
-        }.getMessage.contains("restage"))
+      assert(intercept[IllegalStateException] {
+        Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id", "text")
+      }.getMessage.contains("restage"))
     }
   }
 
@@ -346,21 +349,15 @@ class SigStoreSpec extends SparkTestBase {
 
   test("staging an empty corpus yields a readable signature store") {
     val none = docs(10).filter(col("doc_id") < 0)
-    val buckets = tmpDir("empty-bkt") + "/sigs"
-    Dedup.stageSignatureBuckets(none, "doc_id", "text", buckets, nGroups = 4)
-    val flat = tmpDir("empty-flat") + "/sigs"
-    Dedup.stageSignatures(none, "doc_id", "text", flat, numFiles = 2)
-    Seq(buckets, flat).foreach { path =>
-      assert(textBytesOf(path) == 0L)
-      assert(Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id",
-        "text", numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
-        shingler = null).count() == 0)
-    }
-    // and the empty bucket store takes appends
-    Dedup.appendSignatureBuckets(docs(20), "doc_id", "text", buckets, nGroups = 4)
-    assert(Dedup.incrementalNearDupsStaged(spark, buckets,
-      docs(5).withColumn("doc_id", col("doc_id") + 5000L), "doc_id", "text",
-      numHashes = 8, bands = 4, shingleSize = 3, threshold = 0.5,
-      shingler = null).count() == 5)
+    val path = tmpDir("empty-bkt") + "/sigs"
+    Dedup.stageSignatureBuckets(none, "doc_id", "text", path, nGroups = 4)
+    assert(textBytesOf(path) == 0L)
+    assert(Dedup.incrementalNearDupsStaged(spark, path, docs(5), "doc_id",
+      "text").count() == 0)
+    // and the empty store takes appends
+    Dedup.appendSignatureBuckets(docs(20), "doc_id", "text", path, nGroups = 4)
+    assert(Dedup.incrementalNearDupsStaged(spark, path,
+      docs(5).withColumn("doc_id", col("doc_id") + 5000L), "doc_id",
+      "text").count() == 5)
   }
 }
