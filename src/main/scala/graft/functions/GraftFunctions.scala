@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.{call_function, lit}
-import graft.functions.expressions.{CentroidTable, Centroids, FixedPointDot, FixedPointVectorSum, HammingDistance, HashedSet, Md5Hash60, MinHashSlots, MinHashSlotsFromHashes, NearestCell, NgramShingles, RollingFingerprint, ShingleRepetition, SimHashBits, TokenStats}
+import graft.functions.expressions.{CentroidTable, Centroids, FixedPointDot, FixedPointVectorSum, HammingDistance, HashedSet, Md5Hash60, MinHashSlotsFromHashes, NearestCell, NgramShingles, RollingFingerprint, ShingleRepetition, SimHashBits, TokenStats}
 
 /** Engine function registry: exposes custom Catalyst expressions to both
   * the SQL surface (`SELECT graft_hamming(a, b)`) and the Column API
@@ -55,8 +55,10 @@ object GraftFunctions {
     "graft_word_ngrams_all" -> checked("graft_word_ngrams_all", 2)(e =>
       NgramShingles(e(0), foldedInt(e(1)), word = true, distinct = false)),
     "graft_hash64" -> checked("graft_hash64", 2)(e => Md5Hash60(e(0), foldedInt(e(1)))),
+    // one MinHash kernel pair: a string-set signature hashes each element
+    // once (HashedSet), then takes the k slot minima over the hashes
     "graft_minhash_slots" -> checked("graft_minhash_slots", 2)(e =>
-      MinHashSlots(e(0), foldedInt(e(1)))),
+      MinHashSlotsFromHashes(HashedSet(e(0)), foldedInt(e(1)))),
     "graft_hashed_set" -> checked("graft_hashed_set", 1)(e => HashedSet(e(0))),
     "graft_minhash_from_hashes" -> checked("graft_minhash_from_hashes", 2)(e =>
       MinHashSlotsFromHashes(e(0), foldedInt(e(1)))),
@@ -115,14 +117,14 @@ object GraftFunctions {
   def hash64c(v: Column, seed: Int): Column =
     call_function("graft_hash64", v, lit(seed))
 
-  /** k-wide MinHash signature of a string-set column as ARRAY<BIGINT>
-    * (compiled one-pass; NULL for empty sets — same family/values as the
-    * explode form). */
+  /** k-wide MinHash signature of a string-set column as ARRAY<BIGINT>:
+    * [[minhashSlotsFromHashes]] over [[hashedSet]] (compiled; NULL for
+    * empty sets — same family/values as the HOF `TextFunctions.minhashSig`). */
   def minhashSlots(set: Column, k: Int): Column =
     call_function("graft_minhash_slots", set, lit(k))
 
   /** Per-element hash60 of a string set — the shuffle-compact carry form
-    * (compiled; same element hashes MinHashSlots applies internally). */
+    * and the input of every MinHash signature (compiled). */
   def hashedSet(set: Column): Column =
     call_function("graft_hashed_set", set)
 

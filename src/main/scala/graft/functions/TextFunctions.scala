@@ -50,8 +50,8 @@ object TextFunctions {
     conv(substring(md5(concat(v, lit(s":$seed"))), 1, 15), 16, 10).cast("long")
 
   /** xor-mix constant for minhash slot i (md5-derived; one shared family
-    * across the HOF variant here, the explode variant in Dedup, and
-    * MinHashAggregator — DuckDB mirror:
+    * across the HOF variant here and the compiled kernel
+    * (`MinHashSlotsFromHashes`) — DuckDB mirror:
     * CAST(('0x'||substr(md5('mix:i'),1,15)) AS BIGINT)). */
   def mixConstant(i: Int): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
@@ -62,9 +62,9 @@ object TextFunctions {
 
   /** MinHash slot `i` over a set (array) column: min over elements of
     * hash64(t, 0) XOR mixConstant(i). HOF form — convenient in a single
-    * projection; for bulk signature computation prefer the explode-based
-    * [[graft.operators.Dedup.minhashSignatures]] (codegen'd + partial
-    * aggregation). */
+    * projection; for bulk signature computation prefer the compiled
+    * [[graft.operators.Dedup.minhashSignatures]] (one hash per element,
+    * all k slots in one pass). */
   def minhash(set: Column, i: Int): Column =
     array_min(transform(set, t => hash64(t, 0).bitwiseXOR(lit(mixConstant(i)))))
 

@@ -14,72 +14,6 @@ private[expressions] object SigHash {
   def hash60(s: UTF8String): Long = Md5Hash60.hash60(s, suffix)
 }
 
-/** k-wide MinHash signature of a string-set column in ONE compiled pass:
-  * slot i = min over elements of hash60(t) XOR mixConstant(i) — the same
-  * md5-derived family as [[graft.functions.TextFunctions.minhash]], the
-  * explode form, and MinHashAggregator (all DuckDB-mirrorable). Returns
-  * ARRAY<BIGINT>(k); NULL for a NULL or empty input set (matching the
-  * explode form, where such docs aggregate no rows → all-NULL slots).
-  * NULL elements are skipped, exactly as `array_min` skips the NULL that
-  * `hash64(NULL)` produces in the HOF form.
-  *
-  * At scale this is the signature shape of choice: a pure per-row
-  * projection — no explode (which multiplies the corpus by shingle count
-  * through a shuffle) and no grouped aggregation. The explode+min-agg
-  * form in Dedup predates compiled hashing and is kept only where the
-  * signature must be built from pre-exploded element streams. */
-case class MinHashSlots(child: Expression, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  require(k >= 1, s"signature width must be >= 1, got $k")
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_slots"
-
-  private val mix: Array[Long] =
-    Array.tabulate(k)(graft.functions.TextFunctions.mixConstant)
-
-  def compute(arr: ArrayData): ArrayData = {
-    if (arr == null || arr.numElements() == 0) return null
-    val slots = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    var seen = false
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        seen = true
-        val h = SigHash.hash60(arr.getUTF8String(i))
-        var j = 0
-        while (j < k) {
-          val v = h ^ mix(j)
-          if (v < slots(j)) slots(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    if (!seen) return null // all-NULL set behaves like an empty set
-    new GenericArrayData(slots)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mhslots", this, classOf[MinHashSlots].getName)
-    nullSafeCodeGen(ctx, ev, input => s"""
-      ${ev.value} = $ref.compute($input);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSlots =
-    copy(child = newChild)
-}
-
 /** SimHash of a token-set column in ONE compiled pass: per element, +1/−1
   * votes on each of `bits` bit positions of hash60(t); bit set iff its
   * vote sum is positive. Identical values to the explode + 60-column
@@ -135,10 +69,11 @@ case class SimHashBits(child: Expression, bits: Int)
 }
 
 /** Per-element 60-bit hash of a string-set column: element i →
-  * hash60(element) — [[SigHash]]'s md5-60 family (seed 0), the SAME
-  * derivation [[MinHashSlots]] applies internally, so a hashed set and a
-  * signature computed from it ([[MinHashSlotsFromHashes]]) agree exactly
-  * with the string-input pipeline. Exists for the CARRY problem: shipping
+  * hash60(element) — [[SigHash]]'s md5-60 family (seed 0). The first half
+  * of the engine's one MinHash kernel pair: a signature is always
+  * [[MinHashSlotsFromHashes]] over this output (`graft_minhash_slots`
+  * builds exactly that composition), so every element is hashed once,
+  * not once per slot. The hashed set is also the CARRY form: shipping
   * shingle sets through a shuffle as strings costs 2–4× the bytes of
   * their hashes, and every set-verification consumer (exact Jaccard /
   * containment) only needs element IDENTITY, never content — intersect
@@ -147,7 +82,7 @@ case class SimHashBits(child: Expression, bits: Int)
   * and strictly smaller than the MinHash banding's own false-negative
   * probability). Distinctness is preserved (distinct strings → distinct
   * hashes, same caveat). NULL input → NULL; NULL elements are skipped
-  * (matching [[MinHashSlots]]'s "not in the set" contract). */
+  * ("not in the set"), so an all-NULL set hashes to the empty set. */
 case class HashedSet(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
@@ -183,11 +118,14 @@ case class HashedSet(child: Expression)
     copy(child = newChild)
 }
 
-/** [[MinHashSlots]] over a PRE-HASHED set ([[HashedSet]] output): slot
-  * i = min over elements of h XOR mixConstant(i). Identical values to
-  * MinHashSlots(strings) when the longs are hash60 of those strings —
-  * the hashing work is simply not repeated per slot. NULL or empty
-  * input → NULL (same contract). */
+/** k-wide MinHash signature over a PRE-HASHED set ([[HashedSet]]
+  * output), in one compiled pass: slot i = min over elements of
+  * h XOR mixConstant(i) — the same md5-derived family as the HOF mirror
+  * [[graft.functions.TextFunctions.minhash]] and the DuckDB oracle.
+  * Returns ARRAY<BIGINT>(k); NULL for a NULL or empty input set
+  * (matching the oracle's list_min over [] → all-NULL slots), so an
+  * all-NULL string set, which [[HashedSet]] empties, also gives NULL. A
+  * pure per-row projection — no explode and no grouped aggregation. */
 case class MinHashSlotsFromHashes(child: Expression, k: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
 

@@ -84,22 +84,17 @@ object Dedup {
       .groupBy(col("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
 
-  /** k-wide MinHash signatures: (id, mh0..mh{k-1}) as a pure compiled
-    * projection (MinHashSlots — one md5 per element, k xor-permutation
-    * slots in one pass). NO explode, NO aggregation, NO shuffle: the
-    * signature stage is map-only, which is the shape that holds at
-    * 100 TB. Docs with empty shingle sets (fewer than `shingleSize`
-    * tokens) get all-NULL slots — same as the oracle's list_min over []. */
+  /** k-wide MinHash signatures: (doc_id, mh0..mh{k-1}) — the signature
+    * half of the near-dup projection ([[signatures]]) with the hashed set
+    * dropped: one md5 per element, k xor-permutation slots in one pass.
+    * NO explode, NO aggregation, NO shuffle: the signature stage is
+    * map-only, which is the shape that holds at 100 TB. Docs with empty
+    * shingle sets (fewer than `shingleSize` tokens) get all-NULL slots —
+    * same as the oracle's list_min over []. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 8, shingleSize: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("doc_id"),
-        graft.functions.GraftFunctions.wordShingles(col(textCol), shingleSize).as("sh"))
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.minhashSlots(col("sh"), numHashes).as("__mh"))
-      .select(col("doc_id") +:
-        (0 until numHashes).map(i => element_at(col("__mh"), i + 1).as(s"mh$i")): _*)
-  }
+      numHashes: Int = 8, shingleSize: Int = 3): DataFrame =
+    signatures(df.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
+      numHashes, shingleSize, shingler = null, carry = Nil).drop("sh")
 
   /** SimHash (bit-vote) signatures: (id, simhash) over distinct tokens,
     * as a pure compiled projection (SimHashBits — all `bits` votes in one
@@ -413,9 +408,10 @@ object Dedup {
     * consumers (q57) that compare signatures on the verified pairs.
     *
     * Plan shape (the part that must hold at 100 TB): one scan → compiled
-    * shingling (NgramShingles) → compiled signature (MinHashSlots), all
-    * map-only — no explode, no aggregation, no shuffle before the band
-    * join. The band explode carries shingle-set + signature alongside the
+    * shingling (NgramShingles) → compiled signature (HashedSet →
+    * MinHashSlotsFromHashes, [[bandedSignatures]]), all map-only — no
+    * explode, no aggregation, no shuffle before the band join. The band
+    * explode carries shingle-set + signature alongside the
     * bucket keys, so the self-join's matches already hold both sides'
     * payloads and verification needs NO further joins. A diamond-shaped
     * alternative (signatures here, shingle sets joined back per side)
@@ -721,20 +717,20 @@ object Dedup {
           sequence(lit(0), greatest(size(col("w")) - 1, lit(0)), lit(stride)),
           s => array_join(slice(col("w"), s + 1, lit(segmentTokens)), " ")))
           .as("seg"))
-    bandedSignatures(segs, "doc_id", "seg", numHashes, bands, shingleSize,
-      shingler)
+    bandedSignaturesWithBytes(segs, "doc_id", "seg", numHashes, bands,
+      shingleSize, shingler)._1
       .select("doc_id", "band", "bkey")
       .dropDuplicates("doc_id", "band", "bkey")
   }
 
   /** Target per-task working-set bytes for the shingle-expansion stage
-    * (see [[bandedSignatures]]), together with the measured expansion
-    * factor from stored text bytes to banded UnsafeRows (~45 B per text
-    * byte for char 8-grams hashed ×2 bands at sf1 — the q49 expansion
-    * stage's peak task memory, `graft.tools.Probe <sf1Dir> 1 q49`; 48
-    * is the conservative figure used). ~64 MB / 48 ≈ 1.3 MB of text per
-    * task — the budget that pins the expansion stage's shuffle-write
-    * buffer at ANY corpus size. */
+    * (see [[bandedSignaturesWithBytes]]), together with the measured
+    * expansion factor from stored text bytes to banded UnsafeRows (~45 B
+    * per text byte for char 8-grams hashed ×2 bands at sf1 — the q49
+    * expansion stage's peak task memory, `graft.tools.Probe <sf1Dir> 1
+    * q49`; 48 is the conservative figure used). ~64 MB / 48 ≈ 1.3 MB of
+    * text per task — the budget that pins the expansion stage's
+    * shuffle-write buffer at ANY corpus size. */
   val ShingleTaskBytes: Long = 64L * 1024 * 1024
   val ShingleExpansionPerByte: Int = 48
 
@@ -766,8 +762,8 @@ object Dedup {
       textBytes > MaxBroadcastCarryBytes / CarriedBytesPerTextByte
 
   /** The source text volume, `sum(octet_length(textCol))`, feeding
-    * [[bandedSignatures]]' re-spread and [[candidatePairs]]' broadcast
-    * gate. Parquet sizeInBytes stats reflect COMPRESSED bytes and
+    * [[bandedSignaturesWithBytes]]' re-spread and [[candidatePairs]]'
+    * broadcast gate. Parquet sizeInBytes stats reflect COMPRESSED bytes and
     * under-count repetitive text by 10–20×, so the value is real bytes:
     * one column-pruned exact scan per distinct source lineage and file
     * listing per session ([[graft.core.Measured]] — bench reps and the
@@ -783,27 +779,15 @@ object Dedup {
         .head().getLong(0))
   }
 
-  /** The shared scan→shingle→signature→band pipeline: one scan → compiled
-    * shingling (NgramShingles) → per-element hashing (HashedSet) →
-    * compiled signature (MinHashSlotsFromHashes), all map-only — no
-    * explode shuffle, no aggregation. Docs with empty shingle sets get
-    * NULL slots; concat_ws skips NULLs so their band key is "" — filtered
-    * here (they can never verify, and one giant ""-bucket of short docs
-    * would be O(m²) candidates). Returns
-    * (doc_id, sh: ARRAY<BIGINT>, mh0..mh{k-1}, band, bkey).
+  /** The measured half of the batch banding: [[bandedSignatures]] over
+    * `df`'s (idCol, textCol), plus the measured source text bytes — the
+    * number [[candidatePairs]]' broadcast-vs-merge decision needs.
     *
-    * `sh` is the HASHED shingle set (hash60 per element — the same
-    * derivation the signature uses, so mh values and band keys are
-    * bit-identical to the string pipeline): every downstream consumer
-    * verifies with intersect/size, which only need element identity, and
-    * the hashed carry is 2–4× smaller through every shuffle, sort and
-    * group buffer this family owns.
-    *
-    * SCALE CONTROL — bounded expansion-task memory: this stage's shuffle
-    * write buffers its whole task output in execution memory, and that
-    * output is ~40–50× the stored text bytes (shingle set × bands + the
-    * signature — [[ShingleExpansionPerByte]]). Its peak is therefore
-    * proportional to PER-TASK INPUT bytes — invisible to
+    * SCALE CONTROL — bounded expansion-task memory: the banding stage's
+    * shuffle write buffers its whole task output in execution memory,
+    * and that output is ~40–50× the stored text bytes (shingle set ×
+    * bands + the signature — [[ShingleExpansionPerByte]]). Its peak is
+    * therefore proportional to PER-TASK INPUT bytes — invisible to
     * shuffle-partition or AQE-advisory tuning (map-side), and at a
     * 128 MB-split 100 TB scan it would be multi-GB per task. The input
     * is re-spread so each expansion task gets ≈
@@ -815,20 +799,8 @@ object Dedup {
     * (zero cost) when the source is already fine-grained enough — the
     * sf0.1 bench tier never pays it (Probe's [stage] lines: q49's
     * expansion-task peak 452 MB → ~65 MB at the sf1 soak tier,
-    * 59 → 33 MB at sf0.1 from the hashed carry alone). */
-  private def bandedSignatures(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      shingleSize: Int,
-      shingler: Column => Column): DataFrame =
-    bandedSignaturesWithBytes(df, idCol, textCol, numHashes, bands,
-      shingleSize, shingler)._1
-
-  /** [[bandedSignatures]] plus the measured source text bytes — the
-    * number [[candidatePairs]]' broadcast-vs-merge decision needs. */
+    * 59 → 33 MB at sf0.1 from the hashed carry alone). Batch only: a
+    * streaming frame cannot run the `textBytes` job. */
   private def bandedSignaturesWithBytes(
       df: DataFrame,
       idCol: String,
@@ -837,15 +809,6 @@ object Dedup {
       bands: Int,
       shingleSize: Int,
       shingler: Column => Column): (DataFrame, Long) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val rows = numHashes / bands
-    // compiled shingling (NgramShingles) — the interpreted HOF form
-    // dominated executor time (see the expression's scaladoc)
-    val mkSet: Column => Column =
-      if (shingler != null) shingler
-      else (graft.functions.GraftFunctions.wordShingles(_: Column, shingleSize))
-
     val src0 = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
     val textBytes = this.textBytes(df, textCol)
     val needed = math.min(1 << 18, // runaway guard
@@ -855,24 +818,63 @@ object Dedup {
       if (needed > 1 && needed > math.max(1, src0.rdd.getNumPartitions))
         src0.repartition(needed)
       else src0
+    (bandedSignatures(src, numHashes, bands, shingleSize, shingler), textBytes)
+  }
 
-    val sh = src.select(col("doc_id"),
-      graft.functions.GraftFunctions.hashedSet(mkSet(col("__text"))).as("sh"))
-    val sigs = sh.select(col("doc_id"), col("sh"),
-      graft.functions.GraftFunctions.minhashSlotsFromHashes(col("sh"), numHashes)
-        .as("__mh"))
-      .select(col("doc_id") :: col("sh") ::
-        (0 until numHashes).map(i =>
-          element_at(col("__mh"), i + 1).as(s"mh$i")).toList: _*)
-
+  /** The ONE signature-and-band projection every near-dup path shares —
+    * batch pairs, staged stores, and the streaming operator
+    * ([[graft.streaming.StatefulOps.streamingNearDupBounded]]):
+    * (doc_id, __text, carry...) → (doc_id, carry..., sh: ARRAY<BIGINT>,
+    * mh0..mh{k-1}, band, bkey). Map-only — no measure, no re-spread, no
+    * shuffle, no aggregation — so a streaming frame can run it. The
+    * signature half is [[signatures]]; band `b`'s key is
+    * `concat_ws("_", mh[b·rows .. b·rows+rows−1])`. Docs with empty
+    * shingle sets get NULL slots; concat_ws skips NULLs so their band key
+    * is "" — filtered here (they can never verify, and one giant
+    * ""-bucket of short docs would be O(m²) candidates). */
+  private[graft] def bandedSignatures(
+      src: DataFrame,
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int,
+      shingler: Column => Column,
+      carry: Seq[String] = Nil): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val rows = numHashes / bands
+    val sigs = signatures(src, numHashes, shingleSize, shingler, carry)
     val bandKeys = array((0 until bands).map { b =>
       concat_ws("_", (0 until rows).map(r => col(s"mh${b * rows + r}")): _*)
     }: _*)
-    val out = sigs.select(
-      (col("doc_id") +: col("sh") +: (0 until numHashes).map(i => col(s"mh$i"))) :+
+    sigs.select(sigs.columns.map(col) :+
         posexplode(bandKeys).as(Seq("band", "bkey")): _*)
       .filter(length(col("bkey")) > 0)
-    (out, textBytes)
+  }
+
+  /** The signature half of [[bandedSignatures]]: (doc_id, __text,
+    * carry...) → (doc_id, carry..., sh, mh0..mh{k-1}) through the one
+    * MinHash kernel pair — compiled shingling (NgramShingles, or
+    * `shingler`) → per-element hashing (HashedSet) → compiled signature
+    * (MinHashSlotsFromHashes), all map-only. `sh` is the HASHED shingle
+    * set (hash60 per element — the derivation the signature uses):
+    * every downstream consumer verifies with intersect/size, which only
+    * need element identity, and the hashed carry is 2–4× smaller through
+    * every shuffle, sort and group buffer this family owns. */
+  private def signatures(src: DataFrame, numHashes: Int, shingleSize: Int,
+      shingler: Column => Column, carry: Seq[String]): DataFrame = {
+    graft.functions.GraftFunctions.register(src.sparkSession)
+    // compiled shingling (NgramShingles) — the interpreted HOF form
+    // dominated executor time (see the expression's scaladoc)
+    val mkSet: Column => Column =
+      if (shingler != null) shingler
+      else (graft.functions.GraftFunctions.wordShingles(_: Column, shingleSize))
+    val kept = col("doc_id") +: carry.map(col)
+    src.select(kept :+
+        graft.functions.GraftFunctions.hashedSet(mkSet(col("__text"))).as("sh"): _*)
+      .select(kept :+ col("sh") :+
+        graft.functions.GraftFunctions.minhashSlotsFromHashes(col("sh"), numHashes)
+          .as("__mh"): _*)
+      .select((kept :+ col("sh")) ++ (0 until numHashes).map(i =>
+        element_at(col("__mh"), i + 1).as(s"mh$i")): _*)
   }
 
   /** A built Bloom filter: the one-row bitmap frame plus the parameters
@@ -1200,7 +1202,7 @@ object Dedup {
 
   /** Per-doc DISTINCT `span`-token window sets: (doc_id, sh). Docs
     * shorter than `span` tokens get an empty set. Registers the compiled
-    * functions defensively (like [[bandedSignatures]]) so the span-stats
+    * functions defensively (like [[signatures]]) so the span-stats
     * entry points work on any session, not just ones built through
     * GraftSession. */
   private def spanSets(df: DataFrame, idCol: String, textCol: String,

@@ -59,7 +59,7 @@ object Vector extends QueryModule {
       fd AS (SELECT e.vec_id, c.cid,
         ${dkDecSum("CAST(e.embedding[c.j] AS DOUBLE) * c.comp")} AS dot
         FROM embeddings e, c1 c GROUP BY e.vec_id, c.cid),
-      fassign AS (SELECT vec_id, cid AS cell FROM (
+      fassign AS (SELECT vec_id, CAST(cid AS BIGINT) AS cell FROM (
         SELECT fd.vec_id, fd.cid,
           ROW_NUMBER() OVER (PARTITION BY fd.vec_id
             ORDER BY (n.n2 + cn.cn2 - 2.0 * fd.dot), fd.cid) AS rn

@@ -202,28 +202,6 @@ object StatefulOps {
   private[streaming] def sigEstimate(a: Seq[Long], b: Seq[Long]): Double =
     a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
 
-  /** Compiled MinHash signature + band-key explode for
-    * [[streamingNearDupBounded]] — the banding scheme of the batch q31
-    * operator. Output columns: bkey, carry..., mh. */
-  private def bandedSignatures(df: DataFrame, numHashes: Int, bands: Int,
-      shingleSize: Int, carry: Seq[String]): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    import org.apache.spark.sql.functions._
-    val sigs = df
-      .withColumn("__mh", graft.functions.GraftFunctions.minhashSlots(
-        graft.functions.GraftFunctions.wordShingles(col("text"), shingleSize),
-        numHashes))
-      .filter(col("__mh").isNotNull) // empty docs can never near-dup
-    val bandKeys = array((0 until bands).map { b =>
-      concat_ws("_", lit(b.toString) +:
-        (0 until rows).map(r => element_at(col("__mh"), b * rows + r + 1)): _*)
-    }: _*)
-    sigs.select(explode(bandKeys).as("bkey") +:
-      (carry.map(col) :+ col("__mh").as("mh")): _*)
-  }
-
   /** A banded doc heading into the bounded near-dup processor. */
   final case class BandedDoc(
       bkey: String, doc_id: Long, ts: java.sql.Timestamp, mh: Seq[Long])
@@ -289,8 +267,9 @@ object StatefulOps {
   }
 
   /** Streaming near-duplicate detection — the online form of the batch
-    * MinHash+LSH pipeline (q31): each arriving document's compiled
-    * signature is banded exactly like the batch operator, per-band-bucket
+    * MinHash+LSH pipeline (q31): each arriving document is signed and
+    * banded by the batch operator's own projection
+    * ([[graft.operators.Dedup.bandedSignatures]]), per-band-bucket
     * state remembers the FIRST doc seen in that bucket (with its full
     * signature), and later arrivals verify with the signature-agreement
     * estimator (matching slots / k). Emits a [[DupHit]] for each doc
@@ -323,18 +302,31 @@ object StatefulOps {
       bands: Int = 4,
       shingleSize: Int = 3,
       threshold: Double = 0.5): Dataset[DupHit] = {
-    implicit val bandedEnc: Encoder[BandedDoc] = Encoders.product[BandedDoc]
     implicit val hitEnc: Encoder[DupHit] = Encoders.product[DupHit]
     implicit val strEnc: Encoder[String] = Encoders.STRING
-
-    bandedSignatures(
-        docs.toDF("doc_id", "ts", "text").withWatermark("ts", watermarkDelay),
-        numHashes, bands, shingleSize, carry = Seq("doc_id", "ts"))
-      .as[BandedDoc]
+    bandedDocs(docs, watermarkDelay, numHashes, bands, shingleSize)
       .groupByKey(_.bkey)
       .transformWithState(new NearDupProcessor(threshold, horizonMs),
         eventTimeColumnName = "ts", outputMode = OutputMode.Append())
       .dropDuplicatesWithinWatermark("doc_id", "dup_of")
+  }
+
+  /** The rows [[streamingNearDupBounded]] groups on: the batch q31
+    * projection ([[graft.operators.Dedup.bandedSignatures]], which
+    * neither measures nor re-spreads) keyed `"<band>_<bkey>"` — the
+    * spelling every existing state checkpoint was written under. */
+  private[graft] def bandedDocs(
+      docs: Dataset[(Long, java.sql.Timestamp, String)],
+      watermarkDelay: String, numHashes: Int, bands: Int,
+      shingleSize: Int): Dataset[BandedDoc] = {
+    import org.apache.spark.sql.functions.{array, col, concat_ws}
+    graft.operators.Dedup.bandedSignatures(
+        docs.toDF("doc_id", "ts", "__text").withWatermark("ts", watermarkDelay),
+        numHashes, bands, shingleSize, shingler = null, carry = Seq("ts"))
+      .select(concat_ws("_", col("band").cast("string"), col("bkey")).as("bkey"),
+        col("doc_id"), col("ts"),
+        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("mh"))
+      .as[BandedDoc](Encoders.product[BandedDoc])
   }
 
   /** Streaming ANN: each micro-batch of query vectors (vec_id,

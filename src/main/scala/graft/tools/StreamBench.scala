@@ -7,6 +7,7 @@ import graft.streaming.EventWindows
   * (file-stream source → watermarked tumbling window agg → memory sink)
   * over the events table split into N files, and reports events/sec.
   * Usage: runMain graft.tools.StreamBench [sfDir] [nFiles] [filesPerTrigger]
+  * Cores follow `SPARK_GRAFT_CPUS` (default 4), like Verify and Bench.
   * The staging directory is deleted when the run ends.
   */
 object StreamBench {
@@ -14,7 +15,8 @@ object StreamBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val nFiles = if (args.length > 1) args(1).toInt else 16
     val perTrigger = if (args.length > 2) args(2).toInt else math.max(nFiles / 8, 1)
-    val spark = graft.core.GraftSession.local(32)
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     // stage input as nFiles parquet files (micro-batch feed); ts is cast
     // to TIMESTAMP_LTZ — Tables.events' ns->us conversion yields NTZ,

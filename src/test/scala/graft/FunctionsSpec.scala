@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, Jwt, MinHashAggregator}
+import graft.functions.{GraftFunctions, Jwt}
 
 class FunctionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -361,29 +361,6 @@ class FunctionsSpec extends SparkTestBase {
       assert(!odd.queryExecution.optimizedPlan.toString.contains("graft_hash64"),
         s"suffix '$sfx' must not rewrite")
     }
-  }
-
-  test("MinHashAggregator matches a two-pass elementwise-min computation") {
-    val hashes = Seq(11L, 22L, 33L, 44L, 55L)
-    val agg = new MinHashAggregator(8)
-    val viaAgg = hashes.foldLeft(agg.zero)((b, h) => agg.reduce(b, h)).toSeq
-
-    val df = hashes.toDF("h")
-    val sig = df.select(udaf(new MinHashAggregator(8)).apply(col("h")).as("sig"))
-      .as[Seq[Long]].head()
-    assert(sig === viaAgg)
-
-    // NULL hashes are skipped, not a crash (parity with the explode+min form)
-    val withNull = spark.sql(
-      "SELECT * FROM VALUES (11L),(22L),(33L),(44L),(55L),(CAST(NULL AS BIGINT)) AS t(h)")
-    val sigN = withNull.select(udaf(new MinHashAggregator(8)).apply(col("h")).as("sig"))
-      .as[Seq[Long]].head()
-    assert(sigN === viaAgg)
-
-    // permutation invariance + merge associativity
-    val shuffled = scala.util.Random.shuffle(hashes)
-    val viaAgg2 = shuffled.foldLeft(agg.zero)((b, h) => agg.reduce(b, h)).toSeq
-    assert(viaAgg2 === viaAgg)
   }
 
   test("CountMinAggregator: never under-estimates, exact on collision-free tokens, merge = sum") {

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.streaming._
 
 class StreamingSpec extends SparkTestBase {
@@ -173,6 +174,51 @@ class StreamingSpec extends SparkTestBase {
           "new representative owns the bucket after eviction (exactly one pair)")
       } finally q.stop()
     }
+  }
+
+  test("streaming near-dup groups on the batch projection's band keys (one band scheme)") {
+    implicit val ctx = spark.sqlContext
+    GraftFunctions.register(spark)
+    val fox = "the quick brown fox jumps over the lazy dog"
+    val docs = Seq(
+      (1L, ts(0), fox),
+      (2L, ts(0), fox + " today"), // planted near-dup of 1
+      (3L, ts(0), fox), // exact dup of 1
+      (4L, ts(0), "completely different text with other tokens here now"),
+      (5L, ts(0), "two words")) // no 3-shingle: empty set, no band rows
+    val ms = MemoryStream[(Long, Timestamp, String)]
+    val q = StatefulOps.bandedDocs(ms.toDS(), "10 seconds", numHashes = 8,
+        bands = 4, shingleSize = 3)
+      .toDF().writeStream.format("memory").queryName("banded_docs")
+      .outputMode("append").start()
+    try {
+      ms.addData(docs: _*)
+      q.processAllAvailable()
+      val streamed = spark.table("banded_docs").select("bkey", "doc_id", "mh")
+        .as[(String, Long, Seq[Long])].collect().toSet
+      val batch = graft.operators.Dedup.bandedSignatures(
+          docs.toDF("doc_id", "ts", "__text"), numHashes = 8, bands = 4,
+          shingleSize = 3, shingler = null)
+        .select(concat_ws("_", col("band").cast("string"), col("bkey")),
+          col("doc_id"), array((0 until 8).map(i => col(s"mh$i")): _*))
+        .as[(String, Long, Seq[Long])].collect().toSet
+      assert(streamed === batch)
+      // the key spelling existing state checkpoints hold: "<band>_<slots>"
+      // over the string-set signature, two slots per band
+      val sigs = docs.toDF("doc_id", "ts", "text")
+        .select(col("doc_id"), GraftFunctions.minhashSlots(
+          GraftFunctions.wordShingles(col("text"), 3), 8))
+        .as[(Long, Option[Seq[Long]])].collect()
+      val keyed = sigs.toSeq.flatMap {
+        case (id, Some(mh)) =>
+          (0 until 4).map(b => ((b +: mh.slice(2 * b, 2 * b + 2)).mkString("_"), id, mh))
+        case (_, None) => Nil
+      }.toSet
+      assert(streamed === keyed)
+      assert(streamed.size === 16 && !streamed.exists(_._2 == 5L))
+      assert(streamed.filter(_._2 == 1L).map(_._1) ===
+        streamed.filter(_._2 == 3L).map(_._1), "an exact dup shares every bucket")
+    } finally q.stop()
   }
 
   test("streaming corpus ingestion dedups by content fingerprint (U6 x T5)") {
