@@ -32,14 +32,10 @@ object SparkEntry {
       .orderBy("w_start", "event_type")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. Every build
-    * runs with the engine's function registry installed (idempotent) so
-    * query code can use the compiled graft_* expressions directly. */
+  /** One entry per implemented operator from SURVEY.md §2; a build runs
+    * on any session (the graft_* Column wrappers need no registration). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    qs.map(q => q.name -> { (s: SparkSession, d: String) =>
-      graft.functions.GraftFunctions.register(s)
-      q.build(s, d)
-    }).toMap
+    qs.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -59,8 +59,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // the compiled graft_* expressions are part of the engine surface —
-    // any session from this factory can use them (idempotent)
+    // the one in-process registration: graft_* SQL names and
+    // CompileHashRewrite (the Column wrappers need neither)
     graft.functions.GraftFunctions.register(s)
     s
   }

@@ -39,8 +39,7 @@ object VectorFunctions {
     * INSIDE the loop (exact, so values equal the HOF form bit-for-bit)
     * rather than through a per-row `cast(array<double>)` that would
     * materialize a fresh array per side per row (see FixedPointDot's
-    * scaladoc for the at-scale cost). Requires GraftFunctions.register
-    * on the session (operators do this). */
+    * scaladoc for the at-scale cost). */
   def dotExact(a: Column, b: Column): Column =
     GraftFunctions.fixedDot(a, b).cast("double") / Scale
 

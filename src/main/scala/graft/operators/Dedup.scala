@@ -101,12 +101,10 @@ object Dedup {
     * pass per row). NO explode, NO 60-column grouped sum, NO shuffle —
     * the signature stage is map-only at any corpus size. */
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      bits: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+      bits: Int = 16): DataFrame =
     df.select(col(idCol).as("doc_id"),
       graft.functions.GraftFunctions.simhashBits(
         array_distinct(tokens(col(textCol))), bits).as("simhash"))
-  }
 
   /** Connected components over an undirected near-duplicate pair list
     * ((a, b) rows): returns (id, cluster) where cluster = the minimum id
@@ -861,7 +859,6 @@ object Dedup {
     * every shuffle, sort and group buffer this family owns. */
   private def signatures(src: DataFrame, numHashes: Int, shingleSize: Int,
       shingler: Column => Column, carry: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(src.sparkSession)
     // compiled shingling (NgramShingles) — the interpreted HOF form
     // dominated executor time (see the expression's scaladoc)
     val mkSet: Column => Column =
@@ -916,7 +913,6 @@ object Dedup {
     Seq("n_probe_hits", "bloom_flagged", "__graft_bm").foreach(c =>
       require(!batch.columns.contains(c),
         s"bloomFlags writes column '$c' — rename the batch's own '$c' first"))
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val hits = (0 until sketch.numHashes).map { j =>
       val pos = pmod(graft.functions.GraftFunctions.hash64c(
         fingerprint.cast("string"), sketch.seedBase + j), lit(sketch.mBits.toLong))
@@ -1201,27 +1197,20 @@ object Dedup {
   // ---- duplicated-span statistics (ExactSubstr family, q86's operator) ----
 
   /** Per-doc DISTINCT `span`-token window sets: (doc_id, sh). Docs
-    * shorter than `span` tokens get an empty set. Registers the compiled
-    * functions defensively (like [[signatures]]) so the span-stats
-    * entry points work on any session, not just ones built through
-    * GraftSession. */
+    * shorter than `span` tokens get an empty set. */
   private def spanSets(df: DataFrame, idCol: String, textCol: String,
-      span: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
+      span: Int): DataFrame =
     df.select(col(idCol).as("doc_id"),
       graft.functions.GraftFunctions.wordShingles(col(textCol), span).as("sh"))
-  }
 
   /** Exploded hashed spans: (doc_id, h). Spans hash to int64 so every
     * downstream shuffle carries narrow (hash, id) pairs, never span
     * text. Per-doc spans are distinct, so COUNT(*) per hash = document
     * frequency. */
-  private def spanHashes(sets: DataFrame, seed: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(sets.sparkSession)
+  private def spanHashes(sets: DataFrame, seed: Int): DataFrame =
     sets.select(col("doc_id"), explode(col("sh")).as("s"))
       .select(col("doc_id"),
         graft.functions.GraftFunctions.hash64c(col("s"), seed).as("h"))
-  }
 
   /** ExactSubstr-style duplicated-span statistics (q86's operator form —
     * the query delegates here, so the DuckDB oracle gates this code):

@@ -17,14 +17,11 @@ object Sampling {
 
   /** The seeded 60-bit md5 hash every sampling op derives from — ONE
     * definition (the same value as graft_hash64 and the oracle's dkHash)
-    * so bucket assignment and rank order can never drift apart. Built
-    * from plain `functions._` (conv/substring/md5) so the Column works on
-    * ANY session — no function registration required; sampling is one
-    * hash per row, where the compiled expression's advantage is
-    * immaterial. */
+    * so bucket assignment and rank order can never drift apart: the
+    * portable composition of [[graft.functions.TextFunctions.hash64]]
+    * over the id's string form. */
   def seededHash(id: Column, seed: Int): Column =
-    conv(substring(md5(concat(id.cast("string"), lit(s":$seed"))), 1, 15),
-      16, 10).cast("long")
+    graft.functions.TextFunctions.hash64(id.cast("string"), seed)
 
   /** Uniform bucket in [0, buckets) from the id's seeded md5-hash.
     * Modulo bias is ≤ buckets/2^60 — negligible. */

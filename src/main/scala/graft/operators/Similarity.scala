@@ -27,10 +27,8 @@ object Similarity {
   /** Corpus with exact squared norms attached (computed once). Schema
     * contract shared by every operator here: columns `vec_id` and
     * `embedding` (rename upstream if needed). */
-  def withNorm2(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+  def withNorm2(emb: DataFrame): DataFrame =
     emb.withColumn("n2", norm2Exact(col("embedding")))
-  }
 
   /** The ONE broadcast-top-k shape shared by [[bruteForceTopK]] and
     * [[hardNegatives]]: join the corpus to the broadcast query frame `q`
@@ -140,7 +138,6 @@ object Similarity {
     * Returns the upper triangle: (i, j, cov), i ≤ j, 0-based. */
   def covarianceMatrix(emb: DataFrame, dim: Int): DataFrame = {
     require(dim >= 1)
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val raw = when(size(col("embedding")) === dim,
         col("embedding").cast("array<double>"))
       .otherwise(raise_error(concat(

@@ -25,10 +25,10 @@ import graft.functions.expressions.Md5Hash60
   * spec-tested; Md5Hash60's scaladoc documents why the bytes-path Long is
   * identical.
   *
-  * Installed two ways, mirroring function registration:
+  * Installed two ways, with the SQL function names:
   *  - config-injected: `spark.sql.extensions=graft.core.GraftExtensions`
-  *  - in-process: [[graft.functions.GraftFunctions.register]] (via
-  *    `spark.experimental.extraOptimizations`, idempotent).
+  *  - in-process: [[graft.core.GraftSession.local]] calls
+  *    [[graft.functions.GraftFunctions.register]] (extraOptimizations).
   */
 object CompileHashRewrite extends Rule[LogicalPlan] {
 

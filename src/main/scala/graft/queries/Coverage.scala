@@ -49,7 +49,6 @@ object Coverage extends QueryModule {
           CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hamming
         FROM cand c JOIN sig sa ON sa.doc_id = c.a JOIN sig sb ON sb.doc_id = c.b)
       SELECT a, b, hamming FROM p WHERE hamming <= 2 ORDER BY a, b""")) { (s, d) =>
-      GraftFunctions.register(s)
       val sig = Dedup.simhashSignatures(Tables.documents(s, d), "doc_id", "text", 60)
       // Carry the 8-byte signature through the chunk explode instead of
       // joining it back per side (the old shape re-scanned documents

@@ -69,7 +69,6 @@ object Text extends QueryModule {
     * shape spec, which asserts no single-partition exchange survives. */
   def sqlPackingSharded(s: org.apache.spark.sql.SparkSession, d: String,
       shards: Int = 8, budget: Int = 256): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val w = Window.partitionBy("shard").orderBy("doc_id", "chunk_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(s, d)
@@ -345,7 +344,6 @@ object Text extends QueryModule {
         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
         COUNT(*) AS n
       FROM h GROUP BY 1, 2 ORDER BY lang, split""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("split",
           graft.operators.Sampling.assignSplit(col("doc_id"), seed = 42))
@@ -627,7 +625,6 @@ object Text extends QueryModule {
       FROM t, b
       WHERE len(list_intersect(t.sh, b.bsh)) >= 2
       ORDER BY t.doc_id, b.bench_id""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = Tables.documents(s, d).select(col("doc_id"),
         graft.functions.GraftFunctions.wordShingles(col("text"), 3).as("sh"))
       val bench = sh.filter(col("doc_id") < 5)
@@ -782,7 +779,6 @@ object Text extends QueryModule {
       SELECT doc_id, top_bigram_frac, dup_token_frac, symbol_ratio,
         (top_bigram_frac <= 0.2 AND dup_token_frac <= 0.5 AND symbol_ratio <= 0.3) AS keep
       FROM base ORDER BY doc_id""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val sp = Tables.documents(s, d).select(col("doc_id"), col("text"))
       // the repetition stat depends on ONE row, so it is computed
       // row-local (compiled ShingleRepetition) — the earlier
@@ -835,7 +831,6 @@ object Text extends QueryModule {
         CAST(COUNT(*) - COUNT(DISTINCT fp) AS DOUBLE) / COUNT(*) AS dup_rate,
         CAST(COUNT(*) AS DOUBLE) / (SELECT total FROM tot) AS doc_share
       FROM t GROUP BY source, lang ORDER BY source, lang""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val st = tokenStatsOf(col("text"))
       val t = Tables.documents(s, d).select(col("source"), col("lang"),
         md5(col("text")).as("fp"), st.getField("n_tokens").cast("long").as("nt"))
@@ -1118,7 +1113,6 @@ object Text extends QueryModule {
           AS novelty
       FROM sh s LEFT JOIN st ON st.doc_id = s.doc_id
       ORDER BY s.doc_id""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val sh = Tables.documents(s, d).select(col("doc_id"),
         graft.functions.GraftFunctions.wordShingles(col("text"), 8).as("sh"))
       val ex = sh.select(col("doc_id"), explode(col("sh")).as("sp"))
@@ -1295,7 +1289,6 @@ object Text extends QueryModule {
           AS dup_span_frac
       FROM sh s LEFT JOIN flag f ON f.doc_id = s.doc_id
       ORDER BY s.doc_id""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       // delegates to the operator so the oracle gates Dedup.dupSpanStats
       // (and, via the staged≡inline spec, dupSpanStatsStaged too)
       graft.operators.Dedup.dupSpanStats(
@@ -1350,7 +1343,6 @@ object Text extends QueryModule {
         FROM (SELECT string_split(text, ' ') AS tk FROM documents))
       SELECT bigram, COUNT(*) AS n FROM bg GROUP BY bigram
       ORDER BY n DESC, bigram LIMIT 50""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(explode(graft.functions.GraftFunctions.wordShinglesAll(
           col("text"), 2)).as("bigram"))
@@ -1436,7 +1428,6 @@ object Text extends QueryModule {
              / CAST((SELECT tot_raw FROM tot) AS DOUBLE)) END AS importance
       FROM f JOIN raw ON raw.h = f.h LEFT JOIN tgt ON tgt.h = f.h
       GROUP BY f.doc_id ORDER BY f.doc_id""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       graft.operators.Sampling.importanceWeights(
           Tables.documents(s, d), "doc_id",
           graft.functions.GraftFunctions.wordShinglesAll(col("text"), 2),
@@ -1470,7 +1461,6 @@ object Text extends QueryModule {
           * CAST(CAST(SUM(n_docs) OVER () AS BIGINT) AS DOUBLE)
           / CAST(n_docs AS DOUBLE) AS upsample_factor
       FROM w ORDER BY source""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val st = tokenStatsOf(col("text"))
       val base = Tables.documents(s, d)
         .select(col("source"), st.getField("n_tokens").cast("long").as("nt"))
@@ -1516,7 +1506,6 @@ object Text extends QueryModule {
       // no measurable length) sorts before bucket 0 in Spark's ASC
       // default but after the last bucket in DuckDB's — unpinned, every
       // cum_docs/cum_doc_frac cell shifts (caught by NULLCHECK)
-      graft.functions.GraftFunctions.register(s)
       val st = tokenStatsOf(col("text"))
       // floor(nt/10) is exact for integer nt: the correctly-rounded
       // double quotient is ≥0.1 away from the next integer unless nt is
@@ -1558,7 +1547,6 @@ object Text extends QueryModule {
           AS frac_of_lang,
         (lang = 'en') <> (pred = 'en') AS mismatch
       FROM p GROUP BY lang, pred ORDER BY lang, pred""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("pred", langId(col("text")))
         .groupBy("lang", "pred").agg(count(lit(1)).as("n"))
@@ -1949,7 +1937,6 @@ object Text extends QueryModule {
         CAST(COUNT(CASE WHEN score > 0 THEN 1 END) AS DOUBLE) / COUNT(*) AS pass_share,
         CAST(SUM(score) AS BIGINT) AS sum_score
       FROM ds GROUP BY source ORDER BY source""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val sc = docs
         .select(col("doc_id"), col("source"),

@@ -352,7 +352,6 @@ object Vector extends QueryModule {
       FROM dots d JOIN ex ON ex.qid = d.qid AND ex.vid = d.vid
         JOIN n2 a ON a.vec_id = d.qid JOIN n2 b ON b.vec_id = d.vid
       ORDER BY d.qid, d.vid""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val e = Similarity.withNorm2(Tables.embeddings(s, d))
       val dbl = col("embedding").cast("array<double>")
       // try_divide: a zero vector has max|x| = 0 — its quantization scale
@@ -655,7 +654,6 @@ object Vector extends QueryModule {
       // multiplies the corpus by its dimensionality (64×) through the
       // exchange; the array aggregate map-side-combines and shuffles one
       // 64-long buffer per (label × partition). Same longs, same math.
-      graft.functions.GraftFunctions.register(s)
       Tables.embeddings(s, d)
         .groupBy("label")
         .agg(graft.functions.GraftFunctions.fpVecSum(col("embedding")).as("s"),
@@ -773,7 +771,6 @@ object Vector extends QueryModule {
       SELECT label, CAST(SUM(df * df) AS BIGINT) AS dist2_fp,
         CAST(SUM(df * df) AS DOUBLE) / 1099511627776.0 AS drift
       FROM d GROUP BY label ORDER BY label""")) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       def gridCentroids(df: org.apache.spark.sql.DataFrame) = df
         .groupBy("label")
         .agg(graft.functions.GraftFunctions.fpVecSum(col("embedding")).as("s"),
@@ -884,7 +881,6 @@ object Vector extends QueryModule {
         CAST(COALESCE(h.n, 0) AS DOUBLE) / 10.0 AS recall_trunc
       FROM qs q LEFT JOIN hits h ON h.qid = q.qid ORDER BY q.qid""")) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val base = Tables.embeddings(s, d)
         .withColumn("n2", norm2Exact(col("embedding")))
         .withColumn("t_emb", slice(col("embedding"), 1, 16))

@@ -146,12 +146,12 @@ object Layout {
     * ATOMIC REPLACE: manifests are also REWRITTEN in place on live
     * tables (the signature append accumulates text_bytes, the upsert
     * rewrites its manifest after every batch), and readers are
-    * lock-free by contract — so the update is write-temp +
-    * rename-overwrite, never create-truncate: a truncate window would
-    * show concurrent readers an empty or partial file, and a crash
-    * mid-write would leave one behind. The temp is dot-prefixed —
-    * invisible to the file index and to [[readManifest]] — so a crash
-    * before the rename leaves the old manifest intact. */
+    * lock-free by contract — so the update is write-temp + rename over
+    * the old file, never create-truncate: a truncate window would show
+    * concurrent readers an empty or partial file, and a crash mid-write
+    * would leave one behind. The temp is dot-prefixed — invisible to
+    * the file index and to [[readManifest]] — so a crash before the
+    * rename leaves the old manifest intact. */
   def writeManifest(spark: org.apache.spark.sql.SparkSession, dir: String,
       m: Manifest): Unit = {
     def sorted(kv: Map[String, Any]) = new java.util.TreeMap[String, Any](kv.asJava)
@@ -170,17 +170,29 @@ object Layout {
     try {
       val out = fs.create(tmp, true)
       try out.write(content.getBytes("UTF-8")) finally out.close()
-      try
-        org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // scheme has a FileSystem but no AbstractFileSystem binding
-        // (e.g. a bare gs:// connector): fall back to delete+rename —
-        // not one atomic op, but the full-content temp still closes the
-        // truncation window a create-truncate would have
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"manifest rename failed: $tmp -> $p")
+      def failed(from: org.apache.hadoop.fs.Path) =
+        new java.io.IOException(s"manifest rename failed: $from -> $p")
+      fs match {
+        case local: org.apache.hadoop.fs.LocalFileSystem =>
+          // one POSIX rename, so readers never find no manifest (the
+          // FileContext OVERWRITE rename deletes first; Hive's local FS
+          // refuses to rename onto a file); the checksum file follows
+          val raw = local.getRawFileSystem
+          if (!raw.rename(tmp, p)) throw failed(tmp)
+          val (tmpCrc, crc) = (local.getChecksumFile(tmp), local.getChecksumFile(p))
+          if (!raw.exists(tmpCrc)) raw.delete(crc, false)
+          else if (!raw.rename(tmpCrc, crc)) throw failed(tmpCrc)
+        case _ => try
+          org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
+            .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+          // scheme has a FileSystem but no AbstractFileSystem binding
+          // (e.g. a bare gs:// connector): fall back to delete+rename —
+          // not one atomic op, but the full-content temp still closes the
+          // truncation window a create-truncate would have
+          fs.delete(p, false)
+          if (!fs.rename(tmp, p)) throw failed(tmp)
+        }
       }
       renamed = true
     } finally if (!renamed) fs.delete(tmp, false)
@@ -188,17 +200,26 @@ object Layout {
 
   /** `dir`'s manifest; None when it has none. A manifest that does not
     * parse as one whole JSON object — empty, truncated, garbled — is
-    * refused with a restage message, never read in part. */
+    * refused with a restage message, never read in part. A read that
+    * meets [[writeManifest]]'s new bytes with the old checksum file is
+    * repeated; a checksum still wrong on the 5th read fails as before. */
   def readManifest(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[Manifest] = {
     val p = new org.apache.hadoop.fs.Path(dir, ManifestName)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(attempt: Int): String =
+      try {
+        val in = fs.open(p)
+        try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+        finally in.close()
+      } catch {
+        case _: org.apache.hadoop.fs.ChecksumException if attempt < 5 =>
+          Thread.sleep(attempt)
+          read(attempt + 1)
+      }
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
+      val txt = read(1)
       def unreadable(why: String) = new IllegalStateException(
         s"$ManifestName in $dir is unreadable ($why) — restage the table")
       val node = try json.readTree(txt)

@@ -86,8 +86,8 @@ object Sinks {
             // store untouched, and the write job never scans files it is
             // deleting. (A transactional table format would subsume this;
             // out of scope with parquet-only deps.)
-            (graft.operators.Dedup.keepLatest(cur.unionByName(latest), keys, order)
-              .localCheckpoint(true), "dynamic")
+            (graft.Pins.pin(graft.operators.Dedup.keepLatest(
+              cur.unionByName(latest), keys, order), "upsertParquet.merge"), "dynamic")
           } else if (dataDirs.nonEmpty) {
             // Manifest absent: a crash between the first data commit and
             // its manifest, or a store written before manifests. The
@@ -109,9 +109,8 @@ object Sinks {
             }
             val cur = spark.read.parquet(path).drop("part_bucket")
             val all = cur.unionByName(latest.drop("part_bucket"))
-            (graft.operators.Dedup.keepLatest(all, keys, order)
-              .withColumn("part_bucket", bucket)
-              .localCheckpoint(true), "static")
+            (graft.Pins.pin(graft.operators.Dedup.keepLatest(all, keys, order)
+              .withColumn("part_bucket", bucket), "upsertParquet.adopt"), "static")
           } else (latest, "static")
         merged.write.mode("overwrite")
           // per-write option — scoping this via session conf would leak
@@ -125,6 +124,9 @@ object Sinks {
           graft.sources.Layout.Manifest(UpsertKind, UpsertVersion,
             params = Map("buckets" -> buckets.toLong),
             schemas = Map(graft.sources.Layout.Root -> merged.schema.toDDL)))
+        // the merge is pinned unless the batch is the whole store; nothing
+        // reads it again, so its blocks go now, not at the context cleaner
+        if (merged ne latest) graft.Pins.release(merged)
       }
       .trigger(Trigger.AvailableNow())
       .start()

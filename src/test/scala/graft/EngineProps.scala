@@ -120,7 +120,6 @@ object EngineProps extends Properties("graft") {
     forAll(unicodeDocGen) { s =>
       val spk = spark; import spk.implicits._
       import graft.functions.{GraftFunctions, TextFunctions}
-      GraftFunctions.register(spk)
       val r = Seq(s).toDF("t").select(
         TextFunctions.shingles(col("t"), 3).as("wh"),
         GraftFunctions.wordShingles(col("t"), 3).as("wc"),
@@ -134,7 +133,6 @@ object EngineProps extends Properties("graft") {
     forAll(unicodeDocGen, Gen.choose(0, 99)) { (s, seed) =>
       val spk = spark; import spk.implicits._
       import graft.functions.{GraftFunctions, TextFunctions}
-      GraftFunctions.register(spk)
       val (cg, hof) = Seq(s).toDF("v").select(
         GraftFunctions.hash64c(col("v"), seed).as("cg"),
         TextFunctions.hash64(col("v"), seed).as("hof"))
@@ -148,8 +146,7 @@ object EngineProps extends Properties("graft") {
   property("compiled TokenStats == the five HOF stats on random unicode docs") =
     forAll(unicodeDocGen) { s =>
       val spk = spark; import spk.implicits._
-      import graft.functions.{GraftFunctions, TextFunctions}
-      GraftFunctions.register(spk)
+      import graft.functions.TextFunctions
       val st = TextFunctions.tokenStatsOf(col("t"))
       val toks = split(col("t"), " ")
       val r = Seq(s).toDF("t").select(
@@ -175,7 +172,6 @@ object EngineProps extends Properties("graft") {
     forAll(tokenArrGen, Gen.choose(1, 8)) { (toks, k) =>
       val spk = spark; import spk.implicits._
       import graft.functions.{GraftFunctions, TextFunctions}
-      GraftFunctions.register(spk)
       val df = Seq(Tuple1(toks)).toDF("set")
       val cg = df.select(GraftFunctions.minhashSlots(col("set"), k))
         .as[Option[Seq[Long]]].head()
@@ -191,7 +187,6 @@ object EngineProps extends Properties("graft") {
     forAll(unicodeDocGen, Gen.choose(1, 16)) { (s, bits) =>
       val spk = spark; import spk.implicits._
       import graft.functions.{GraftFunctions, TextFunctions}
-      GraftFunctions.register(spk)
       val (cg, hof) = Seq(s).toDF("t").select(
         GraftFunctions.simhashBits(
           array_distinct(split(col("t"), " ")), bits).as("cg"),
@@ -238,7 +233,6 @@ object EngineProps extends Properties("graft") {
     forAll(unicodeDocGen, Gen.choose(1, 3)) { (s, n) =>
       val spk = spark; import spk.implicits._
       import graft.functions.GraftFunctions
-      GraftFunctions.register(spk)
       val r = Seq(s).toDF("t")
         .select(GraftFunctions.shingleRep(col("t"), n)).head().getStruct(0)
       val toks = s.split(" ", -1).toSeq

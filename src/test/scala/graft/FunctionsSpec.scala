@@ -17,7 +17,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("codegen FixedPointDot equals the HOF formulation on random vectors") {
-    GraftFunctions.register(spark)
     import graft.functions.VectorFunctions
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(50)((
@@ -51,7 +50,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("FixedPointDot diverges from HOF form on unequal lengths / null elements (documented)") {
-    GraftFunctions.register(spark)
     import graft.functions.VectorFunctions
     // unequal lengths: HOF zip_with pads with NULL -> aggregate poisons to
     // NULL; FixedPointDot truncates to the shorter side and returns a number
@@ -72,7 +70,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("cosineFrom: zero-norm side is NULL, never NaN/Inf/ANSI-throw (VECCHECK contract)") {
-    GraftFunctions.register(spark)
     import graft.functions.VectorFunctions._
     val zero = Array.fill(4)(0.0f)
     val tiny = Array.fill(4)(1e-12f) // floors to 0 at the fixed-point scale
@@ -116,7 +113,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("compiled NgramShingles matches the HOF shingles/charNgrams exactly") {
-    GraftFunctions.register(spark)
     import graft.functions.TextFunctions
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -181,8 +177,53 @@ class FunctionsSpec extends SparkTestBase {
     assert(r.getAs[Long]("s") === sOnly)
   }
 
-  test("compiled Md5Hash60 equals the conv(md5) built-in composition and java MD5") {
+  test("SQL width/seed literals outside the Int range are refused, not wrapped") {
     GraftFunctions.register(spark)
+    def refusal(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" / ")
+    }
+    // 2^32 would hash with seed 0, and 2^32 + 4 shingle with n = 4
+    val seed = refusal("SELECT graft_hash64('a', 4294967296)")
+    assert(seed.contains("must be integral, got: 4294967296"), seed)
+    val width = refusal("SELECT graft_word_shingles('a b c d e', 4294967300)")
+    assert(width.contains("must be integral, got: 4294967300"), width)
+    // a BIGINT literal inside the Int range still folds
+    assert(spark.sql("SELECT graft_hash64('a', CAST(7 AS BIGINT))").as[Long].head() ===
+      spark.sql("SELECT graft_hash64('a', 7)").as[Long].head())
+  }
+
+  test("every Column wrapper evaluates the same on a session with no graft names") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    val bare = spark.newSession()
+    assert(!bare.catalog.functionExists("graft_hamming"))
+    def values(s: SparkSession): (Seq[Row], Row) = {
+      val df = s.createDataFrame(Seq(
+        (0L, 7L, "the quick brown fox jumps over the fox", Seq(1.5, -2.0)),
+        (1L, -1L, "a b a b a", Seq(0.25, 4.0)),
+        (2L, 2L, "", Seq(0.0, 1.0)))).toDF("a", "b", "text", "vec")
+      val set = split(col("text"), " ")
+      val rows = df.select(col("a"),
+        GraftFunctions.hamming(col("a"), col("b")),
+        GraftFunctions.fixedDot(col("vec"), col("vec")),
+        GraftFunctions.wordShingles(col("text"), 2),
+        GraftFunctions.charNgrams(col("text"), 3),
+        GraftFunctions.wordShinglesAll(col("text"), 2),
+        GraftFunctions.hash64c(col("text"), 7),
+        GraftFunctions.minhashSlots(set, 4),
+        GraftFunctions.hashedSet(set),
+        GraftFunctions.minhashSlotsFromHashes(GraftFunctions.hashedSet(set), 4),
+        GraftFunctions.simhashBits(set, 16),
+        GraftFunctions.tokenStats(col("text"), 2, Seq("the"), Seq("fox")),
+        GraftFunctions.rollingFp(col("text")),
+        GraftFunctions.shingleRep(col("text"), 2)).collect().sortBy(_.getLong(0)).toSeq
+      (rows, df.agg(GraftFunctions.fpVecSum(col("vec"))).head())
+    }
+    assert(values(bare) === values(spark))
+  }
+
+  test("compiled Md5Hash60 equals the conv(md5) built-in composition and java MD5") {
     import graft.functions.TextFunctions
     val vals = Seq("", "a", "the quick", "mix:3", "日本語", "x" * 500)
     for (seed <- Seq(0, 7)) {
@@ -201,7 +242,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("compiled TokenStats matches the five HOF stats exactly") {
-    GraftFunctions.register(spark)
     import graft.functions.TextFunctions
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -234,7 +274,6 @@ class FunctionsSpec extends SparkTestBase {
     // the list round-trip is lossless: an EMPTY stopword list must not
     // become Seq("") (which counted double-space empty tokens as
     // stopwords), and a comma-bearing stopword must survive intact
-    graft.functions.GraftFunctions.register(spark)
     val emptyList = Seq("x  y").toDF("t")
       .select(graft.functions.GraftFunctions
         .tokenStats(col("t"), 3, Seq.empty, Seq.empty).getField("n_stop"))
@@ -261,7 +300,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("compiled RollingFingerprint matches the HOF fold exactly") {
-    GraftFunctions.register(spark)
     import graft.functions.TextFunctions
     val texts = Seq(
       "the quick brown fox", "fox brown quick the", // order sensitivity
@@ -292,7 +330,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("FixedPointVectorSum matches the explode formulation across partitionings") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.tabulate(40)(i => (i % 3, Array.fill(8)(rnd.nextDouble() - 0.5)))
     def viaAgg(parts: Int): Map[Int, Seq[Long]] =

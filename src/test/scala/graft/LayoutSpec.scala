@@ -17,6 +17,32 @@ class LayoutSpec extends SparkTestBase {
       List("graft/sources/Layout.scala"))
   }
 
+  test("a manifest read racing its rewrite finds the whole manifest: never none, never a checksum error") {
+    val dir = tmpDir("manifest-race")
+    def write(i: Int): Unit = Layout.writeManifest(spark, dir,
+      Layout.Manifest("spec", 1, measures = Map("n" -> i.toLong)))
+    write(0)
+    val rewrites = 300
+    @volatile var writeError: Option[Throwable] = None
+    val writer = new Thread(() => (1 to rewrites).foreach(write))
+    writer.setUncaughtExceptionHandler((_, e) => writeError = Some(e))
+    writer.start()
+    // failed reads by exception class
+    val failed = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    var reads = 0
+    while (writer.isAlive) {
+      reads += 1
+      try {
+        val n = Layout.readManifest(spark, dir).get.measures("n")
+        assert(n >= 0 && n <= rewrites)
+      } catch { case e: Exception => failed(e.getClass.getSimpleName) += 1 }
+    }
+    writer.join()
+    assert(writeError.isEmpty)
+    assert(failed.isEmpty, s"${failed.values.sum} of $reads reads failed")
+    assert(Layout.readManifest(spark, dir).get.measures("n") === rewrites)
+  }
+
   test("a source table rewritten in place gets a new snapshot key and is restaged") {
     val src = tmpDir("snapshot-src") + "/t.parquet"
     // a fresh salt, so no snapshot left by an earlier run is reused

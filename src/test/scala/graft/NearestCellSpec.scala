@@ -23,10 +23,8 @@ class NearestCellSpec extends SparkTestBase {
 
   private val embT = ArrayType(DoubleType)
 
-  private def frame(schema: StructType, rows: Seq[Row]): DataFrame = {
-    GraftFunctions.register(spark)
+  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
-  }
 
   /** (rid, cell) from the kernel and from the cross-join reference. */
   private def both(e: DataFrame, cents: DataFrame)

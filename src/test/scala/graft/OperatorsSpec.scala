@@ -301,7 +301,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("tokenBudgetSample: budget-prefix monotone, repartition-stable, per-stratum") {
     import graft.operators.Sampling
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     val df = (1L to 200L).map(i =>
       (i, if (i % 2 == 0) "a" else "b", 10L + rnd.nextInt(90)))
@@ -445,7 +444,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("matchedSample equalizes side counts per bucket; one-sided buckets drop") {
     import graft.operators.Sampling
-    graft.functions.GraftFunctions.register(spark)
     // bucket 0: 5 pos / 3 neg -> 3+3; bucket 1: 2 pos / 4 neg -> 2+2;
     // bucket 2: pos only -> dropped entirely
     val df = ((1L to 5L).map((_, true, 0L)) ++ (6L to 8L).map((_, false, 0L)) ++
@@ -478,7 +476,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("hash sampling is repartition-stable and splits are exhaustive") {
     import graft.operators.Sampling
-    graft.functions.GraftFunctions.register(spark)
     val ids = (1L to 1000L).toDF("id")
     val s1 = Sampling.sampleHash(ids, "id", pct = 20, seed = 7)
       .as[Long].collect().toSet

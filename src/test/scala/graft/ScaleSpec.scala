@@ -392,7 +392,6 @@ class ScaleSpec extends SparkTestBase {
   test("span novelty (q115) matches the join-form reference values") {
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.register(spark)
     // the pre-r16 formulation (own-join + per-doc count), verbatim
     val sh = spark.read.parquet(s"$d/documents.parquet").select(col("doc_id"),
       graft.functions.GraftFunctions.wordShingles(col("text"), 8).as("sh"))

@@ -43,6 +43,11 @@ class SessionConfSpec extends AnyFunSuite {
       List("graft/core/GraftSession.scala"))
   }
 
+  test("GraftSession.local is the only caller of GraftFunctions.register in src/main") {
+    assert(sourcesContaining("graft", "GraftFunctions.register(") ===
+      List("graft/core/GraftSession.scala"))
+  }
+
   test("only tools and mains read the environment") {
     val libraries = Seq("core", "operators", "queries", "sources",
       "streaming", "functions", "multimodal", "plans")

@@ -178,7 +178,6 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming near-dup groups on the batch projection's band keys (one band scheme)") {
     implicit val ctx = spark.sqlContext
-    GraftFunctions.register(spark)
     val fox = "the quick brown fox jumps over the lazy dog"
     val docs = Seq(
       (1L, ts(0), fox),
@@ -458,6 +457,40 @@ class StreamingSpec extends SparkTestBase {
     // overwrite mode is a per-write option — the session conf must be
     // untouched (a session-global set would leak into concurrent queries)
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") === "STATIC")
+  }
+
+  test("upsertParquet releases the merge it pins once each batch is written") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerUnpersistRDD}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    // RDDs that stored blocks during the run, and RDDs unpersisted
+    val stored, released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val info = e.blockUpdatedInfo
+        if (info.storageLevel.isValid) info.blockId.asRDDId.foreach(b => stored.add(b.rddId))
+      }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = released.add(e.rddId)
+    }
+    val dir = tmpDir("upsert-pins")
+    val ms = newEvents()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 4).foreach { i =>
+        ms.addData(Event(i, ts(i), 7, "a", 1.0), Event(10 + i, ts(i), 8, "b", 2.0))
+        Sinks.upsertParquet(ms.toDF(), s"$dir/store", s"$dir/ckpt",
+          keys = Seq("user_id"), seqCol = "ts").awaitTermination(60000)
+      }
+      // the first batch creates the store; the next three pin their merges
+      eventually(timeout(Span(20, Seconds))) {
+        assert(stored.size >= 3)
+        assert((stored.asScala -- released.asScala).isEmpty,
+          s"pinned RDDs never unpersisted: ${stored.asScala -- released.asScala}")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$dir/store").select("user_id", "event_id")
+      .as[(Long, Long)].collect().toMap === Map(7L -> 4L, 8L -> 14L))
   }
 
   test("upsertParquet adopts legacy marker-less stores; marker rewritten per write") {
